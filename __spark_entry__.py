@@ -6663,12 +6663,8 @@ def _q_v_multi_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry a spec version (user_id % 3 -> v1 / v2 / v9-unregistered) and
     each row validates against ITS version's compiled plan — v1 accepts
     all four roles, v2 narrows the enum and adds a text length floor,
-    v9 rows flag UnknownSpecVersion. "union" strategy: one plan branch
-    per version, each fully whole-stage-codegen'd (measured faster at
-    sf0.1 than the single-scan "case" strategy, whose combined
-    projection exceeds janino's 64 KB method limit with 2+ specs and
-    falls back to interpreted — 0.94 s vs 1.28 s); all specs compile
-    once on the driver."""
+    v9 rows flag UnknownSpecVersion. One plan branch per version, each
+    fully whole-stage-codegen'd; all specs compile once on the driver."""
     from json_schema_rs_spark.operators.runner import multi_spec_validate
     tx = _transcripts_from_events(_t(spark, sf_dir, "events")) \
         .withColumn(
@@ -6681,7 +6677,7 @@ def _q_v_multi_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("spec_id") == "v3", F.lit("v9"))
         .otherwise(F.col("spec_id")))
     rep = multi_spec_validate(tx, {"v1": _MSV_V1, "v2": _MSV_V2},
-                              spec_col="spec_id", strategy="union")
+                              spec_col="spec_id")
     return rep.violations
 
 

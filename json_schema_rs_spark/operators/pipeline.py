@@ -3,20 +3,19 @@ for, with the minimum possible data movement:
 
 - **branch 1 (zero shuffle):** row-local spec checks + vocabulary
   (referential) checks, one codegen'd ``select`` over the scan;
-- **branch 2 (one skinny shuffle):** ALL cross-row checks — duplicate
-  ``(conv_id, turn_idx)``, gap-free ordering, monotonic timestamps — from
-  a single window pass over just ``(conv_id, turn_idx, ts)``. One
-  exchange hashed on ``conv_id``, one sort by ``turn_idx``; the duplicate
-  count uses a ``RANGE CURRENT ROW`` frame so it shares that exact
-  exchange+sort (no second shuffle on the composite key).
+- **branch 2 (one skinny shuffle):** ALL cross-row checks from one
+  window pass over the key and the columns they read: one exchange
+  hashed on ``conv_id``, one sort by ``turn_idx``. Its checks are the
+  records of the check table :data:`.table_checks._CHECKS`, the same
+  records the à-la-carte operators there (``turn_gap_violations`` and
+  friends) run one or two at a time.
 
-Compared to unioning the à-la-carte operators (:mod:`.table_checks`),
-this replaces 5 table scans + 3 full-key shuffles with 2 pruned scans +
-1 three-column shuffle. At 10^12 turns the shuffle carries ~20 bytes/row
-instead of the whole row — the difference between a network-bound job
-and a scan-bound one.
+Compared to unioning the à-la-carte operators, this replaces 5 table
+scans + 3 full-key shuffles with 2 pruned scans + 1 skinny shuffle. At
+10^12 turns the shuffle carries ~20 bytes/row instead of the whole row —
+the difference between a network-bound job and a scan-bound one.
 
-Contract note: the fused duplicate-key check emits one violation per
+Contract note: the fused ``DuplicateKey`` record emits one violation per
 *row* of a duplicated key (each offending row is addressable), while
 :func:`.table_checks.uniqueness_violations` emits one per *key*; counts
 differ on tables with duplicates, messages are identical.
@@ -26,22 +25,13 @@ from __future__ import annotations
 
 from typing import Optional, Sequence, Union
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.exprs import explode_rows
-from ..plans.compiler import VIOLATION_ARRAY_DDL
 from ..plans.spec import SchemaNode
 from .runner import ValidationEngine
-
-
-def _viol(cond, path: str, code: str, message) -> "F.Column":
-    return F.when(
-        cond,
-        F.array(F.struct(F.lit(path).alias("instance_path"),
-                         F.lit(code).alias("code"),
-                         message.alias("message"))),
-    ).otherwise(F.array().cast(VIOLATION_ARRAY_DDL))
+from .table_checks import _cross_row, _viol
 
 
 def transcript_pipeline(
@@ -61,12 +51,12 @@ def transcript_pipeline(
     violation rows ``(conv_id, turn_idx, instance_path, code, message)``.
 
     ``role_protocol=(allowed_transitions, allowed_first)`` and
-    ``tool_pairing=True`` fuse the conversation-protocol checks
-    (:func:`.table_checks.role_transition_violations` /
-    :func:`.table_checks.tool_pairing_violations`, byte-identical output)
-    into the SAME skinny window pass — the lag/lead expressions share
-    branch 2's single exchange+sort, so the protocol costs no extra
-    shuffle, only ``role``/``tool`` riding in the skinny projection."""
+    ``tool_pairing=True`` add the conversation-protocol records (those of
+    :func:`.table_checks.role_transition_violations` /
+    :func:`.table_checks.tool_pairing_violations`) to the SAME skinny
+    window pass — the lag/lead values share branch 2's single
+    exchange+sort, so the protocol costs no extra shuffle, only
+    ``role``/``tool`` riding in the skinny projection."""
     engine = ValidationEngine(spec, key_cols=(conv_col, idx_col))
     plan = engine.plan_for(df)
     prepared = plan.prepare(df)   # combinator validity helpers (if any)
@@ -115,100 +105,16 @@ def cross_row_violations(
 ) -> DataFrame:
     """Branch 2 of the fused pipeline, reusable on its own (e.g. the
     resumable ledger runner applies it per conv_id-hashed bucket chunk,
-    where every conversation is whole by construction): ALL cross-row
-    checks — duplicate key, gap-free, monotonic ts, and optionally the
-    conversation protocol — from one skinny window pass. One exchange on
-    ``conv_col`` + one sort by ``idx_col``; RANGE CURRENT ROW counts
-    idx-peers on that same sorted run (no shuffle on the composite key).
-    """
-    cols = [conv_col, idx_col] + ([ts_col] if ts_col else [])
-    if role_protocol or tool_pairing:
-        cols.append(role_col)
-    if tool_pairing:
-        cols.append(tool_col)
-    skinny = df.select(*cols)
-    w = Window.partitionBy(conv_col).orderBy(idx_col)
-    wpeers = w.rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    pos = F.row_number().over(w) - 1
-    # peers up to current idx minus rows strictly before this idx = count
-    # of rows sharing this idx; >1 => duplicate key
-    peers_thru = F.count(F.lit(1)).over(wpeers)
-    peers_at_idx = peers_thru - F.count(F.lit(1)).over(
-        w.rangeBetween(Window.unboundedPreceding, -1))
-    idx_path = "/" + idx_col
-    key_desc = f"{conv_col}, {idx_col}"
-    checks = [
-        _viol(peers_at_idx > 1, "", "DuplicateKey",
-              F.concat(F.lit(f"root: duplicate key ({key_desc}) has "),
-                       peers_at_idx.cast("string"),
-                       F.lit(" occurrences, expected 1"))),
-        _viol(F.col(idx_col) != pos, idx_path, "TurnGap",
-              F.concat(F.lit(f"{idx_path}: turn index "),
-                       F.col(idx_col).cast("string"),
-                       F.lit(" at position "), pos.cast("string"),
-                       F.lit(" breaks gap-free ordering"))),
-    ]
+    where every conversation is whole by construction): the duplicate-key
+    and gap-free records, plus the monotonic-ts and protocol records the
+    options select, in one skinny window pass."""
+    codes = ["DuplicateKey", "TurnGap"]
     if ts_col:
-        prev = F.lag(ts_col).over(w)
-        ts_path = "/" + ts_col
-        checks.append(_viol(
-            prev.isNotNull() & (F.col(ts_col) < prev),
-            ts_path, "NonMonotonicTs",
-            F.concat(F.lit(f"{ts_path}: timestamp "),
-                     F.col(ts_col).cast("string"),
-                     F.lit(" is before previous turn's "),
-                     prev.cast("string"))))
+        codes.append("NonMonotonicTs")
     if role_protocol:
-        # byte-identical to table_checks.role_transition_violations, on
-        # the shared window (see that function for the semantics notes)
-        from .table_checks import _SEP
-        allowed_transitions, allowed_first = role_protocol
-        prev_role = F.lag(role_col).over(w)
-        pair = F.concat_ws(_SEP, prev_role, F.col(role_col))
-        pairs = [f"{a}{_SEP}{b}" for a, b in allowed_transitions]
-        role_path = "/" + role_col
-        first_list = ", ".join(f'"{r}"' for r in allowed_first)
-        checks.append(_viol(
-            F.col(role_col).isNotNull() & prev_role.isNull()
-            & ~F.col(role_col).isin(list(allowed_first)),
-            role_path, "BadFirstRole",
-            F.concat(F.lit(f"{role_path}: conversation must start with "
-                           f'one of ({first_list}), got "'),
-                     F.col(role_col), F.lit('"'))))
-        checks.append(_viol(
-            F.col(role_col).isNotNull() & prev_role.isNotNull()
-            & ~pair.isin(pairs),
-            role_path, "BadRoleTransition",
-            F.concat(F.lit(f'{role_path}: transition "'), prev_role,
-                     F.lit('" -> "'), F.col(role_col),
-                     F.lit('" not allowed'))))
+        codes += ["BadFirstRole", "BadRoleTransition"]
     if tool_pairing:
-        # byte-identical to table_checks.tool_pairing_violations
-        prev_role = F.lag(role_col).over(w)
-        prev_tool = F.lag(tool_col).over(w)
-        next_role = F.lead(role_col).over(w)
-        role_path, tool_path = "/" + role_col, "/" + tool_col
-        checks.append(_viol(
-            (F.col(role_col) == "tool") & (
-                prev_role.isNull() | (prev_role != "assistant")
-                | prev_tool.isNull()),
-            role_path, "ToolResultWithoutCall",
-            F.concat(
-                F.lit(f'{role_path}: "tool" turn not preceded by a '
-                      '"assistant" turn calling a tool (previous role: '),
-                F.coalesce(F.concat(F.lit('"'), prev_role, F.lit('"')),
-                           F.lit("none")),
-                F.lit(")"))))
-        checks.append(_viol(
-            (F.col(role_col) == "assistant") & F.col(tool_col).isNotNull()
-            & (next_role.isNull() | (next_role != "tool")),
-            tool_path, "ToolCallWithoutResult",
-            F.concat(F.lit(f'{tool_path}: tool call "'), F.col(tool_col),
-                     F.lit('" not followed by a "tool" turn'))))
-    return (explode_rows(
-                skinny.select(conv_col, idx_col,
-                              F.concat(*checks).alias("_v"))
-                      .filter(F.size("_v") > 0),
-                [conv_col, idx_col], F.col("_v"), "v")
-              .select(conv_col, idx_col, "v.instance_path", "v.code",
-                      "v.message"))
+        codes += ["ToolResultWithoutCall", "ToolCallWithoutResult"]
+    return _cross_row(df, codes, dict(conv=conv_col, idx=idx_col, ts=ts_col,
+                                      role=role_col, tool=tool_col),
+                      role_protocol)

@@ -145,7 +145,6 @@ def multi_spec_validate(
     key_cols: Sequence[str] = ("conv_id", "turn_idx"),
     strict: bool = False,
     extensions: bool = False,
-    strategy: str = "union",
 ) -> ValidationReport:
     """Per-row spec routing: each row is validated against the spec
     version its ``spec_col`` value names. The multi-tenant / schema-
@@ -153,26 +152,13 @@ def multi_spec_validate(
     all on one spec version; the alternative (one run per version over
     the full table) re-scans the corpus N times.
 
-    Every spec compiles ONCE on the driver. Two physical strategies,
-    both shuffle-free:
-
-    - ``"union"`` (default): one scan->filter->codegen branch per
-      version, unioned. Each branch's ``spec_col = v`` filter is pushed
-      into its scan, so when ``spec_col`` is a partition/cluster column
-      of the table (the at-scale layout — version-partitioned ingest),
-      each branch prunes to ITS files and every row is scanned and
-      evaluated exactly once. On unpartitioned input the source is
-      scanned once per version — prefer ``"case"`` there.
-    - ``"case"``: a single scan computing every version's violation
-      array and a CASE on ``spec_col`` selecting the row's one. One
-      pass over the data; every row pays every spec's expression cost.
-      Caveat: the combined projection concentrates every spec's
-      message-building expressions into ONE generated method, which
-      exceeds janino's 64 KB limit at 2+ non-trivial specs — Spark then
-      falls back to interpreted projection (correct, logged as an ERROR
-      by CodeGenerator, measured ~35% slower than union's per-branch
-      codegen at sf0.1). Prefer ``"union"`` unless re-scanning the
-      source dominates (e.g. an expensive non-reusable derivation).
+    Every spec compiles ONCE on the driver. The plan is shuffle-free: one
+    scan->filter->codegen branch per version, unioned. Each branch's
+    ``spec_col = v`` filter is pushed into its scan, so when ``spec_col``
+    is a partition/cluster column of the table (the at-scale layout —
+    version-partitioned ingest), each branch prunes to ITS files and
+    every row is scanned and evaluated exactly once. On unpartitioned
+    input the source is scanned once per version.
 
     Rows with a NULL or unregistered ``spec_col`` are flagged with a
     single root ``UnknownSpecVersion`` violation rather than silently
@@ -180,8 +166,6 @@ def multi_spec_validate(
     """
     if not specs:
         raise ValueError("multi_spec_validate needs at least one spec")
-    if strategy not in ("union", "case"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     engines = {
         sid: ValidationEngine(spec, key_cols=key_cols, strict=strict,
                               extensions=extensions)
@@ -196,28 +180,13 @@ def multi_spec_validate(
             F.lit('" is not registered'),
         ).alias("message")))
 
-    if strategy == "union":
-        branches = [
-            eng.attach_violations(df.filter(F.col(spec_col) == F.lit(sid)))
-            for sid, eng in engines.items()]
-        unknown = df.filter(
-            F.col(spec_col).isNull() | ~F.col(spec_col).isin(sids)
-        ).withColumn("violations", unknown_arr)
-        flagged = reduce(lambda a, b: a.unionByName(b),
-                         branches + [unknown])
-    else:
-        out = df
-        tmp_cols = []
-        for i, (sid, eng) in enumerate(engines.items()):
-            c = f"_msv_{i}"
-            out = eng.attach_violations(out, out_col=c)
-            tmp_cols.append((sid, c))
-        case = unknown_arr
-        for sid, c in reversed(tmp_cols):
-            case = F.when(F.col(spec_col) == F.lit(sid), F.col(c)) \
-                .otherwise(case)
-        flagged = out.withColumn("violations", case) \
-            .drop(*[c for _, c in tmp_cols])
+    branches = [
+        eng.attach_violations(df.filter(F.col(spec_col) == F.lit(sid)))
+        for sid, eng in engines.items()]
+    unknown = df.filter(
+        F.col(spec_col).isNull() | ~F.col(spec_col).isin(sids)
+    ).withColumn("violations", unknown_arr)
+    flagged = reduce(lambda a, b: a.unionByName(b), branches + [unknown])
 
     flagged = flagged.withColumn("valid", F.size("violations") == 0)
     keys = [k for k in key_cols if k in df.columns]

@@ -418,15 +418,24 @@ def _load_ledger(sk: DataFrame, side: str, max_rows: int) -> dict:
     return out
 
 
+def _ledger_compression(d: dict) -> float:
+    """A ledger row's persisted compression; v1 rows (no compression)
+    get the historical default 200, so old ledgers stay readable."""
+    comp = d.get("compression")
+    if comp is None:
+        return 200.0
+    if not comp > 0:
+        raise ValueError(f"sketch ledger row for column {d.get('column')!r} "
+                         f"has non-positive compression {comp}")
+    return comp
+
+
 def _digest_from_ledger_row(r) -> "TDigest":
     """Rebuild a t-digest from a ledger row AT ITS PERSISTED compression
-    (v2 rows); v1 rows (no compression column) fall back to the
-    historical default of 200 — the pre-fix behavior, kept so old
-    ledgers stay readable."""
+    (see :func:`_ledger_compression`)."""
     d = r.asDict() if hasattr(r, "asDict") else dict(r)
-    comp = d.get("compression") or 200.0
     return TDigest.from_arrays(d["means"], d["weights"], d["mn"], d["mx"],
-                               comp)
+                               _ledger_compression(d))
 
 
 def drift_from_sketches(sk_a: DataFrame, sk_b: DataFrame, *,
@@ -489,8 +498,7 @@ def merge_sketch_snapshots(sk: DataFrame, *, snapshot_id: str,
         by_col.setdefault(r["column"], []).append(r)
     out_rows = []
     for c in sorted(by_col):
-        comps = {(r.asDict().get("compression") or 200.0)
-                 for r in by_col[c]}
+        comps = {_ledger_compression(r.asDict()) for r in by_col[c]}
         if len(comps) > 1:
             raise ValueError(
                 f"column {c!r}: mixed sketch compressions {sorted(comps)} "

@@ -14,17 +14,28 @@ Scale notes (north_rule: partitioning/shuffle/skew handled explicitly):
   the classic salted-agg pattern.
 - **referential** broadcasts the (small) vocabulary and anti-joins —
   no shuffle of the fact table at all.
-- **gap-free ordering** windows by conversation; one shuffle on conv_id.
-  AQE handles moderate skew; a conversation's turns must fit one task,
-  which holds by construction for transcripts (conversations are bounded).
+- **cross-row checks** (gap-free ordering, monotonic ts, role DFA, tool
+  pairing, per-row duplicate key) are records of one check table,
+  :data:`_CHECKS`, run by :func:`_cross_row` over a single window by
+  conversation: one skinny shuffle on conv_id. The à-la-carte functions
+  here and the fused pipeline's branch 2 pick records from it. AQE
+  handles moderate skew; a conversation's turns must fit one task, which
+  holds by construction for transcripts (conversations are bounded).
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence, Union
+import operator
+from functools import reduce
+from string import Formatter
+from types import SimpleNamespace
+from typing import Callable, NamedTuple, Optional, Sequence, Union
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.exprs import explode_rows
+from ..plans.compiler import VIOLATION_ARRAY_DDL
 
 _VCOLS = ["instance_path", "code", "message"]
 
@@ -376,189 +387,174 @@ def role_pattern_stats(
     return out.withColumn("rank", F.row_number().over(w2))
 
 
-def turn_gap_violations(
-    df: DataFrame,
-    *,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-) -> DataFrame:
-    """Gap-free 0..n-1 ordering per conversation — the reference validates
-    array items at positions 0..n (validator/mod.rs:398-407): a
-    conversation IS the array of its turns. A turn violates when its index
-    differs from its dense position (catches holes, duplicates, and
-    offset starts)."""
-    w = Window.partitionBy(conv_col).orderBy(idx_col)
-    pos = F.row_number().over(w) - 1
-    flagged = df.select(conv_col, idx_col).withColumn("_pos", pos) \
-                .filter(F.col(idx_col) != F.col("_pos"))
-    path = "/" + idx_col
-    return flagged.select(
-        F.col(conv_col),
-        F.col(idx_col),
-        F.lit(path).alias("instance_path"),
-        F.lit("TurnGap").alias("code"),
-        F.concat(
-            F.lit(f"{path}: turn index "),
-            F.col(idx_col).cast("string"),
-            F.lit(" at position "),
-            F.col("_pos").cast("string"),
-            F.lit(" breaks gap-free ordering"),
-        ).alias("message"),
-    )
+# --- Cross-row checks: one table of records, one window pass
+
+# Cannot appear in a role vocabulary: joins a (prev, cur) pair into one
+# string so the transition test is a codegen'd literal ``isin`` — no join.
+_SEP = "\x00"
+
+# Values a check may read off the shared (conv, idx) window, by name;
+# ``n`` maps column roles to the caller's column names.
+_WINDOW_VALUES = {
+    # dense 0-based position of the turn in its conversation
+    "pos": lambda n, w: F.row_number().over(w) - 1,
+    # rows sharing this idx: rows up to it minus rows before it. RANGE
+    # frames on the same sorted run: no shuffle on the composite key
+    "peers": lambda n, w: (
+        F.count(F.lit(1)).over(w.rangeBetween(Window.unboundedPreceding, 0))
+        - F.count(F.lit(1)).over(
+            w.rangeBetween(Window.unboundedPreceding, -1))),
+    "prev_ts": lambda n, w: F.lag(n["ts"]).over(w),
+    "prev_role": lambda n, w: F.lag(n["role"]).over(w),
+    "prev_tool": lambda n, w: F.lag(n["tool"]).over(w),
+    "next_role": lambda n, w: F.lead(n["role"]).over(w),
+}
 
 
-def monotonic_ts_violations(
-    df: DataFrame,
-    *,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    ts_col: str = "ts",
-) -> DataFrame:
+class _Check(NamedTuple):
+    """One cross-row check over the namespace :func:`_cross_row` builds."""
+    code: str
+    path: Optional[str]   # column role the violation points at; None: row
+    reads: tuple          # column roles read besides the key
+    uses: tuple           # _WINDOW_VALUES read
+    cond: Callable[[SimpleNamespace], Column]
+    # text after "<path>: "; {name} renders a namespace entry, {name!q}
+    # renders it quoted, or none when NULL
+    message: str
+
+
+# In output order within a row. NULL roles are "absent" and never break
+# the role DFA (the row-local ``required`` check owns missing roles); a
+# turn after a NULL role validates under the first-turn rule.
+_CHECKS = (
+    _Check("DuplicateKey", None, (), ("peers",), lambda c: c.peers > 1,
+           "duplicate key ({key}) has {peers} occurrences, expected 1"),
+    _Check("TurnGap", "idx", (), ("pos",), lambda c: c.idx != c.pos,
+           "turn index {idx} at position {pos} breaks gap-free ordering"),
+    _Check("NonMonotonicTs", "ts", ("ts",), ("prev_ts",),
+           lambda c: c.prev_ts.isNotNull() & (c.ts < c.prev_ts),
+           "timestamp {ts} is before previous turn's {prev_ts}"),
+    _Check("BadFirstRole", "role", ("role",), ("prev_role",),
+           lambda c: (c.role.isNotNull() & c.prev_role.isNull()
+                      & ~c.role.isin(c.first)),
+           'conversation must start with one of ({first_list}), '
+           'got "{role}"'),
+    _Check("BadRoleTransition", "role", ("role",), ("prev_role",),
+           lambda c: (c.role.isNotNull() & c.prev_role.isNotNull()
+                      & ~F.concat_ws(_SEP, c.prev_role, c.role)
+                      .isin(c.pairs)),
+           'transition "{prev_role}" -> "{role}" not allowed'),
+    _Check("ToolResultWithoutCall", "role", ("role", "tool"),
+           ("prev_role", "prev_tool"),
+           lambda c: (c.role == "tool") & (
+               c.prev_role.isNull() | (c.prev_role != "assistant")
+               | c.prev_tool.isNull()),
+           '"tool" turn not preceded by a "assistant" '
+           "turn calling a tool (previous role: {prev_role!q})"),
+    _Check("ToolCallWithoutResult", "tool", ("role", "tool"),
+           ("next_role",),
+           lambda c: ((c.role == "assistant") & c.tool.isNotNull()
+                      & (c.next_role.isNull() | (c.next_role != "tool"))),
+           'tool call "{tool}" not followed by a "tool" turn'),
+)
+
+
+def _render(prefix: str, template: str, c: SimpleNamespace) -> Column:
+    parts = [F.lit(prefix)]
+    for text, name, _, conversion in Formatter().parse(template):
+        if text:
+            parts.append(F.lit(text))
+        if conversion == "q":
+            parts.append(F.coalesce(F.concat(
+                F.lit('"'), getattr(c, name), F.lit('"')), F.lit("none")))
+        elif name:
+            parts.append(getattr(c, name).cast("string"))
+    return F.concat(*parts)
+
+
+def _viol(cond: Column, path: str, code: str, message: Column) -> Column:
+    """A one-violation array when ``cond`` holds, else an empty one."""
+    return F.when(
+        cond,
+        F.array(F.struct(F.lit(path).alias("instance_path"),
+                         F.lit(code).alias("code"),
+                         message.alias("message"))),
+    ).otherwise(F.array().cast(VIOLATION_ARRAY_DDL))
+
+
+def _cross_row(df: DataFrame, codes: Sequence[str], names: dict,
+               protocol: Optional[tuple] = None) -> DataFrame:
+    """The :data:`_CHECKS` records named in ``codes`` as violation rows
+    ``(conv, idx, instance_path, code, message)``, from a skinny
+    projection, ONE exchange on conv and one sort by idx. ``names`` maps
+    column roles to column names; ``protocol`` is ``(allowed_transitions,
+    allowed_first)``. Conditions filter before any message is built."""
+    checks = [ch for ch in _CHECKS if ch.code in codes]
+    conv, idx = names["conv"], names["idx"]
+    reads = [names[r] for r in ("ts", "role", "tool")
+             if any(r in ch.reads for ch in checks)]
+    uses = [u for u in _WINDOW_VALUES if any(u in ch.uses for ch in checks)]
+    w = Window.partitionBy(conv).orderBy(idx)
+    windowed = df.select(conv, idx, *reads, *(
+        _WINDOW_VALUES[u](names, w).alias("_" + u) for u in uses))
+    c = SimpleNamespace(**{r: F.col(n) for r, n in names.items() if n},
+                        **{u: F.col("_" + u) for u in uses},
+                        key=F.lit(f"{conv}, {idx}"))
+    if protocol:
+        transitions, first = protocol
+        c.first = list(first)
+        c.first_list = F.lit(", ".join(f'"{r}"' for r in first))
+        c.pairs = [f"{a}{_SEP}{b}" for a, b in transitions]
+    conds, arrays = [ch.cond(c) for ch in checks], []
+    for ch, cond in zip(checks, conds):
+        path = "/" + names[ch.path] if ch.path else ""
+        arrays.append(_viol(cond, path, ch.code, _render(
+            f"{path or 'root'}: ", ch.message, c)))
+    return (explode_rows(windowed.filter(reduce(operator.or_, conds)),
+                         [conv, idx], F.concat(*arrays), "v")
+            .select(conv, idx, "v.instance_path", "v.code", "v.message"))
+
+
+def turn_gap_violations(df: DataFrame, *, conv_col: str = "conv_id",
+                        idx_col: str = "turn_idx") -> DataFrame:
+    """Gap-free 0..n-1 ordering per conversation — a conversation IS the
+    array of its turns (validator/mod.rs:398-407). A turn violates when its
+    index differs from its dense position (holes, duplicates, offsets)."""
+    return _cross_row(df, ("TurnGap",), dict(conv=conv_col, idx=idx_col))
+
+
+def monotonic_ts_violations(df: DataFrame, *, conv_col: str = "conv_id",
+                            idx_col: str = "turn_idx",
+                            ts_col: str = "ts") -> DataFrame:
     """Timestamps must be non-decreasing in turn order within each
     conversation (engine extension for the transcript shape)."""
-    w = Window.partitionBy(conv_col).orderBy(idx_col)
-    prev = F.lag(ts_col).over(w)
-    flagged = df.select(conv_col, idx_col, ts_col).withColumn("_prev", prev) \
-                .filter(F.col("_prev").isNotNull() & (F.col(ts_col) < F.col("_prev")))
-    path = "/" + ts_col
-    return flagged.select(
-        F.col(conv_col),
-        F.col(idx_col),
-        F.lit(path).alias("instance_path"),
-        F.lit("NonMonotonicTs").alias("code"),
-        F.concat(
-            F.lit(f"{path}: timestamp "),
-            F.col(ts_col).cast("string"),
-            F.lit(" is before previous turn's "),
-            F.col("_prev").cast("string"),
-        ).alias("message"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Conversation-protocol checks (engine extensions for the transcript shape)
-# ---------------------------------------------------------------------------
-
-# The separator cannot appear in a role vocabulary; used to turn a
-# (prev, cur) pair into one string so the transition test compiles to a
-# codegen'd ``isin`` literal set — no join, no Python.
-_SEP = "\x00"
+    return _cross_row(df, ("NonMonotonicTs",),
+                      dict(conv=conv_col, idx=idx_col, ts=ts_col))
 
 
 def role_transition_violations(
-    df: DataFrame,
-    allowed_transitions: Sequence[tuple],
-    allowed_first: Sequence[str],
-    *,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    role_col: str = "role",
+    df: DataFrame, allowed_transitions: Sequence[tuple],
+    allowed_first: Sequence[str], *, conv_col: str = "conv_id",
+    idx_col: str = "turn_idx", role_col: str = "role",
 ) -> DataFrame:
-    """Per-conversation role-protocol DFA check — ``enum`` membership
-    (validator/mod.rs:96-108) lifted from a value to a *transition*:
-    the allowed set ranges over (previous role, role) pairs instead of
-    single values. First turns (no previous) validate against
-    ``allowed_first``.
-
-    Scale shape: one skinny shuffle on ``conv_col`` for the lag window
-    (shared with the other per-conversation checks when fused); the
-    transition test is a literal ``isin`` over at most |roles|^2 strings —
-    whole-stage codegen, no join. NULL roles are "absent" and never
-    violate here (the row-local ``required`` check owns missing roles).
-    """
-    w = Window.partitionBy(conv_col).orderBy(idx_col)
-    base = df.select(conv_col, idx_col, role_col) \
-             .withColumn("_prev", F.lag(role_col).over(w))
-    pair = F.concat_ws(_SEP, F.col("_prev"), F.col(role_col))
-    allowed_pairs = [f"{a}{_SEP}{b}" for a, b in allowed_transitions]
-    first_bad = (F.col("_prev").isNull()
-                 & ~F.col(role_col).isin(list(allowed_first)))
-    trans_bad = F.col("_prev").isNotNull() & ~pair.isin(allowed_pairs)
-    path = "/" + role_col
-    first_list = ", ".join(f'"{r}"' for r in allowed_first)
-    flagged = base.filter(F.col(role_col).isNotNull()
-                          & (first_bad | trans_bad))
-    return flagged.select(
-        F.col(conv_col),
-        F.col(idx_col),
-        F.lit(path).alias("instance_path"),
-        F.when(F.col("_prev").isNull(), F.lit("BadFirstRole"))
-         .otherwise(F.lit("BadRoleTransition")).alias("code"),
-        F.when(
-            F.col("_prev").isNull(),
-            F.concat(F.lit(f'{path}: conversation must start with one of '
-                           f'({first_list}), got "'),
-                     F.col(role_col), F.lit('"')),
-        ).otherwise(
-            F.concat(F.lit(f'{path}: transition "'), F.col("_prev"),
-                     F.lit('" -> "'), F.col(role_col),
-                     F.lit('" not allowed')),
-        ).alias("message"),
-    )
+    """Role-protocol DFA — ``enum`` membership (validator/mod.rs:96-108)
+    lifted from a value to a (previous role, role) *transition*. First
+    turns (no previous) validate against ``allowed_first``."""
+    return _cross_row(df, ("BadFirstRole", "BadRoleTransition"),
+                      dict(conv=conv_col, idx=idx_col, role=role_col),
+                      (allowed_transitions, allowed_first))
 
 
-def tool_pairing_violations(
-    df: DataFrame,
-    *,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    role_col: str = "role",
-    tool_col: str = "tool",
-    tool_role: str = "tool",
-    caller_role: str = "assistant",
-) -> DataFrame:
-    """Tool-call/result pairing for agent transcripts:
-
-    - ``ToolResultWithoutCall``: a ``tool_role`` turn whose previous turn
-      is absent, is not ``caller_role``, or names no tool.
-    - ``ToolCallWithoutResult``: a ``caller_role`` turn that names a tool
-      but whose next turn is not a ``tool_role`` turn.
-
-    Both directions read from ONE lag/lead window over the same
-    (conv, idx) ordering — a single skinny shuffle on ``conv_col``,
-    whole-stage codegen after it.
-    """
-    w = Window.partitionBy(conv_col).orderBy(idx_col)
-    prev_role, prev_tool = F.lag(role_col).over(w), F.lag(tool_col).over(w)
-    next_role = F.lead(role_col).over(w)
-    base = df.select(conv_col, idx_col, role_col, tool_col) \
-             .withColumn("_prev_role", prev_role) \
-             .withColumn("_prev_tool", prev_tool) \
-             .withColumn("_next_role", next_role)
-    orphan_result = (F.col(role_col) == tool_role) & (
-        F.col("_prev_role").isNull()
-        | (F.col("_prev_role") != caller_role)
-        | F.col("_prev_tool").isNull()
-    )
-    orphan_call = (
-        (F.col(role_col) == caller_role)
-        & F.col(tool_col).isNotNull()
-        & (F.col("_next_role").isNull() | (F.col("_next_role") != tool_role))
-    )
-    flagged = base.filter(orphan_result | orphan_call)
-    return flagged.select(
-        F.col(conv_col),
-        F.col(idx_col),
-        F.when(orphan_result, F.lit("/" + role_col))
-         .otherwise(F.lit("/" + tool_col)).alias("instance_path"),
-        F.when(orphan_result, F.lit("ToolResultWithoutCall"))
-         .otherwise(F.lit("ToolCallWithoutResult")).alias("code"),
-        F.when(
-            orphan_result,
-            F.concat(
-                F.lit(f'/{role_col}: "{tool_role}" turn not preceded by a '
-                      f'"{caller_role}" turn calling a tool (previous role: '),
-                F.coalesce(F.concat(F.lit('"'), F.col("_prev_role"),
-                                    F.lit('"')), F.lit("none")),
-                F.lit(")"),
-            ),
-        ).otherwise(
-            F.concat(
-                F.lit(f'/{tool_col}: tool call "'), F.col(tool_col),
-                F.lit(f'" not followed by a "{tool_role}" turn'),
-            ),
-        ).alias("message"),
-    )
+def tool_pairing_violations(df: DataFrame, *, conv_col: str = "conv_id",
+                            idx_col: str = "turn_idx", role_col: str = "role",
+                            tool_col: str = "tool") -> DataFrame:
+    """Tool-call/result pairing for agent transcripts: a ``"tool"`` turn
+    must follow an ``"assistant"`` turn that names a tool
+    (``ToolResultWithoutCall``), and an ``"assistant"`` turn that names a
+    tool must be followed by a ``"tool"`` turn (``ToolCallWithoutResult``)."""
+    return _cross_row(df, ("ToolResultWithoutCall", "ToolCallWithoutResult"),
+                      dict(conv=conv_col, idx=idx_col, role=role_col,
+                           tool=tool_col))
 
 
 def conversation_bounds_violations(

@@ -2,10 +2,10 @@
 monotonic-timestamp, and (optionally) role-protocol / tool-pairing
 validation over a live transcript stream.
 
-The batch operators (``operators/table_checks.py`` ``turn_gap_violations`` /
-``monotonic_ts_violations``) need the whole conversation; on a stream the
-conversation arrives incrementally and possibly out of order across
-micro-batches. This module gives them streaming semantics with
+The batch checks (the ``operators/table_checks.py`` check table, behind
+``turn_gap_violations`` and friends) need the whole conversation; on a
+stream the conversation arrives incrementally and possibly out of order
+across micro-batches. This module gives them streaming semantics with
 ``applyInPandasWithState`` (Arrow-batched per-group state — no per-row
 Python, per `input_hint`):
 
@@ -14,10 +14,10 @@ Python, per `input_hint`):
 - A conversation CLOSES when the event-time watermark passes its last
   event + ``session_gap`` (``GroupStateTimeout.EventTimeTimeout``): the
   session-window convention for "no more turns are coming".
-- On close the batch logic runs over the buffered pairs and the violation
-  rows are emitted — byte-identical to the batch operators' output for the
-  same conversation (asserted in tests/test_stateful_streaming.py), then
-  the state is dropped.
+- On close the checks run over the buffered pairs, the violation rows
+  are emitted and the state is dropped. They are an independent pandas
+  implementation of the batch check table, asserted byte-identical to it
+  per conversation (tests/test_stateful_streaming.py).
 
 Late rows *within* the watermark are handled exactly (they join the
 buffer before close); rows later than watermark + gap are dropped by the
@@ -83,13 +83,13 @@ def _close_conversation(conv_id: str, idxs: list, ts_us: list,
                         columns: list, idx_path: str, ts_path: str,
                         roles: list = (), tools: list = (),
                         protocol: dict = None) -> pd.DataFrame:
-    """The batch checks over one finished conversation's buffered turns.
-    Same semantics as turn_gap_violations / monotonic_ts_violations (and,
-    when ``protocol`` is configured, role_transition_violations /
-    tool_pairing_violations): order by turn_idx, dense position must
-    equal the index, timestamps non-decreasing, role transitions in the
-    allowed DFA, tool calls/results paired. Paths/messages derive from
-    the configured column names, exactly as the batch operators' do."""
+    """The batch check table's TurnGap / NonMonotonicTs records (and, with
+    ``protocol``, its role-DFA / tool-pairing ones) re-implemented in
+    pandas over one finished conversation's buffered turns: order by
+    turn_idx, dense position must equal the index, timestamps
+    non-decreasing, role transitions in the allowed DFA, tool
+    calls/results paired. Paths/messages derive from the configured
+    column names, exactly as the batch records' do."""
     order = sorted(range(len(idxs)), key=lambda i: idxs[i])
     rows = []
     prev_ts = None

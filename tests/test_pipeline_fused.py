@@ -136,3 +136,72 @@ def test_fused_protocol_still_single_exchange(spark):
     plan = pipe._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "Join" not in plan
+
+
+def test_cross_row_matches_independent_reference(spark):
+    """The fused cross-row branch against the stream's pandas
+    implementation of the same checks (streaming.stateful), which shares
+    no code with the check table: full rows must agree byte for byte."""
+    import datetime as dt
+
+    from json_schema_rs_spark.operators.pipeline import cross_row_violations
+    from json_schema_rs_spark.streaming.stateful import _close_conversation
+
+    t0 = dt.datetime(2026, 3, 1, 10, 0, tzinfo=dt.timezone.utc)
+
+    def at(seconds):
+        return t0 + dt.timedelta(seconds=seconds)
+
+    rows = [
+        # clean: a tool call answered by a tool turn
+        ("ok", 0, "system", "s", None, at(0)),
+        ("ok", 1, "user", "u", None, at(1)),
+        ("ok", 2, "assistant", "a", "search", at(2)),
+        ("ok", 3, "tool", "t", None, at(3)),
+        ("ok", 4, "assistant", "a", None, at(4)),
+        # offset start; the last turn is an unanswered tool call
+        ("off", 1, "system", "s", None, at(0)),
+        ("off", 2, "user", "u", None, at(1)),
+        ("off", 3, "assistant", "a", "browse", at(2)),
+        # a gap (no turn 2)
+        ("gap", 0, "user", "u", None, at(0)),
+        ("gap", 1, "assistant", "a", "calc", at(1)),
+        ("gap", 3, "tool", "t", None, at(2)),
+        # a tool turn after an assistant turn that called no tool
+        ("bare", 0, "user", "u", None, at(0)),
+        ("bare", 1, "assistant", "a", None, at(1)),
+        ("bare", 2, "tool", "t", None, at(2)),
+        # NULL roles: first turn, and before a tool turn
+        ("nul", 0, None, "x", None, at(0)),
+        ("nul", 1, "user", "u", None, at(1)),
+        ("nul", 2, None, "x", None, at(2)),
+        ("nul", 3, "tool", "t", None, at(3)),
+        # ts regression with fractional seconds; assistant -> assistant
+        ("ts", 0, "user", "u", None, at(10.5)),
+        ("ts", 1, "assistant", "a", None, at(10.25)),
+        ("ts", 2, "assistant", "a", None, at(11.000125)),
+    ]
+    tx = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp")
+    got = sorted(tuple(r) for r in cross_row_violations(
+        tx, role_protocol=PROTOCOL, tool_pairing=True).collect())
+
+    turns = {}
+    for r in tx.select("conv_id", "turn_idx", "role", "tool",
+                       F.unix_micros("ts").alias("ts_us")).collect():
+        turns.setdefault(r.conv_id, []).append(r)
+    protocol = {"allowed_transitions": PROTOCOL[0],
+                "allowed_first": PROTOCOL[1], "tool_pairing": True}
+    columns = ["conv_id", "turn_idx", "instance_path", "code", "message"]
+    expected = sorted(
+        tuple(row)
+        for conv, ts in turns.items()
+        for row in _close_conversation(
+            conv, [t.turn_idx for t in ts], [t.ts_us for t in ts], columns,
+            "/turn_idx", "/ts", [t.role for t in ts], [t.tool for t in ts],
+            protocol).itertuples(index=False))
+    assert got == expected
+    assert {r[3] for r in expected} == {
+        "TurnGap", "NonMonotonicTs", "BadFirstRole", "BadRoleTransition",
+        "ToolResultWithoutCall", "ToolCallWithoutResult"}

@@ -150,6 +150,18 @@ class TestSketchLedgerV2:
         d = stats._digest_from_ledger_row(legacy.collect()[0])
         assert d.compression == 200.0
 
+    def test_zero_compression_refused(self, spark, events):
+        # 0.0 is a corrupt v2 row, not a v1 row: it must not fall back
+        # to the default 200 the way a missing compression does
+        from json_schema_rs_spark.operators import stats
+        from pyspark.sql import functions as F
+        sk = stats.sketch_snapshot(events, ["value"], snapshot_id="s")
+        bad = sk.withColumn("compression", F.lit(0.0))
+        with pytest.raises(ValueError, match="non-positive compression"):
+            stats._digest_from_ledger_row(bad.collect()[0])
+        with pytest.raises(ValueError, match="non-positive compression"):
+            stats.merge_sketch_snapshots(bad, snapshot_id="m")
+
     def test_merge_equals_one_shot_on_exact_fields(self, spark, events):
         # compaction soundness: merging the per-half sketch rows must
         # reproduce the one-shot snapshot's exact fields (n, min, max)

@@ -210,11 +210,9 @@ class TestMultiSpec:
         ]
         return spark.createDataFrame(rows)
 
-    @pytest.mark.parametrize("strategy", ["union", "case"])
-    def test_routing_and_unknown(self, spark, strategy):
+    def test_routing_and_unknown(self, spark):
         rep = multi_spec_validate(
-            self._df(spark), {"v1": SPEC_V1, "v2": SPEC_V2},
-            strategy=strategy)
+            self._df(spark), {"v1": SPEC_V1, "v2": SPEC_V2})
         s = rep.summary()
         assert s["rows"] == 6
         assert s["valid_rows"] == 2               # a0 and b1
@@ -234,17 +232,6 @@ class TestMultiSpec:
                 sorted((r.conv_id, r.turn_idx, r.valid)
                        for r in solo.flagged.collect())
 
-    def test_strategies_agree(self, spark):
-        a = multi_spec_validate(self._df(spark),
-                                {"v1": SPEC_V1, "v2": SPEC_V2},
-                                strategy="union")
-        b = multi_spec_validate(self._df(spark),
-                                {"v1": SPEC_V1, "v2": SPEC_V2},
-                                strategy="case")
-        key = ["conv_id", "turn_idx", "instance_path", "code", "message"]
-        assert sorted(map(tuple, a.violations.select(*key).collect())) \
-            == sorted(map(tuple, b.violations.select(*key).collect()))
-
     def test_null_message_renders_null_token(self, spark):
         rep = multi_spec_validate(self._df(spark), {"v1": SPEC_V1})
         msgs = [r.message for r in rep.violations
@@ -252,19 +239,14 @@ class TestMultiSpec:
         assert any('"null" is not registered' in m for m in msgs)
         assert any('"v2" is not registered' not in m for m in msgs)
 
-    @pytest.mark.parametrize("strategy", ["union", "case"])
-    def test_shuffle_free(self, spark, strategy):
+    def test_shuffle_free(self, spark):
         rep = multi_spec_validate(
-            self._df(spark), {"v1": SPEC_V1, "v2": SPEC_V2},
-            strategy=strategy)
+            self._df(spark), {"v1": SPEC_V1, "v2": SPEC_V2})
         assert _n_exchanges(rep.flagged) == 0
 
     def test_empty_specs_rejected(self, spark):
         with pytest.raises(ValueError, match="at least one spec"):
             multi_spec_validate(self._df(spark), {})
-        with pytest.raises(ValueError, match="unknown strategy"):
-            multi_spec_validate(self._df(spark), {"v1": SPEC_V1},
-                                strategy="magic")
 
 
 class TestTurnLatency:
