@@ -19,9 +19,13 @@ table-level checks (:mod:`.table_checks`).
 
 from __future__ import annotations
 
+import json
+import threading
+import weakref
+from collections import OrderedDict
 from dataclasses import dataclass
 from functools import reduce
-from typing import Mapping, Optional, Sequence, Union
+from typing import Callable, Hashable, Mapping, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -29,6 +33,29 @@ from pyspark.sql import functions as F
 from ..functions.exprs import explode_rows
 from ..plans.compiler import CompiledPlan, compile_table_spec
 from ..plans.spec import SchemaNode, parse_spec
+
+# Expressions built for one SparkContext, reused by later calls on it.
+# Never shared across contexts: Columns hold JVM references and the
+# pandas-UDF slow-path columns hold the context's accumulator.
+_MEMO_ENTRIES = 64   # per context, least recently used dropped first
+_memos = weakref.WeakKeyDictionary()
+_memo_lock = threading.Lock()
+
+
+def _context_memo(sc, key: Hashable, build: Callable[[], object]):
+    """``build()``, run once per (SparkContext ``sc``, ``key``) and
+    returned again to every later call with the same pair."""
+    with _memo_lock:
+        memo = _memos.setdefault(sc, OrderedDict())
+        if key in memo:
+            memo.move_to_end(key)
+            return memo[key]
+    value = build()
+    with _memo_lock:
+        memo[key] = value
+        while len(memo) > _MEMO_ENTRIES:
+            memo.popitem(last=False)
+    return value
 
 
 @dataclass
@@ -137,6 +164,37 @@ class ValidationEngine:
             flagged = flagged.select(*keep)
         return ValidationReport(flagged=flagged, violations=violations)
 
+
+def _engine(sc, spec: Union[str, bytes, dict, SchemaNode], *,
+            key_cols: Sequence[str], strict: bool = False,
+            extensions: bool = False) -> ValidationEngine:
+    """The :class:`ValidationEngine` for these arguments, built by the
+    first call on ``sc`` and reused after it, so its per-schema plans are
+    compiled once. Specs are looked up by value: str/bytes as given, a
+    dict by its key-sorted JSON (compiling is key-order blind), a
+    :class:`SchemaNode` by identity (the cached engine holds the node)."""
+    if isinstance(spec, SchemaNode):
+        spec_key: Hashable = ("node", id(spec))
+    elif isinstance(spec, (str, bytes)):
+        spec_key = spec
+    else:
+        try:
+            text = json.dumps(spec, sort_keys=True)
+            # tuples, non-str keys or NaN read back different: such a
+            # spec may parse unlike its JSON twin, so it is not cached
+            exact = json.loads(text) == spec
+        except (TypeError, ValueError):
+            exact = False
+        if not exact:
+            return ValidationEngine(spec, key_cols=key_cols, strict=strict,
+                                    extensions=extensions)
+        spec_key = ("json", text)
+    return _context_memo(
+        sc, ("engine", spec_key, tuple(key_cols), strict, extensions),
+        lambda: ValidationEngine(spec, key_cols=key_cols, strict=strict,
+                                 extensions=extensions))
+
+
 def multi_spec_validate(
     df: DataFrame,
     specs: Mapping[str, Union[str, bytes, dict, SchemaNode]],
@@ -166,9 +224,10 @@ def multi_spec_validate(
     """
     if not specs:
         raise ValueError("multi_spec_validate needs at least one spec")
+    sc = df.sparkSession.sparkContext
     engines = {
-        sid: ValidationEngine(spec, key_cols=key_cols, strict=strict,
-                              extensions=extensions)
+        sid: _engine(sc, spec, key_cols=key_cols, strict=strict,
+                     extensions=extensions)
         for sid, spec in sorted(specs.items())}
     sids = list(engines)
     unknown_arr = F.array(F.struct(

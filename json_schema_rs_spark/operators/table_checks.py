@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exprs import explode_rows
 from ..plans.compiler import VIOLATION_ARRAY_DDL
+from .runner import _context_memo
 
 _VCOLS = ["instance_path", "code", "message"]
 
@@ -488,15 +489,35 @@ def _cross_row(df: DataFrame, codes: Sequence[str], names: dict,
     ``(conv, idx, instance_path, code, message)``, from a skinny
     projection, ONE exchange on conv and one sort by idx. ``names`` maps
     column roles to column names; ``protocol`` is ``(allowed_transitions,
-    allowed_first)``. Conditions filter before any message is built."""
+    allowed_first)``. Conditions filter before any message is built.
+    The expressions are built once per SparkContext and reused."""
+    if protocol:
+        transitions, first = protocol
+        # order kept: allowed_first is rendered into BadFirstRole
+        protocol = (tuple(tuple(t) for t in transitions), tuple(first))
+    conv, idx = names["conv"], names["idx"]
+    cols, cond, arr = _context_memo(
+        df.sparkSession.sparkContext,
+        ("cross", tuple(codes), tuple(sorted(names.items())), protocol),
+        lambda: _cross_row_exprs(codes, names, protocol))
+    return (explode_rows(df.select(*cols).filter(cond), [conv, idx], arr,
+                         "v")
+            .select(conv, idx, "v.instance_path", "v.code", "v.message"))
+
+
+def _cross_row_exprs(codes: Sequence[str], names: dict,
+                     protocol: Optional[tuple]) -> tuple:
+    """:func:`_cross_row`'s expressions: the skinny select list (key,
+    read columns, window values), the OR of the conditions and the
+    concatenated violation array."""
     checks = [ch for ch in _CHECKS if ch.code in codes]
     conv, idx = names["conv"], names["idx"]
     reads = [names[r] for r in ("ts", "role", "tool")
              if any(r in ch.reads for ch in checks)]
     uses = [u for u in _WINDOW_VALUES if any(u in ch.uses for ch in checks)]
     w = Window.partitionBy(conv).orderBy(idx)
-    windowed = df.select(conv, idx, *reads, *(
-        _WINDOW_VALUES[u](names, w).alias("_" + u) for u in uses))
+    cols = [conv, idx, *reads, *(
+        _WINDOW_VALUES[u](names, w).alias("_" + u) for u in uses)]
     c = SimpleNamespace(**{r: F.col(n) for r, n in names.items() if n},
                         **{u: F.col("_" + u) for u in uses},
                         key=F.lit(f"{conv}, {idx}"))
@@ -510,9 +531,7 @@ def _cross_row(df: DataFrame, codes: Sequence[str], names: dict,
         path = "/" + names[ch.path] if ch.path else ""
         arrays.append(_viol(cond, path, ch.code, _render(
             f"{path or 'root'}: ", ch.message, c)))
-    return (explode_rows(windowed.filter(reduce(operator.or_, conds)),
-                         [conv, idx], F.concat(*arrays), "v")
-            .select(conv, idx, "v.instance_path", "v.code", "v.message"))
+    return cols, reduce(operator.or_, conds), F.concat(*arrays)
 
 
 def turn_gap_violations(df: DataFrame, *, conv_col: str = "conv_id",

@@ -1217,6 +1217,12 @@ class CompiledPlan:
     # plan contains an Arrow pandas-UDF slow path (content keywords /
     # ECMA-fallback pattern) — see CompileContext.has_python_stage
     has_python_stage: bool = False
+    # any_violation() / violations_array(), built on first use and shared
+    # by every later call on this plan
+    _any: Optional[Column] = dataclasses_field(
+        default=None, init=False, repr=False, compare=False)
+    _array: Optional[Column] = dataclasses_field(
+        default=None, init=False, repr=False, compare=False)
 
     def helper_names(self) -> list[str]:
         return [n for n, _ in self.shared_cols]
@@ -1247,13 +1253,11 @@ class CompiledPlan:
         their conditionals and evaluates them per scanned row, so keeping
         message construction out of the hot projection is a ~3x win on
         clean-heavy data (the normal case)."""
-        conds = []
-        for c in self.checks:
-            if isinstance(c, ScalarCheck):
-                conds.append(F.coalesce(c.cond, F.lit(False)))
-            else:
-                conds.append(F.size(c.arr) > 0)
-        return bool_or(conds)
+        if self._any is None:
+            self._any = bool_or([
+                F.coalesce(c.cond, F.lit(False)) if isinstance(c, ScalarCheck)
+                else F.size(c.arr) > 0 for c in self.checks])
+        return self._any
 
     def violations_array(self) -> Column:
         """array<struct<instance_path,code,message>> of all violations for
@@ -1265,10 +1269,11 @@ class CompiledPlan:
         here would also knock the entire expression tree out of
         whole-stage codegen — higher-order functions are CodegenFallback —
         costing ~10x on the hot path.)"""
-        arrays = [c.to_array() for c in self.checks]
-        if not arrays:
-            return _empty_violations()
-        return F.concat(*arrays) if len(arrays) > 1 else arrays[0]
+        if self._array is None:
+            arrays = ([c.to_array() for c in self.checks]
+                      or [_empty_violations()])
+            self._array = F.concat(*arrays) if len(arrays) > 1 else arrays[0]
+        return self._array
 
 
 def compile_table_spec(root: SchemaNode, schema: T.StructType) -> CompiledPlan:

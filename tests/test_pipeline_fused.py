@@ -2,10 +2,15 @@
 à-la-carte operators it fuses, and its physical plan must contain exactly
 one exchange (the skinny conv_id shuffle)."""
 
+import json
 import os
+import subprocess
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -205,3 +210,203 @@ def test_cross_row_matches_independent_reference(spark):
     assert {r[3] for r in expected} == {
         "TurnGap", "NonMonotonicTs", "BadFirstRole", "BadRoleTransition",
         "ToolResultWithoutCall", "ToolCallWithoutResult"}
+
+
+# --- expressions are built once per (spec, schema, options) per context
+
+def _rows(df):
+    return df.columns, sorted(tuple(r) for r in df.collect())
+
+
+def _counting(counts, name, real):
+    def wrapper(*args, **kwargs):
+        counts[name] += 1
+        return real(*args, **kwargs)
+    return wrapper
+
+
+def test_repeat_call_builds_expressions_once(spark, monkeypatch):
+    from collections import Counter
+    import weakref
+
+    from json_schema_rs_spark.operators import runner, table_checks
+    monkeypatch.setattr(runner, "_memos", weakref.WeakKeyDictionary())
+    counts = Counter()
+    monkeypatch.setattr(runner, "compile_table_spec", _counting(
+        counts, "compile", runner.compile_table_spec))
+    monkeypatch.setattr(table_checks, "_cross_row_exprs", _counting(
+        counts, "cross_row", table_checks._cross_row_exprs))
+    tx = synth_transcripts(spark, n_conversations=20, turns_per_conv=6,
+                           violation_rate=0.2)
+    first, second = (_rows(transcript_pipeline(
+        tx, SPEC, vocabularies={"tool": TOOLS}, role_protocol=PROTOCOL,
+        tool_pairing=True)) for _ in range(2))
+    assert counts == {"compile": 1, "cross_row": 1}
+    assert first == second and first[1]
+
+
+def test_validate_twice_on_one_engine(spark):
+    tx = synth_transcripts(spark, n_conversations=20, turns_per_conv=6,
+                           violation_rate=0.2)
+    engine = ValidationEngine(SPEC)
+    first, second = [engine.validate(tx) for _ in range(2)]
+    assert _rows(first.flagged) == _rows(second.flagged)
+    assert _rows(first.violations) == _rows(second.violations)
+    assert first.violations.schema == second.violations.schema
+    assert first.violations.count() > 0
+
+
+def test_option_sets_never_share_cached_expressions(spark, monkeypatch):
+    """Each option set, run after all the others in one memo, returns
+    the rows it returns from an empty memo, and no two sets agree."""
+    import datetime as dt
+    import weakref
+
+    from json_schema_rs_spark.operators import runner
+
+    t0 = dt.datetime(2026, 3, 1, 10, 0, tzinfo=dt.timezone.utc)
+
+    def at(seconds):
+        return t0 + dt.timedelta(seconds=seconds)
+
+    tx = spark.createDataFrame([
+        ("a", "x", 0, "assistant", "user", "search", at(5)),
+        ("a", "x", 1, "tool", "assistant", None, at(1)),
+        ("a", "x", 2, "user", "tool", "calc", at(6)),
+        ("b", "x", 0, "user", "system", None, at(0)),
+        ("b", "x", 2, "assistant", "user", "browse", at(1)),
+    ], "conv_id string, conv2 string, turn_idx int, role string, "
+       "role2 string, tool string, ts timestamp")
+    transitions = PROTOCOL[0]
+    options = [
+        {},
+        {"ts_col": None},
+        {"role_protocol": (transitions, ["system", "user"])},
+        {"role_protocol": (transitions, ["user", "system"])},
+        {"role_protocol": (transitions[:1] + transitions[2:],
+                           ["system", "user"])},
+        {"tool_pairing": True},
+        {"tool_pairing": True, "role_col": "role2"},
+        {"vocabularies": {"tool": ["search"]}},
+        {"vocabularies": {"tool": ["calc"]}},
+        {"conv_col": "conv2"},
+    ]
+    spec = {"type": "object", "properties": {"tool": {"type": "string"}}}
+
+    def run(kw):
+        return _rows(transcript_pipeline(tx, spec, **kw))
+
+    cold = []
+    for kw in options:
+        monkeypatch.setattr(runner, "_memos", weakref.WeakKeyDictionary())
+        cold.append(run(kw))
+    monkeypatch.setattr(runner, "_memos", weakref.WeakKeyDictionary())
+    for kw in options:
+        run(kw)
+    assert [run(kw) for kw in options] == cold
+    assert len({repr(c) for c in cold}) == len(options)
+
+
+RESTART = """\
+import json, sys
+from pyspark import SparkContext
+from pyspark.sql import SparkSession
+from json_schema_rs_spark.operators.pipeline import transcript_pipeline
+from json_schema_rs_spark.operators.runner import ValidationEngine
+
+spec = json.loads(sys.argv[1])
+rows = [("c0", 0, "user", "spark window"), ("c0", 1, "assistant", "x"),
+        ("c0", 3, "user", "spark window"),
+        ("c1", 0, "assistant", "spark window")]
+
+
+def call():
+    spark = (SparkSession.builder.master("local[2]")
+             .config("spark.ui.enabled", "false")
+             .config("spark.sql.shuffle.partitions", "2").getOrCreate())
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string")
+    stage = ValidationEngine(spec).plan_for(df).has_python_stage
+    out = sorted(tuple(r) for r in transcript_pipeline(
+        df, spec, ts_col=None,
+        role_protocol=([("user", "assistant"), ("assistant", "user")],
+                       ["user"])).collect())
+    spark.stop()
+    return stage, out
+
+
+def new_jvm():
+    # what a process that restarts Spark from scratch does: the next
+    # session launches a fresh JVM
+    SparkContext._gateway.shutdown()
+    SparkContext._gateway = SparkContext._jvm = None
+
+
+first, second = call(), call()
+new_jvm()
+print(json.dumps({"first": first, "second": second, "third": call()}))
+"""
+
+
+@pytest.mark.parametrize("pattern", ["window", "(?<=spark) window"],
+                         ids=["codegen", "python_stage"])
+def test_pipeline_after_context_restart(tmp_path, pattern):
+    """The memo is per SparkContext: after ``spark.stop()`` a new
+    session's call rebuilds its expressions (cached Columns hold the old
+    context's JVM references; a pandas-UDF column, its accumulator), also
+    when the new session runs in a new JVM."""
+    spec = {"type": "object",
+            "properties": {"text": {"type": "string", "pattern": pattern}}}
+    script = tmp_path / "restart.py"
+    script.write_text(RESTART)
+    proc = subprocess.run(
+        [sys.executable, str(script), json.dumps(spec)],
+        capture_output=True, text=True, timeout=600, cwd=str(tmp_path),
+        env={**os.environ, "PYTHONPATH": REPO,
+             "PYSPARK_PYTHON": sys.executable,
+             "PYSPARK_DRIVER_PYTHON": sys.executable})
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["first"] == got["second"] == got["third"]
+    stage, rows = got["first"]
+    assert stage == (pattern != "window")
+    codes = sorted(r[3] for r in rows)
+    assert codes == ["BadFirstRole", "PatternMismatch", "TurnGap"], rows
+
+
+def test_context_memo_under_thread_contention():
+    """Many threads over more keys than the memo keeps: every lookup
+    returns its own key's value, and the memo never exceeds its bound."""
+    import threading
+
+    from json_schema_rs_spark.operators import runner
+
+    class Context:   # stands in for a SparkContext: weakly referenced
+        pass
+
+    sc, errors = Context(), []
+
+    def hammer(seed):
+        try:
+            for i in range(20000):
+                k = (seed * 7 + i) % (2 * runner._MEMO_ENTRIES)
+                got = runner._context_memo(sc, ("t", k), lambda: ("v", k))
+                if got != ("v", k):
+                    errors.append((k, got))
+        except Exception as e:  # noqa: BLE001 - reported by the assert
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer, args=(s,))
+                   for s in range(32)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(runner._memos[sc]) == runner._MEMO_ENTRIES

@@ -4,11 +4,12 @@ sketch ledger (persisted compression, mixed-compression refusal,
 rescan-free compaction, deterministic summary)."""
 
 import math
+from types import SimpleNamespace
 
 import pandas as pd
 import pytest
 
-from tools.oracle_check import compare_frames, driver_canon
+from tools.oracle_check import compare_frames, driver_canon, run_gate
 
 
 # ---------------------------------------------------------------------------
@@ -55,6 +56,13 @@ class TestDriverCanon:
         a = pd.DataFrame({"v": [0.12345678901]})
         b = pd.DataFrame({"v": [0.12345678902]})
         assert not compare_frames(a, b)[2]
+
+
+def test_run_gate_reports_unknown_query_name():
+    # a misspelled name is a gate error row, not a KeyError mid-run
+    entry = SimpleNamespace(queries=lambda: {}, oracle_sql=lambda: {})
+    assert list(run_gate(None, None, entry, "", ["no_such_query"])) == [
+        ("no_such_query", "ERR", "unknown query")]
 
 
 # ---------------------------------------------------------------------------

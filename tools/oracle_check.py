@@ -120,6 +120,9 @@ def run_gate(spark, con, entry_mod, sf_dir, names=None):
     (name, status, detail) where status in PASS/FAIL/NO_ORACLE/ERR."""
     qs, osql = entry_mod.queries(), entry_mod.oracle_sql()
     for name in names if names is not None else list(qs):
+        if name not in qs:
+            yield name, "ERR", "unknown query"
+            continue
         try:
             sdf = qs[name](spark, sf_dir)
             spdf = sdf.toPandas()
