@@ -171,7 +171,8 @@ def _engine(sc, spec: Union[str, bytes, dict, SchemaNode], *,
     """The :class:`ValidationEngine` for these arguments, built by the
     first call on ``sc`` and reused after it, so its per-schema plans are
     compiled once. Specs are looked up by value: str/bytes as given, a
-    dict by its key-sorted JSON (compiling is key-order blind), a
+    dict by its JSON in insertion order (the order of an object ``const``
+    or ``enum`` literal is rendered into its condition and message), a
     :class:`SchemaNode` by identity (the cached engine holds the node)."""
     if isinstance(spec, SchemaNode):
         spec_key: Hashable = ("node", id(spec))
@@ -179,7 +180,7 @@ def _engine(sc, spec: Union[str, bytes, dict, SchemaNode], *,
         spec_key = spec
     else:
         try:
-            text = json.dumps(spec, sort_keys=True)
+            text = json.dumps(spec)
             # tuples, non-str keys or NaN read back different: such a
             # spec may parse unlike its JSON twin, so it is not cached
             exact = json.loads(text) == spec

@@ -290,11 +290,16 @@ def test_option_sets_never_share_cached_expressions(spark, monkeypatch):
         {"vocabularies": {"tool": ["search"]}},
         {"vocabularies": {"tool": ["calc"]}},
         {"conv_col": "conv2"},
+        # object const literals render in key order: two specs that differ
+        # only there compile to different messages
+        {"spec": {"properties": {"tool": {"const": {"b": 1, "a": 2}}}}},
+        {"spec": {"properties": {"tool": {"const": {"a": 2, "b": 1}}}}},
     ]
     spec = {"type": "object", "properties": {"tool": {"type": "string"}}}
 
     def run(kw):
-        return _rows(transcript_pipeline(tx, spec, **kw))
+        kw = dict(kw)
+        return _rows(transcript_pipeline(tx, kw.pop("spec", spec), **kw))
 
     cold = []
     for kw in options:
