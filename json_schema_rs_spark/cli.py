@@ -52,7 +52,6 @@ def cmd_validate(args: argparse.Namespace) -> int:
     summary = run_checkpointed_validation(
         spark, source, spec, args.output,
         run_id=args.run_id, n_buckets=args.buckets,
-        bucket_col=args.bucket_col,
         key_cols=tuple(args.keys.split(",")),
         table_checks=args.table_checks or bool(args.protocol),
         ts_col=args.ts_col or None,
@@ -243,7 +242,6 @@ def main(argv: list[str] | None = None) -> int:
     v.add_argument("--output", required=True, help="output dir (violations + ledger)")
     v.add_argument("--run-id", default=None)
     v.add_argument("--buckets", type=int, default=64)
-    v.add_argument("--bucket-col", default="conv_id")
     v.add_argument("--keys", default="conv_id,turn_idx")
     v.add_argument("--route-rows", action="store_true",
                    help="also write every row to {output}/routed/"

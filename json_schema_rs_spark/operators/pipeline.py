@@ -38,9 +38,8 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.exprs import explode_rows
 from ..plans.spec import SchemaNode
-from .runner import _engine
+from .runner import _engine, _row_violations
 from .table_checks import _cross_row, _viol
 
 
@@ -70,15 +69,8 @@ def transcript_pipeline(
     plan = _engine(df.sparkSession.sparkContext, spec,
                    key_cols=(conv_col, idx_col)).plan_for(df)
     any_cond, row_arr = _row_exprs(plan, vocabularies or {})
-    # filter-then-render: cheap check conditions select the violating rows
-    # BEFORE any message string is built (message subtrees are hoisted out
-    # of their conditionals by subexpression elimination and would
-    # otherwise evaluate per scanned row); prepare attaches the
-    # combinator validity helpers (if any)
-    row_v = (explode_rows(plan.prepare(df).filter(any_cond),
-                          [conv_col, idx_col], row_arr, "v")
-               .select(conv_col, idx_col, "v.instance_path", "v.code",
-                       "v.message"))
+    row_v = _row_violations(df, plan, [conv_col, idx_col],
+                            cond=any_cond, arr=row_arr)
 
     table_v = cross_row_violations(
         df, conv_col=conv_col, idx_col=idx_col, ts_col=ts_col,

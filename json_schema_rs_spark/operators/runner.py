@@ -132,37 +132,59 @@ class ValidationEngine:
         output's payload columns (key columns are always kept)."""
         plan = self.plan_for(df)
         keys = [k for k in self.key_cols if k in df.columns]
-        if plan.has_python_stage:
-            # The plan carries an Arrow pandas-UDF slow path (content
-            # keywords / rare ECMA-fallback pattern), whose cost is the
-            # Python map side running at SCAN parallelism. A small table
-            # in one parquet row group would serialize that stage on a
-            # single core — insert dedup._spread's local-parallelism
-            # guard (a no-op on production many-file tables; pure-codegen
-            # plans never take this branch, staying exchange-free).
-            if keys:
-                from .dedup import _spread
-                df = _spread(df, keys[0], *keys[1:])
-            else:
-                target = df.sparkSession.sparkContext.defaultParallelism
-                if df.rdd.getNumPartitions() < target:
-                    df = df.repartition(target)
+        df = _python_stage_spread(df, plan, keys)
         flagged = self.attach_violations(df).withColumn(
             "valid", F.size("violations") == 0
         )
-        # filter-then-render: select violating rows with the CHEAP check
-        # conditions, then build message strings only for the survivors
-        # (message subtrees would otherwise evaluate per scanned row)
-        violations = (
-            explode_rows(
-                plan.prepare(df).filter(plan.any_violation()),
-                keys, plan.violations_array(), "v")
-            .select(*keys, "v.instance_path", "v.code", "v.message")
-        )
+        violations = _row_violations(df, plan, keys)
         if keep_columns is not None:
             keep = list(dict.fromkeys([*keys, *keep_columns, "violations", "valid"]))
             flagged = flagged.select(*keep)
         return ValidationReport(flagged=flagged, violations=violations)
+
+
+def _python_stage_spread(df: DataFrame, plan: CompiledPlan,
+                         keys: Sequence[str]) -> DataFrame:
+    """``df``, spread over the local cores when ``plan`` carries an Arrow
+    pandas-UDF slow path (content keywords / rare ECMA-fallback pattern),
+    whose cost is the Python map side running at SCAN parallelism. A
+    small table in one parquet row group would serialize that stage on a
+    single core, so dedup._spread's local-parallelism guard is inserted
+    (a no-op on production many-file tables; pure-codegen plans are
+    returned as given, staying exchange-free)."""
+    if not plan.has_python_stage:
+        return df
+    if keys:
+        from .dedup import _spread
+        return _spread(df, keys[0], *keys[1:])
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
+
+def _row_violations(df: DataFrame, plan: CompiledPlan, keys: Sequence[str],
+                    *, cond: Optional[Column] = None,
+                    arr: Optional[Column] = None,
+                    observe: Optional[tuple] = None) -> DataFrame:
+    """The row-local violation rows ``(keys..., instance_path, code,
+    message)`` of ``df`` under ``plan``: prepare -> filter on the check
+    conditions -> render and explode the survivors. ``cond`` / ``arr``
+    replace the plan's condition and violation array (the fused pipeline
+    adds its vocabulary checks to both); ``observe`` is ``(Observation,
+    *metrics)`` collected on the prepared scan, before the filter.
+
+    Filter-then-render: the CHEAP conditions select the violating rows
+    before any message string is built (message subtrees are hoisted out
+    of their conditionals by subexpression elimination and would
+    otherwise evaluate per scanned row)."""
+    scan = plan.prepare(df)
+    if observe is not None:
+        scan = scan.observe(*observe)
+    return (explode_rows(
+                scan.filter(plan.any_violation() if cond is None else cond),
+                keys, plan.violations_array() if arr is None else arr, "v")
+            .select(*keys, "v.instance_path", "v.code", "v.message"))
 
 
 def _engine(sc, spec: Union[str, bytes, dict, SchemaNode], *,

@@ -232,7 +232,6 @@ def run_checkpointed_validation(
     run_id: Optional[str] = None,
     n_buckets: int = 16,
     buckets_per_chunk: int = 4,
-    bucket_col: str = "conv_id",
     key_cols: Sequence[str] = ("conv_id", "turn_idx"),
     fail_after_chunks: Optional[int] = None,
     table_checks: bool = False,
@@ -243,21 +242,25 @@ def run_checkpointed_validation(
 ) -> dict:
     """Validate ``source`` in resumable bucket chunks.
 
-    Each chunk: filter to its buckets -> single-pass row validation ->
-    append violation rows to ``{output_path}/violations`` (partitioned by
-    bucket for pruning on re-reads) -> append one ledger row per bucket.
-    Re-invoking with the same ``run_id`` skips completed buckets.
+    Buckets hash the conversation key ``key_cols[0]``. Each chunk runs
+    the fused plan of :func:`..operators.pipeline.transcript_pipeline`
+    over its buckets and writes its violation rows ONCE, appended to
+    ``{output_path}/violations`` (partitioned by bucket for pruning on
+    re-reads), then appends one ledger row per bucket. Re-invoking with
+    the same ``run_id`` skips completed buckets.
 
     ``table_checks=True`` also runs the cross-row checks (duplicate key,
     gap-free ordering, monotonic ts, and — when ``role_protocol`` /
-    ``tool_pairing`` are set — the conversation protocol) per chunk.
-    This is EXACT, not per-chunk-approximate, because buckets hash on
-    ``bucket_col`` (= the conversation key): every conversation lands
-    whole inside one bucket, and all cross-row checks are per-conversation.
-    Their violation counts ride in the same ledger rows. That exactness
-    REQUIRES ``bucket_col == key_cols[0]`` — chunking on any other column
-    would split conversations across chunks (wrong cross-row verdicts)
-    and mis-bucket their violation rows — so that configuration raises.
+    ``tool_pairing`` are set — the conversation protocol) per chunk, in
+    the same write as the row-local checks. This is EXACT, not
+    per-chunk-approximate: every conversation lands whole inside one
+    bucket, and all cross-row checks are per-conversation.
+
+    The ledger counts come from the write itself, via two
+    ``Observation``s: per-bucket rows and violating rows on the scan of
+    the row-local branch, and per-bucket violation rows (row-local plus
+    cross-row) on the written output. ``valid_rows`` is the ROW-LOCAL
+    validity count; cross-row violations add to ``violation_count`` only.
 
     ``route_rows=True`` additionally routes EVERY row of each chunk to
     ``{output_path}/routed/run_id=*/bucket=*/valid=true|false`` — the clean
@@ -265,12 +268,9 @@ def run_checkpointed_validation(
     stages, the ``valid=false`` partition is the quarantine (full
     original row + its rendered ``violations`` array for repair; note
     parquet partition-value inference reads the ``valid`` partition
-    column back as the STRING 'true'/'false'). The
-    route is ONE write action whose ledger metrics ride the same scan
-    via ``observe()``, replacing the separate metrics aggregate — with
-    routing on, each chunk is scanned once for the row path (write +
-    metrics) plus the skinny filter-then-render violations branch,
-    exactly the action count of a non-routed run.
+    column back as the STRING 'true'/'false'). The route is one more
+    plain write per chunk; the ledger counts still come from the
+    violation write.
 
     Both violation and routed outputs are RUN-SCOPED
     (``.../run_id=<id>/bucket=<b>/``, surfaced as partition columns on
@@ -284,24 +284,24 @@ def run_checkpointed_validation(
     ``fail_after_chunks`` is a test hook simulating a mid-run crash.
     Returns a summary dict with per-run totals and bucket lists.
     """
-    from ..operators.runner import ValidationEngine
+    from ..operators.pipeline import cross_row_violations
+    from ..operators.runner import (_engine, _python_stage_spread,
+                                    _row_violations)
 
-    if table_checks and bucket_col != key_cols[0]:
-        raise ValueError(
-            f"table_checks requires bucket_col == key_cols[0] so every "
-            f"conversation is whole inside one chunk; got bucket_col="
-            f"{bucket_col!r} vs key_cols[0]={key_cols[0]!r}")
     run_id = run_id or uuid.uuid4().hex[:12]
     ledger = ValidationLedger(spark, f"{output_path}/ledger")
-    engine = ValidationEngine(spec, key_cols=key_cols)
+    engine = _engine(spark.sparkContext, spec, key_cols=key_cols)
+    plan = engine.plan_for(source)
     # persist the compiled-plan manifest once per spec fingerprint; the
     # ledger rows below link to it via spec_fingerprint
-    fp = PlanLineage(spark, f"{output_path}/plans").record(
-        engine.plan_for(source), spec, run_id)
+    fp = PlanLineage(spark, f"{output_path}/plans").record(plan, spec, run_id)
 
     done = ledger.completed_buckets(run_id)
     pending = [b for b in range(n_buckets) if b not in done]
-    bucket_expr = F.pmod(F.xxhash64(F.col(bucket_col)), F.lit(n_buckets)).cast("int")
+    # the bucket is a pure function of the conversation key: the same
+    # expression selects a chunk and labels its written rows
+    bucket_expr = F.pmod(F.xxhash64(F.col(key_cols[0])),
+                         F.lit(n_buckets)).cast("int")
 
     viol_path = f"{output_path}/violations/run_id={run_id}"
     routed_path = f"{output_path}/routed/run_id={run_id}"
@@ -326,94 +326,43 @@ def run_checkpointed_validation(
         if fail_after_chunks is not None and ci >= fail_after_chunks:
             break
         t0 = time.monotonic()
-        part = source.withColumn("_bucket", bucket_expr) \
-                     .filter(F.col("_bucket").isin(chunk))
-        report = engine.validate(part)
-        if route_rows:
-            # one write action routes clean + quarantine rows; per-bucket
-            # ledger metrics ride the same scan via observe() (chunks
-            # hold <= buckets_per_chunk buckets, so this is a handful of
-            # conditional sums, not a groupBy)
-            obs = Observation(f"route_{run_id}_{ci}")
-            metrics = []
-            for b in chunk:
-                hit = F.col("bucket") == F.lit(b)
-                metrics += [
-                    F.sum(hit.cast("long")).alias(f"rows_{b}"),
-                    F.sum(F.when(hit, F.col("valid").cast("long"))
-                          .otherwise(F.lit(0))).alias(f"valid_{b}"),
-                    F.sum(F.when(hit, F.size("violations").cast("long"))
-                          .otherwise(F.lit(0))).alias(f"vc_{b}"),
-                ]
-            routed = (report.flagged
-                      .withColumnRenamed("_bucket", "bucket")
-                      .observe(obs, metrics[0], *metrics[1:]))
-            (routed.write.mode("append").partitionBy("bucket", "valid")
-                   .parquet(routed_path))
-            got = obs.get
-            by_bucket = {b: {"rows": int(got[f"rows_{b}"] or 0),
-                             "valid_rows": int(got[f"valid_{b}"] or 0),
-                             "violation_count": int(got[f"vc_{b}"] or 0)}
-                         for b in chunk
-                         if got[f"rows_{b}"]}
-        else:
-            # one aggregation per chunk for ledger metrics, by bucket
-            agg = (report.flagged
-                   .groupBy("_bucket")
-                   .agg(F.count(F.lit(1)).alias("rows"),
-                        F.sum(F.col("valid").cast("long")).alias("valid_rows"),
-                        F.sum(F.size("violations").cast("long")).alias("violation_count"))
-                   .collect())
-            by_bucket = {int(r["_bucket"]): {
-                "rows": int(r["rows"]),
-                "valid_rows": int(r["valid_rows"]),
-                "violation_count": int(r["violation_count"])}
-                for r in agg}
-        (report.violations.join(
-            part.select(*key_cols, "_bucket").dropDuplicates(list(key_cols)),
-            on=list(key_cols), how="left")
-            .withColumn("bucket", F.col("_bucket")).drop("_bucket")
-            .write.mode("append").partitionBy("bucket")
-            .parquet(viol_path))
-        tcounts: dict = {}
+        part = source.filter(bucket_expr.isin(chunk))
+        scan_obs, out_obs = Observation(), Observation()
+        scan_metrics = [m for b in chunk for m in (
+            F.count_if(bucket_expr == b).alias(f"rows_{b}"),
+            F.count_if((bucket_expr == b) & plan.any_violation())
+             .alias(f"bad_{b}"))]
+        viol = _row_violations(_python_stage_spread(part, plan, key_cols),
+                               plan, key_cols,
+                               observe=(scan_obs, *scan_metrics))
         if table_checks:
-            from ..operators.pipeline import cross_row_violations
-            tv = cross_row_violations(
-                part, conv_col=key_cols[0], idx_col=key_cols[1],
-                ts_col=ts_col, role_protocol=role_protocol,
-                tool_pairing=tool_pairing)
-            # bucket is a pure function of the conversation key
-            # (bucket_col == key_cols[0], enforced above), so it is
-            # recomputable on the violation rows with the SAME expression
-            # that selected the chunk
-            tv_b = tv.withColumn("bucket", bucket_expr)
-            tcounts = {int(r["bucket"]): int(r["c"])
-                       for r in tv_b.groupBy("bucket")
-                                    .agg(F.count(F.lit(1)).alias("c"))
-                                    .collect()}
-            (tv_b.write.mode("append").partitionBy("bucket")
-                 .parquet(viol_path))
+            viol = viol.unionByName(cross_row_violations(
+                part, conv_col=key_cols[0], idx_col=key_cols[1], ts_col=ts_col,
+                role_protocol=role_protocol, tool_pairing=tool_pairing))
+        (viol.withColumn("bucket", bucket_expr)
+             .observe(out_obs, *[F.count_if(F.col("bucket") == b)
+                                 .alias(f"vc_{b}") for b in chunk])
+             .write.mode("append").partitionBy("bucket").parquet(viol_path))
+        if route_rows:
+            (engine.validate(part).flagged.withColumn("bucket", bucket_expr)
+                   .write.mode("append").partitionBy("bucket", "valid")
+                   .parquet(routed_path))
         wall = time.monotonic() - t0
+        scan, out = scan_obs.get, out_obs.get
         entries = []
         for b in chunk:
-            r = by_bucket.get(b)
-            vcount = (int(r["violation_count"]) if r else 0) \
-                + tcounts.get(b, 0)
+            rows = int(scan[f"rows_{b}"])
+            counts = {"rows": rows,
+                      "valid_rows": rows - int(scan[f"bad_{b}"]),
+                      "violation_count": int(out[f"vc_{b}"])}
             entries.append({
-                "run_id": run_id, "bucket": b, "status": "done",
-                "rows": int(r["rows"]) if r else 0,
-                # valid_rows is the ROW-LOCAL validity count; cross-row
-                # violations add to violation_count only
-                "valid_rows": int(r["valid_rows"]) if r else 0,
-                "violation_count": vcount,
+                "run_id": run_id, "bucket": b, "status": "done", **counts,
                 "wall_time_sec": wall / len(chunk),
                 "spec_fingerprint": fp,
                 "finished_at": None,
             })
-            if r or tcounts.get(b):
-                totals["rows"] += int(r["rows"]) if r else 0
-                totals["valid_rows"] += int(r["valid_rows"]) if r else 0
-                totals["violation_count"] += vcount
+            for k, v in counts.items():
+                totals[k] += v
         ledger.append(entries)
         processed.extend(chunk)
 

@@ -1,0 +1,126 @@
+"""The ledger runner writes each chunk's violations once: bucket labels
+come from the expression that selected the chunk, and the ledger counts
+come from that write."""
+
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from json_schema_rs_spark import ValidationEngine
+from json_schema_rs_spark.sources.ledger import (
+    ValidationLedger,
+    run_checkpointed_validation,
+)
+from json_schema_rs_spark.sources.synth import synth_transcripts_pandas
+from test_ledger_cli_streaming import PROTOCOL, SCHEMA, SPEC
+
+TABLE_CHECKS = dict(table_checks=True, role_protocol=PROTOCOL,
+                    tool_pairing=True)
+
+
+@pytest.fixture(scope="module")
+def tdf(spark):
+    pdf = synth_transcripts_pandas(n_conversations=80, turns_per_conv=6,
+                                   seed=11, violation_rate=0.15)
+    return spark.createDataFrame(pdf, schema=SCHEMA).cache()
+
+
+def _bucket(n_buckets):
+    return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+
+
+def _violation_rows(df):
+    return sorted(map(tuple, df.select(
+        "conv_id", "turn_idx", "instance_path", "code", "message").collect()))
+
+
+def test_strict_spec_sees_only_the_source_columns(spark, tdf, tmp_path):
+    # additionalProperties: false flags any column the spec does not
+    # name, so a helper column added by the runner would fail every row
+    spec = {**SPEC, "additionalProperties": False,
+            "properties": {**SPEC["properties"], "conv_id": {},
+                           "turn_idx": {}, "tool": {}, "ts": {}}}
+    out = str(tmp_path / "strict")
+    s = run_checkpointed_validation(spark, tdf, spec, out, run_id="s",
+                                    n_buckets=4, route_rows=True)
+    direct = ValidationEngine(spec).validate(tdf)
+    want = direct.summary()
+    assert 0 < want["valid_rows"] < want["rows"]
+    assert (s["rows"], s["valid_rows"], s["violation_count"]) == (
+        want["rows"], want["valid_rows"], want["violation_count"])
+    assert (_violation_rows(spark.read.parquet(f"{out}/violations"))
+            == _violation_rows(direct.violations))
+    routed = spark.read.parquet(f"{out}/routed")
+    assert routed.filter("valid = 'true'").count() == want["valid_rows"]
+
+
+def test_null_key_violations_keep_their_bucket(spark, tdf, tmp_path):
+    n = 8
+    df = tdf.limit(30).unionByName(spark.createDataFrame(
+        [(None, 0, "bogus", "x", None, None),
+         ("c-null-idx", None, "user", "", None, None)], SCHEMA))
+    out = str(tmp_path / "nullkeys")
+    run_checkpointed_validation(spark, df, SPEC, out, run_id="nk",
+                                n_buckets=n, buckets_per_chunk=3,
+                                **TABLE_CHECKS)
+    viol = spark.read.parquet(f"{out}/violations")
+    assert viol.filter(F.col("conv_id").isNull()).count() > 0
+    assert viol.filter(F.col("turn_idx").isNull()).count() > 0
+    assert viol.filter(F.col("bucket").isNull()
+                       | (F.col("bucket") != _bucket(n))).count() == 0
+    assert not [d for d, _, _ in os.walk(out)
+                if "__HIVE_DEFAULT_PARTITION__" in d]
+
+
+def _jobs(spark, group, fn):
+    """Spark jobs launched by ``fn()``, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_at_most_three_jobs_per_chunk(spark, tdf, tmp_path):
+    # the violation write (a shuffle map stage for the cross-row branch
+    # plus the write itself) and the ledger append. The source is parquet,
+    # as in `cli validate`: a not yet materialized cached input would add
+    # the cache's own jobs to the first run
+    tdf.write.parquet(str(tmp_path / "src"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+    kw = dict(n_buckets=16, buckets_per_chunk=4, **TABLE_CHECKS)
+    setup = _jobs(spark, "ledger-setup", lambda: run_checkpointed_validation(
+        spark, src, SPEC, str(tmp_path / "a"), run_id="j",
+        fail_after_chunks=0, **kw))
+    full = _jobs(spark, "ledger-full", lambda: run_checkpointed_validation(
+        spark, src, SPEC, str(tmp_path / "b"), run_id="j", **kw))
+    assert (full - setup) / 4 <= 3
+
+
+@pytest.mark.parametrize("options", [TABLE_CHECKS, dict(route_rows=True)],
+                         ids=["table_checks", "route_rows"])
+def test_ledger_counts_match_written_rows(spark, tdf, tmp_path, options):
+    n = 8
+    out = str(tmp_path / "counts")
+    run_checkpointed_validation(spark, tdf, SPEC, out, run_id="c",
+                                n_buckets=n, buckets_per_chunk=3, **options)
+    ledger = {r["bucket"]: r for r in
+              ValidationLedger(spark, f"{out}/ledger").entries("c").collect()}
+    assert sorted(ledger) == list(range(n))
+    written = {r["bucket"]: r["count"] for r in spark.read.parquet(
+        f"{out}/violations").groupBy("bucket").count().collect()}
+    rows_in = {r["b"]: r["count"] for r in tdf.groupBy(
+        _bucket(n).alias("b")).count().collect()}
+    for b, r in ledger.items():
+        assert r["violation_count"] == written.get(b, 0)
+        assert r["rows"] == rows_in.get(b, 0)
+    if options.get("route_rows"):
+        clean = {r["bucket"]: r["count"] for r in spark.read.parquet(
+            f"{out}/routed").filter("valid = 'true'")
+            .groupBy("bucket").count().collect()}
+        for b, r in ledger.items():
+            assert r["valid_rows"] == clean.get(b, 0)

@@ -130,21 +130,6 @@ class TestRenderNullFieldsCrossEngine:
         assert got == want
 
 
-class TestLedgerBucketKeyCoupling:
-    def test_table_checks_require_bucket_on_conversation_key(
-            self, spark, tmp_path):
-        from json_schema_rs_spark.sources.ledger import (
-            run_checkpointed_validation)
-        df = spark.createDataFrame(
-            [Row(conv_id="c", turn_idx=0, role="user", user_id="u")],
-            "conv_id string, turn_idx int, role string, user_id string")
-        with pytest.raises(ValueError, match="bucket_col"):
-            run_checkpointed_validation(
-                spark, df, {"type": "object"}, str(tmp_path / "out"),
-                bucket_col="user_id", key_cols=("conv_id", "turn_idx"),
-                table_checks=True, ts_col=None)
-
-
 class TestIvfNullQueryVector:
     def test_null_query_embedding_skipped_not_crash(self, spark):
         from json_schema_rs_spark.operators.similarity import ivf_topk
