@@ -30,7 +30,25 @@ def build_session(app: str, master: str | None = None):
          .config("spark.sql.session.timeZone", "UTC"))
     if master:
         b = b.master(master)
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    _size_local_shuffles(spark)
+    return spark
+
+
+def _size_local_shuffles(spark) -> None:
+    """On a local master, write each shuffle as many ways as there are
+    cores instead of Spark's default 200: the fused plan's one ``conv_id``
+    exchange is skinny, and at 200 each map task opens 200 partition
+    files (the default equals ``bypassMergeThreshold``) for a few MB of
+    rows. A value set anywhere — SparkConf, ``spark-submit --conf``,
+    spark-defaults or the live session — wins, since the session's conf
+    holds each of them. Cluster masters keep Spark's default: under
+    dynamic allocation their parallelism at start-up can be 2."""
+    key = "spark.sql.shuffle.partitions"
+    master = spark.sparkContext.master
+    if ((master == "local" or master.startswith("local["))
+            and spark.conf.get(key, None) is None):
+        spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
 
 
 def cmd_validate(args: argparse.Namespace) -> int:

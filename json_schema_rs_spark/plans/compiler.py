@@ -476,9 +476,15 @@ def _compile_type_scoped(
                 message=_msg(loc, [F.lit("expected string, got null")]),
             ))
         n = F.length(s)  # Unicode code points, = Rust chars().count()
+        # A code point is 1-4 UTF-8 bytes, so the byte length (O(1))
+        # decides most rows before the code-point count (O(bytes)) runs.
+        # The byte length is an int: 2**31 bounds it and keeps the
+        # literal a valid long for any minLength.
+        nbytes = F.octet_length(s)
         if node.min_length is not None:
             checks.append(ScalarCheck(
-                cond=sgate & (n < F.lit(node.min_length)), path=path, code="TooShort",
+                cond=sgate & (nbytes < F.lit(min(4 * node.min_length, 2**31)))
+                & (n < F.lit(node.min_length)), path=path, code="TooShort",
                 message=_msg(loc, [
                     F.lit("string has "), n.cast("string"),
                     F.lit(f" code points, minLength is {node.min_length}"),
@@ -486,7 +492,8 @@ def _compile_type_scoped(
             ))
         if node.max_length is not None:
             checks.append(ScalarCheck(
-                cond=sgate & (n > F.lit(node.max_length)), path=path, code="TooLong",
+                cond=sgate & (nbytes > F.lit(node.max_length))
+                & (n > F.lit(node.max_length)), path=path, code="TooLong",
                 message=_msg(loc, [
                     F.lit("string has "), n.cast("string"),
                     F.lit(f" code points, maxLength is {node.max_length}"),

@@ -383,3 +383,43 @@ class TestPlanCSE:
             for v in pyvalidator.validate(root, inst):
                 exp.add((row.o_orderkey, v.code))
         assert got == exp
+
+
+@pytest.mark.parametrize("lo,hi,sizes,codes", [
+    # one below, at, and one above each bound
+    (3, 5, (2, 3, 5, 6), {"TooShort": 4, "TooLong": 4}),
+    # bounds past any string's byte length: every string is too short
+    (2**62, 2**63 - 1, (1, 2), {"TooShort": 8}),
+], ids=["bounds", "huge_bounds"])
+def test_length_bounds_at_every_utf8_width(spark, lo, hi, sizes, codes):
+    """minLength/maxLength first compare the byte length, then count code
+    points: at each bound, for code points of 1 to 4 UTF-8 bytes, the
+    rows and messages stay those of the pyvalidator, also through the
+    fused pipeline's filter."""
+    from collections import Counter
+
+    from json_schema_rs_spark.operators.pipeline import transcript_pipeline
+    spec = {"type": "object",
+            "properties": {"text": {"type": "string",
+                                    "minLength": lo, "maxLength": hi}}}
+    rows = [(f"c{i}", 0, "user", ch * n)
+            for i, (ch, n) in enumerate(
+                (ch, n) for ch in ("a", "\u00e9", "\u20ac", "\U0001F600")
+                for n in sizes)]
+    assert ({len(r[3].encode()) // len(r[3]) for r in rows}
+            == {1, 2, 3, 4})
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string")
+    root = parse_spec(spec)
+    want = sorted((c, i, v.path, v.code, v.message)
+                  for c, i, _, text in rows
+                  for v in validate(root, {"text": text}))
+    assert Counter(w[3] for w in want) == codes
+    got = sorted((r.conv_id, r.turn_idx, r.instance_path, r.code, r.message)
+                 for r in ValidationEngine(spec).validate(df)
+                 .violations.collect())
+    assert got == want
+    fused = sorted((r.conv_id, r.turn_idx, r.instance_path, r.code,
+                    r.message) for r in transcript_pipeline(
+                        df, spec, ts_col=None).collect())
+    assert fused == want

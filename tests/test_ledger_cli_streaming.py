@@ -507,6 +507,22 @@ PROTOCOL = ([("system", "user"), ("user", "assistant"),
             ["system", "user"])
 
 
+def _cli_protocol_inputs(tdf, tmp_path):
+    """The fixture as parquet, the spec and the protocol file: the inputs
+    of ``cli validate --protocol``."""
+    src = str(tmp_path / "src")
+    tdf.write.parquet(src)
+    spec_f = str(tmp_path / "spec.json")
+    with open(spec_f, "w") as f:
+        json.dump(SPEC, f)
+    proto_f = str(tmp_path / "protocol.json")
+    with open(proto_f, "w") as f:
+        json.dump({"allowed_transitions": PROTOCOL[0],
+                   "allowed_first": PROTOCOL[1],
+                   "tool_pairing": True}, f)
+    return src, spec_f, proto_f
+
+
 class TestLedgerTableChecks:
     def test_cross_row_checks_ride_the_resumable_run(self, spark, tdf,
                                                      tmp_path):
@@ -559,16 +575,7 @@ class TestLedgerTableChecks:
 
     def test_cli_protocol_flag(self, spark, tdf, tmp_path, capsys):
         from json_schema_rs_spark import cli
-        src = str(tmp_path / "src")
-        tdf.write.parquet(src)
-        spec_f = str(tmp_path / "spec.json")
-        with open(spec_f, "w") as f:
-            json.dump(SPEC, f)
-        proto_f = str(tmp_path / "protocol.json")
-        with open(proto_f, "w") as f:
-            json.dump({"allowed_transitions": PROTOCOL[0],
-                       "allowed_first": PROTOCOL[1],
-                       "tool_pairing": True}, f)
+        src, spec_f, proto_f = _cli_protocol_inputs(tdf, tmp_path)
         rc = cli.main(["validate", "--spec", spec_f, "--input", src,
                        "--output", str(tmp_path / "out"),
                        "--run-id", "cli-tc", "--buckets", "4",
@@ -579,6 +586,43 @@ class TestLedgerTableChecks:
         assert summary["violation_count"] == viol.count()
         assert {r.code for r in viol.collect()} & {"BadRoleTransition",
                                                    "ToolResultWithoutCall"}
+
+    def test_cli_rows_independent_of_shuffle_partitions(self, spark, tdf,
+                                                        tmp_path, capsys):
+        """``cli validate --protocol`` writes the same violation rows
+        (bucket included), ledger rows and exit code at Spark's default
+        of 200 shuffle partitions and under the CLI's own rule (one per
+        local core, applied when the key is unset)."""
+        from json_schema_rs_spark import cli
+        key = "spark.sql.shuffle.partitions"
+        src, spec_f, proto_f = _cli_protocol_inputs(tdf, tmp_path)
+
+        def run(name):
+            out = str(tmp_path / name)
+            rc = cli.main(["validate", "--spec", spec_f, "--input", src,
+                           "--output", out, "--run-id", "parts",
+                           "--buckets", "4", "--protocol", proto_f])
+            viol = spark.read.parquet(f"{out}/violations")
+            ledger = spark.read.parquet(f"{out}/ledger").drop(
+                "wall_time_sec", "finished_at")
+            return (rc, sorted(tuple(r) for r in viol.collect()),
+                    sorted(tuple(r) for r in ledger.collect()))
+
+        before = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "200")
+            at_200 = run("at_200")
+            assert spark.conf.get(key) == "200"
+            spark.conf.unset(key)
+            by_rule = run("by_rule")
+            assert spark.conf.get(key) == str(
+                spark.sparkContext.defaultParallelism)
+        finally:
+            spark.conf.set(key, before)
+        capsys.readouterr()
+        assert at_200[0] == by_rule[0] == 1
+        assert at_200[1] and at_200[2]
+        assert at_200 == by_rule
 
 
 class TestRoutedIdempotence:

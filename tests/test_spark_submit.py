@@ -22,8 +22,12 @@ SPARK_SUBMIT = shutil.which("spark-submit")
 
 RUNNER = """\
 import sys
+from pyspark.sql import SparkSession
 from json_schema_rs_spark.cli import main
-sys.exit(main())
+rc = main()
+print("shuffle.partitions="
+      + SparkSession.getActiveSession().conf.get("spark.sql.shuffle.partitions"))
+sys.exit(rc)
 """
 
 SPEC = {
@@ -88,6 +92,8 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
     assert summary["n_buckets"] == 4
     assert len(summary["processed_buckets"]) == 4
     assert summary["remaining_buckets"] == []
+    # a value passed with --conf wins over the CLI's one-per-core rule
+    assert "shuffle.partitions=4" in proc.stdout.splitlines()
 
     # sinks: violations parquet + ledger parquet exist and are readable
     violations = spark.read.parquet(f"{out}/violations")
