@@ -15,28 +15,33 @@ fixed precision in BOTH engines.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from json_schema_rs_spark import ValidationEngine
 from json_schema_rs_spark.functions.exprs import arrow_local_df
 from json_schema_rs_spark.operators import (
-    decontam, dedup, multimodal, packing, prep, sampling, similarity,
-    stats, textstats)
-from json_schema_rs_spark.operators.json_mode import (
-    json_key_profile, spec_from_json_profile, validate_json_column)
-from json_schema_rs_spark.operators.table_checks import (
-    monotonic_ts_violations,
-    referential_violations,
-    turn_gap_violations,
-    uniqueness_violations,
-)
+    decontam, dedup, expectations, json_mode, multimodal, packing, prep,
+    runner, sampling, similarity, stats, table_checks, temporal, textstats)
+from json_schema_rs_spark.plans import infer
+from json_schema_rs_spark.sources import jsonl
+from json_schema_rs_spark.streaming import validate_stream
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _violations(spark: SparkSession, sf_dir: str, table: str, spec: dict,
+                key_cols: tuple[str, ...], **kw) -> DataFrame:
+    """Row-check violations of ``spec`` over one table."""
+    return ValidationEngine(spec, key_cols=key_cols, **kw) \
+        .validate(_t(spark, sf_dir, table)).violations
 
 
 # ---------------------------------------------------------------------------
@@ -57,6 +62,8 @@ FLAGSHIP_SPEC = {
 _ROLE_MAP = ("CASE event_type WHEN 'click' THEN 'user' "
              "WHEN 'view' THEN 'assistant' WHEN 'signup' THEN 'system' "
              "WHEN 'purchase' THEN 'tool' ELSE 'narrator' END")
+_TOOL_MAP = ("CASE WHEN event_type = 'view' AND event_id % 3 = 0 "
+             "THEN 'browse' ELSE NULL END")
 
 
 def _transcripts_from_events(events: DataFrame) -> DataFrame:
@@ -68,7 +75,6 @@ def _transcripts_from_events(events: DataFrame) -> DataFrame:
     are structurally impossible for ANY events data — every data-dependent
     flagship branch (NotInEnum, TooShort, TooLong, MissingRequired) is
     modeled in _FLAGSHIP_ORACLE."""
-    from pyspark.sql import Window
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return events.select(
         F.col("user_id").cast("string").alias("conv_id"),
@@ -80,14 +86,37 @@ def _transcripts_from_events(events: DataFrame) -> DataFrame:
     )
 
 
+def _transcripts_with_tools(events: DataFrame) -> DataFrame:
+    """Flagship transcript view plus a deterministic tool column."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return events.select(
+        F.col("user_id").cast("string").alias("conv_id"),
+        (F.row_number().over(w) - 1).alias("turn_idx"),
+        F.expr(_ROLE_MAP).alias("role"),
+        F.col("props").alias("text"),
+        F.expr(_TOOL_MAP).alias("tool"),
+        F.col("ts"),
+    )
+
+
+# DuckDB twin of the transcript view (conv_id, turn_idx, role, text,
+# tool, ts); every transcript-shaped oracle reads it
+_ORACLE_TX_TOOLS = f"""
+  SELECT CAST(user_id AS VARCHAR) AS conv_id,
+         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
+         {_ROLE_MAP} AS role, props AS text, {_TOOL_MAP} AS tool, ts
+  FROM events
+"""
+
+
 def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     tx = _transcripts_from_events(_t(spark, sf_dir, "events"))
     engine = ValidationEngine(FLAGSHIP_SPEC, key_cols=("conv_id", "turn_idx"))
     row_v = engine.validate(tx).violations
     table_v = (
-        uniqueness_violations(tx, ("conv_id", "turn_idx"))
-        .unionByName(turn_gap_violations(tx))
-        .unionByName(monotonic_ts_violations(tx))
+        table_checks.uniqueness_violations(tx, ("conv_id", "turn_idx"))
+        .unionByName(table_checks.turn_gap_violations(tx))
+        .unionByName(table_checks.monotonic_ts_violations(tx))
         .select("conv_id", F.col("turn_idx").cast("int").alias("turn_idx"),
                 "instance_path", "code", "message")
     )
@@ -100,11 +129,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 _FLAGSHIP_ORACLE = f"""
-WITH tx AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
-         {_ROLE_MAP} AS role, props AS text
-  FROM events)
+WITH tx AS ({_ORACLE_TX_TOOLS})
 SELECT conv_id, turn_idx, '/role' AS instance_path, 'NotInEnum' AS code,
        '/role: value "' || role || '" not in enum (allowed: "system", "user", "assistant", "tool")' AS message
 FROM tx WHERE role NOT IN ('system','user','assistant','tool')
@@ -124,6 +149,232 @@ UNION ALL
 SELECT conv_id, turn_idx, '/conv_id', 'MissingRequired',
        '/conv_id: missing required property "conv_id"'
 FROM tx WHERE conv_id IS NULL
+"""
+
+
+# ---------------------------------------------------------------------------
+# Shared oracle CTEs: each derivation the DuckDB twins repeat is written
+# once here. Only oracles read them, never a Spark thunk, so every oracle
+# stays independent of the code it checks.
+# ---------------------------------------------------------------------------
+
+# ``conv(conv_id, n_turns, text)``: each transcript rendered the way
+# packing.render_conversations renders it
+_ORACLE_RENDERED = f"""tx AS ({_ORACLE_TX_TOOLS}),
+conv AS (SELECT conv_id, CAST(count(*) AS INT) AS n_turns,
+                string_agg('<|' || coalesce(role, 'unknown') || '|>'
+                           || chr(10) || coalesce(text, ''), chr(10)
+                           ORDER BY coalesce(turn_idx, -2147483648),
+                                    coalesce(role, 'unknown'),
+                                    coalesce(text, '')) AS text
+         FROM tx GROUP BY conv_id)"""
+
+# ``r(doc_id, text)``: the rendered corpus salted with a near-identical
+# variant of every conversation, as in _conv_fuzzy_corpus
+_ORACLE_CONV_FUZZY_CORPUS = f"""{_ORACLE_RENDERED},
+r AS (SELECT conv_id AS doc_id, text FROM conv
+      UNION ALL
+      SELECT conv_id || '~v', text || ' v2' FROM conv)"""
+
+
+def _oracle_shingles(src: str) -> str:
+    """``sh(doc_id, s)``: the distinct word 3-grams of every text of the
+    relation ``src(doc_id, text)``."""
+    return f"""w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM {src}),
+sh AS (SELECT doc_id,
+              list_distinct([concat_ws(' ', ws[i], ws[i+1], ws[i+2])
+                             for i in range(1, len(ws) - 1)]) AS s
+       FROM w)"""
+
+
+def _oracle_overlap(src: str) -> str:
+    """``p(doc_a, doc_b, inter)``: the shared 3-gram count of every doc
+    pair (doc_a < doc_b) of ``src`` that shares one; ``sz(doc_id, n)``:
+    each doc's 3-gram set size."""
+    return f"""{_oracle_shingles(src)},
+ex AS (SELECT doc_id, unnest(s) AS sg FROM sh),
+p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+      FROM ex a JOIN ex b ON a.sg = b.sg AND a.doc_id < b.doc_id
+      GROUP BY 1, 2),
+sz AS (SELECT doc_id, len(s) AS n FROM sh)"""
+
+
+# ``g(doc_id, group_id)``: the connected components of the pair relation
+# ``pr(doc_a, doc_b)``, each labelled by its least id (needs WITH
+# RECURSIVE)
+_ORACLE_COMPONENTS = """ed AS (SELECT doc_a AS a, doc_b AS b FROM pr
+       UNION SELECT doc_b, doc_a FROM pr),
+reach(n, m) AS (
+    SELECT a, a FROM (SELECT DISTINCT a FROM ed) t
+    UNION
+    SELECT rr.n, ed.b FROM reach rr JOIN ed ON rr.m = ed.a),
+g AS (SELECT n AS doc_id, min(m) AS group_id FROM reach GROUP BY n)"""
+
+
+def _oracle_dup_groups(src: str) -> str:
+    """``g(doc_id, group_id)``: the near-duplicate groups of ``src`` —
+    pairs at 3-gram Jaccard >= 0.8, closed transitively (needs WITH
+    RECURSIVE)."""
+    return f"""{_oracle_overlap(src)},
+pr AS (SELECT doc_a, doc_b
+       FROM p JOIN sz sa ON p.doc_a = sa.doc_id
+              JOIN sz sb ON p.doc_b = sb.doc_id
+       WHERE inter::DOUBLE / (sa.n + sb.n - inter) >= 0.8),
+{_ORACLE_COMPONENTS}"""
+
+
+# ``asg(vec_id, bucket_id)``: each embedding of ``e(vec_id, v)`` assigned
+# to its most cosine-similar fixed IVF centroid of ``cen(cid, cv)`` (the
+# 16 lowest-id vectors), ties to the lower id
+_ORACLE_IVF_ASSIGN = """\
+e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
+      FROM embeddings),
+cen AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 16),
+sc AS (SELECT e.vec_id, cen.cid,
+              list_dot_product(e.v, cen.cv) /
+              (sqrt(list_dot_product(e.v, e.v)) *
+               sqrt(list_dot_product(cen.cv, cen.cv))) AS s
+       FROM e CROSS JOIN cen),
+asg AS (SELECT vec_id, cid AS bucket_id FROM (
+          SELECT sc.*, row_number() OVER (PARTITION BY vec_id
+                                          ORDER BY s DESC, cid) AS rn
+          FROM sc) WHERE rn = 1)"""
+
+
+# textstats.quality_score's inputs from ``text``: chars ``nc``, words
+# ``nw``, punctuation marks ``np`` and stopwords ``ns``, all DOUBLE
+_ORACLE_QUALITY_FEATURES = """length(text)::DOUBLE AS nc,
+  len(string_split(text, ' '))::DOUBLE AS nw,
+  len(regexp_extract_all(text, '[.,!?;:]'))::DOUBLE AS np,
+  len(list_filter(string_split(text, ' '),
+      w -> list_contains(['the','a','of','and','to','in','is','it','that','for'], w)))::DOUBLE AS ns"""
+
+# textstats.quality_score from those inputs, rounded to 6 places
+_ORACLE_QUALITY_SCORE = """round(0.4 * least(nc / 500.0, 1.0) + 0.3 * least(ns / nw * 5, 1.0)
+      + 0.2 * least(((nc - (nw - 1)) / nw) / 8, 1.0)
+      + 0.1 * (1.0 - least(coalesce(np / nullif(nc, 0), 0.0) * 10, 1.0)), 6)"""
+
+
+def _oracle_quality(src: str) -> str:
+    """``q(doc_id, quality)``: the quality score of every text of the
+    relation ``src(doc_id, text)``."""
+    return f"""qb AS (SELECT doc_id, {_ORACLE_QUALITY_FEATURES} FROM {src}),
+q AS (SELECT doc_id, {_ORACLE_QUALITY_SCORE} AS quality FROM qb)"""
+
+
+# ``m(v, ca, cb)``: how often each event ``value`` occurs in the even
+# (``a``) and the odd (``b``) event_id half; ``na``/``nb``: half sizes
+_ORACLE_VALUE_HALVES = """\
+a AS (SELECT value::DOUBLE AS v FROM events WHERE event_id % 2 = 0 AND value IS NOT NULL),
+b AS (SELECT value::DOUBLE AS v FROM events WHERE event_id % 2 = 1 AND value IS NOT NULL),
+na AS (SELECT count(*)::DOUBLE AS n FROM a), nb AS (SELECT count(*)::DOUBLE AS n FROM b),
+ga AS (SELECT v, count(*) AS ca FROM a GROUP BY v),
+gb AS (SELECT v, count(*) AS cb FROM b GROUP BY v),
+m AS (SELECT coalesce(ga.v, gb.v) AS v, coalesce(ca, 0) AS ca, coalesce(cb, 0) AS cb
+      FROM ga FULL OUTER JOIN gb ON ga.v = gb.v)"""
+
+
+def _oracle_dsir_weights(key: str) -> str:
+    """``rg(key, b)``: the hashed word bucket (of 512) of every word of
+    every ``raw(key, t)`` text; ``wt(b, w)``: each bucket's DSIR
+    log-weight of target ``tgt(t)`` over ``raw``, in micro-units."""
+    return f"""rg AS (SELECT {key},
+         ('0x' || substr(md5(g), 1, 8))::BIGINT % 512 AS b
+       FROM (SELECT {key},
+               unnest(list_filter(string_split(t, ' '), x -> x <> '')) AS g
+             FROM raw)),
+tg AS (SELECT ('0x' || substr(md5(g), 1, 8))::BIGINT % 512 AS b
+       FROM (SELECT
+               unnest(list_filter(string_split(t, ' '), x -> x <> '')) AS g
+             FROM tgt)),
+rc AS (SELECT b, count(*) AS c FROM rg GROUP BY b),
+tc AS (SELECT b, count(*) AS c FROM tg GROUP BY b),
+tot AS (SELECT (SELECT count(*) FROM rg) AS nr,
+               (SELECT count(*) FROM tg) AS nt),
+wt AS (SELECT rc.b,
+         CAST(floor(ln((coalesce(tc.c, 0) + 1) / (tot.nt + 512.0)) * 1e6)
+            - floor(ln((rc.c + 1) / (tot.nr + 512.0)) * 1e6) AS BIGINT)
+           AS w
+       FROM rc LEFT JOIN tc ON rc.b = tc.b, tot)"""
+
+
+# ``code(vec_id, s, cid)``: each vector's nearest PQ codebook entry per
+# subspace, from the squared distances ``dist(vec_id, s, cid, d2)``;
+# ``q(qid, qv)``: the 8 query vectors
+_ORACLE_PQ_CODE = """code AS (SELECT vec_id, s, cid FROM (
+           SELECT vec_id, s, cid,
+                  row_number() OVER (PARTITION BY vec_id, s
+                                     ORDER BY d2, cid) AS rn
+           FROM dist) WHERE rn = 1),
+q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 8)"""
+
+# ``parts(qid, vec_id, p0..p3)``: the per-subspace ADC lookups of every
+# coded vector for every query, over the codebook ``pcen(cid, cv)``
+_ORACLE_PQ_PARTS = """lut AS (SELECT q.qid, sub.s, pcen.cid,
+          list_sum(list_transform(range(1, 17), i ->
+            qv[sub.s * 16 + i] * cv[sub.s * 16 + i])) AS pd
+        FROM q, sub, pcen),
+parts AS (SELECT l.qid, co.vec_id,
+            max(CASE WHEN co.s = 0 THEN l.pd END) AS p0,
+            max(CASE WHEN co.s = 1 THEN l.pd END) AS p1,
+            max(CASE WHEN co.s = 2 THEN l.pd END) AS p2,
+            max(CASE WHEN co.s = 3 THEN l.pd END) AS p3
+          FROM code co JOIN lut l ON l.s = co.s AND l.cid = co.cid
+          GROUP BY l.qid, co.vec_id)"""
+
+# the top 10 of ``sc(query_id, neighbor_id, adc_sim)`` per query
+_ORACLE_ADC_TOP10 = """r AS (SELECT *, row_number() OVER (PARTITION BY query_id
+                                   ORDER BY adc_sim DESC, neighbor_id)
+        AS rank
+      FROM sc)
+SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, adc_sim
+FROM r WHERE rank <= 10"""
+
+# IVF-PQ coarse step: ``asg(vec_id, bucket_id)`` over the 64-dim vectors
+# ``e(vec_id, v)`` and the fixed centroids ``icen(icid, icv)``
+_ORACLE_IVFPQ_COARSE = """\
+e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
+           FROM embeddings
+           WHERE embedding IS NOT NULL AND len(embedding) = 64),
+icen AS (SELECT vec_id AS icid, v AS icv FROM e ORDER BY vec_id LIMIT 16),
+bsc AS (SELECT e.vec_id, icen.icid,
+          list_dot_product(e.v, icen.icv) /
+          (sqrt(list_dot_product(e.v, e.v)) *
+           sqrt(list_dot_product(icen.icv, icen.icv))) AS s
+        FROM e CROSS JOIN icen),
+asg AS (SELECT vec_id, icid AS bucket_id FROM (
+          SELECT bsc.*, row_number() OVER (PARTITION BY vec_id
+                                           ORDER BY s DESC, icid) AS rn
+          FROM bsc) WHERE rn = 1)"""
+
+# ``probes(qid, bucket_id)``: the 4 buckets each query probes
+_ORACLE_IVFPQ_PROBES = """ps AS (SELECT q.qid, icen.icid,
+         list_dot_product(q.qv, icen.icv) /
+         (sqrt(list_dot_product(q.qv, q.qv)) *
+          sqrt(list_dot_product(icen.icv, icen.icv))) AS s
+       FROM q CROSS JOIN icen),
+probes AS (SELECT qid, icid AS bucket_id FROM (
+             SELECT ps.*, row_number() OVER (PARTITION BY qid
+                                             ORDER BY s DESC, icid) AS rn
+             FROM ps WHERE s IS NOT NULL) WHERE rn <= 4)"""
+
+
+def _oracle_recall(approx: str) -> str:
+    """Recall@10 of the approximate top-k oracle ``approx`` against the
+    exact cosine top-k."""
+    return f"""
+WITH ap AS (SELECT query_id, neighbor_id FROM ({approx})),
+ex AS (SELECT query_id, neighbor_id FROM ({_SQL_A_COSINE}))
+SELECT (SELECT count(DISTINCT query_id) FROM ex) AS n_queries,
+       10 AS k,
+       (SELECT count(*) FROM ex) AS n_exact,
+       (SELECT count(*) FROM ap SEMI JOIN ex
+          ON ap.query_id = ex.query_id
+         AND ap.neighbor_id = ex.neighbor_id) AS n_hits,
+       round((SELECT count(*) FROM ap SEMI JOIN ex
+                ON ap.query_id = ex.query_id
+               AND ap.neighbor_id = ex.neighbor_id)
+             / CAST((SELECT count(*) FROM ex) AS DOUBLE), 6) AS recall
 """
 
 
@@ -149,11 +400,7 @@ def _q_v_clean_route(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_V_CLEAN_ROUTE = f"""
-WITH tx AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
-         {_ROLE_MAP} AS role, props AS text
-  FROM events)
+WITH tx AS ({_ORACLE_TX_TOOLS})
 SELECT conv_id, turn_idx, role FROM tx
 WHERE conv_id IS NOT NULL AND text IS NOT NULL
   AND role IN ('system','user','assistant','tool')
@@ -169,8 +416,7 @@ def _q_v_enum(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = {"type": "object", "properties": {
         "event_type": {"type": "string",
                        "enum": ["click", "view", "signup", "purchase"]}}}
-    return ValidationEngine(spec, key_cols=("event_id",)) \
-        .validate(_t(spark, sf_dir, "events")).violations
+    return _violations(spark, sf_dir, "events", spec, ("event_id",))
 
 
 _SQL_V_ENUM = """
@@ -192,8 +438,6 @@ def _q_v_jsonl_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # InvalidJson rows with a NULL key (they have none). The oracle
     # reproduces both sets from the events table alone — the JSON
     # round-trip must be value-exact.
-    import os
-    from json_schema_rs_spark.sources.jsonl import validate_jsonl
     ev = _t(spark, sf_dir, "events")
     path = f"/tmp/jsonl_entry_{os.path.basename(os.path.normpath(sf_dir))}"
     line = F.when(F.col("event_id") % 37 == 0, F.lit("{oops")) \
@@ -203,7 +447,7 @@ def _q_v_jsonl_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             "properties": {"event_type": {
                 "type": "string",
                 "enum": ["click", "view", "signup", "purchase"]}}}
-    report, line_v = validate_jsonl(
+    report, line_v = jsonl.validate_jsonl(
         spark, path, spec, "event_id bigint, event_type string",
         key_cols=("event_id",))
     return report.violations.unionByName(
@@ -228,8 +472,7 @@ FROM events WHERE event_id % 37 = 0
 
 def _q_v_const(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = {"type": "object", "properties": {"lang": {"const": "en"}}}
-    return ValidationEngine(spec, key_cols=("doc_id",)) \
-        .validate(_t(spark, sf_dir, "documents")).violations
+    return _violations(spark, sf_dir, "documents", spec, ("doc_id",))
 
 
 _SQL_V_CONST = """
@@ -243,8 +486,8 @@ def _q_v_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = {"type": "object", "properties": {
         "l_quantity": {"type": "number", "minimum": 5, "maximum": 45},
         "o_totalprice_unused": {"type": "number"}}}
-    return ValidationEngine(spec, key_cols=("l_orderkey", "l_linenumber")) \
-        .validate(_t(spark, sf_dir, "lineitem")).violations
+    return _violations(spark, sf_dir, "lineitem", spec,
+                       ("l_orderkey", "l_linenumber"))
 
 
 # l_quantity values are integral doubles -> Rust f64 Display drops ".0"
@@ -265,8 +508,7 @@ FROM lineitem WHERE l_quantity > 45
 def _q_v_bounds_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = {"type": "object", "properties": {
         "o_totalprice": {"type": "number", "maximum": 300000}}}
-    return ValidationEngine(spec, key_cols=("o_orderkey",)) \
-        .validate(_t(spark, sf_dir, "orders")).violations
+    return _violations(spark, sf_dir, "orders", spec, ("o_orderkey",))
 
 
 _SQL_V_BOUNDS_FRAC = """
@@ -287,9 +529,8 @@ def _q_v_ext_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = {"type": "object", "properties": {
         "l_quantity": {"type": "number", "multipleOf": 5,
                        "exclusiveMinimum": 2, "exclusiveMaximum": 48}}}
-    return ValidationEngine(spec, key_cols=("l_orderkey", "l_linenumber"),
-                            extensions=True) \
-        .validate(_t(spark, sf_dir, "lineitem")).violations
+    return _violations(spark, sf_dir, "lineitem", spec,
+                       ("l_orderkey", "l_linenumber"), extensions=True)
 
 
 # l_quantity values are integral doubles -> Rust f64 Display drops ".0"
@@ -330,9 +571,8 @@ def _q_v_ext_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_tax": {"$dynamicRef": "#tax"},
         },
     }
-    return ValidationEngine(spec, key_cols=("l_orderkey", "l_linenumber"),
-                            extensions=True) \
-        .validate(_t(spark, sf_dir, "lineitem")).violations
+    return _violations(spark, sf_dir, "lineitem", spec,
+                       ("l_orderkey", "l_linenumber"), extensions=True)
 
 
 # l_quantity is an integral double (Rust Display drops ".0"); l_tax is a
@@ -377,8 +617,7 @@ def _q_v_unevaluated(spark: SparkSession, sf_dir: str) -> DataFrame:
                             extensions=True).validate(tx).violations
 
 
-def _sql_v_unevaluated() -> str:
-    return f"""
+_SQL_V_UNEVALUATED = f"""
 WITH tx AS ({_ORACLE_TX_TOOLS})
 SELECT conv_id, turn_idx, '/tool' AS instance_path,
        'DisallowedUnevaluatedProperty' AS code,
@@ -454,8 +693,7 @@ def _q_v_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
                             extensions=True).validate(tx).violations
 
 
-def _sql_v_conditional() -> str:
-    return f"""
+_SQL_V_CONDITIONAL = f"""
 WITH tx AS ({_ORACLE_TX_TOOLS})
 SELECT conv_id, turn_idx, '' AS instance_path,
        'NotSchemaMatched' AS code,
@@ -497,8 +735,7 @@ def _q_v_ext_object(spark: SparkSession, sf_dir: str) -> DataFrame:
                             extensions=True).validate(tx).violations
 
 
-def _sql_v_ext_object() -> str:
-    return f"""
+_SQL_V_EXT_OBJECT = f"""
 WITH tx AS ({_ORACLE_TX_TOOLS})
 SELECT conv_id, turn_idx, '/text' AS instance_path, 'TooShort' AS code,
        '/text: string has ' || CAST(length(text) AS VARCHAR) ||
@@ -526,9 +763,8 @@ def _q_v_content_json(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "type": "object", "required": ["k"],
                       "properties": {"k": {"type": "integer",
                                            "maximum": 80}}}}}}
-    return ValidationEngine(spec, key_cols=("event_id",),
-                            extensions=True) \
-        .validate(_t(spark, sf_dir, "events")).violations
+    return _violations(spark, sf_dir, "events", spec, ("event_id",),
+                       extensions=True)
 
 
 _SQL_V_CONTENT_JSON = """
@@ -544,8 +780,7 @@ WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) > 80
 def _q_v_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = {"type": "object", "properties": {
         "text": {"type": "string", "minLength": 50, "maxLength": 600}}}
-    return ValidationEngine(spec, key_cols=("doc_id",)) \
-        .validate(_t(spark, sf_dir, "documents")).violations
+    return _violations(spark, sf_dir, "documents", spec, ("doc_id",))
 
 
 _SQL_V_LENGTH = """
@@ -564,8 +799,7 @@ FROM documents WHERE length(text) > 600
 def _q_v_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = {"type": "object", "properties": {
         "text": {"type": "string", "pattern": "(spark|window)"}}}
-    return ValidationEngine(spec, key_cols=("doc_id",)) \
-        .validate(_t(spark, sf_dir, "documents")).violations
+    return _violations(spark, sf_dir, "documents", spec, ("doc_id",))
 
 
 _SQL_V_PATTERN = """
@@ -584,8 +818,7 @@ def _q_v_pattern_hard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # \d. The compiled plan must translate, not pass through.
     spec = {"type": "object", "properties": {
         "props": {"type": "string", "pattern": '{"k": \\d{2}}$'}}}
-    return ValidationEngine(spec, key_cols=("event_id",)) \
-        .validate(_t(spark, sf_dir, "events")).violations
+    return _violations(spark, sf_dir, "events", spec, ("event_id",))
 
 
 # DuckDB RE2: `$` is already absolute end-of-text, `\{` is the literal;
@@ -604,8 +837,7 @@ WHERE props IS NOT NULL
 def _q_v_uuid(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = {"type": "object", "properties": {
         "source": {"type": "string", "format": "uuid"}}}
-    return ValidationEngine(spec, key_cols=("doc_id",)) \
-        .validate(_t(spark, sf_dir, "documents")).violations
+    return _violations(spark, sf_dir, "documents", spec, ("doc_id",))
 
 
 _SQL_V_UUID = """
@@ -621,8 +853,7 @@ def _q_v_required(spark: SparkSession, sf_dir: str) -> DataFrame:
     # o_clerk is not a column of the table: absent from every row-object,
     # so MissingRequired fires for all rows (validator/mod.rs:182-191)
     spec = {"type": "object", "required": ["o_orderkey", "o_clerk"]}
-    return ValidationEngine(spec, key_cols=("o_orderkey",)) \
-        .validate(_t(spark, sf_dir, "orders")).violations
+    return _violations(spark, sf_dir, "orders", spec, ("o_orderkey",))
 
 
 _SQL_V_REQUIRED = """
@@ -637,8 +868,7 @@ def _q_v_anyof(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"properties": {"value": {"type": "number", "maximum": 100}}},
         {"properties": {"event_type": {"const": "error"}}},
     ]}
-    return ValidationEngine(spec, key_cols=("event_id",)) \
-        .validate(_t(spark, sf_dir, "events")).violations
+    return _violations(spark, sf_dir, "events", spec, ("event_id",))
 
 
 _SQL_V_ANYOF = """
@@ -655,8 +885,7 @@ def _q_v_oneof_none(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"properties": {"value": {"type": "number", "maximum": 200}}},
         {"properties": {"value": {"type": "number", "minimum": 300}}},
     ]}
-    return ValidationEngine(spec, key_cols=("event_id",)) \
-        .validate(_t(spark, sf_dir, "events")).violations
+    return _violations(spark, sf_dir, "events", spec, ("event_id",))
 
 
 _SQL_V_ONEOF_NONE = """
@@ -671,8 +900,7 @@ def _q_v_oneof_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"properties": {"value": {"type": "number", "maximum": 300}}},
         {"properties": {"value": {"type": "number", "minimum": 200}}},
     ]}
-    return ValidationEngine(spec, key_cols=("event_id",)) \
-        .validate(_t(spark, sf_dir, "events")).violations
+    return _violations(spark, sf_dir, "events", spec, ("event_id",))
 
 
 _SQL_V_ONEOF_MULTI = """
@@ -688,8 +916,8 @@ def _q_v_json_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = {"type": "object", "required": ["k"],
             "properties": {"k": {"type": "integer",
                                  "minimum": 10, "maximum": 80}}}
-    return validate_json_column(_t(spark, sf_dir, "events"), spec, "props",
-                                key_cols=("event_id",))
+    return json_mode.validate_json_column(
+        _t(spark, sf_dir, "events"), spec, "props", key_cols=("event_id",))
 
 
 _SQL_V_JSON_PAYLOAD = """
@@ -733,14 +961,12 @@ def _q_t_key_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cross-table key sync: both engines desync documents vs embeddings
     # the same way (every 41st doc unembedded, every 43rd embedding
     # orphaned to a shifted id) — the multimodal-pipeline health number
-    from json_schema_rs_spark.operators.table_checks import (
-        key_sync_stats)
     docs = _t(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 41 != 0)
     emb = _t(spark, sf_dir, "embeddings").select(
         F.when(F.col("vec_id") % 43 == 0, F.col("vec_id") + 1000000)
          .otherwise(F.col("vec_id")).alias("vec_id"))
-    return key_sync_stats(docs, emb, "doc_id", "vec_id")
+    return table_checks.key_sync_stats(docs, emb, "doc_id", "vec_id")
 
 
 _SQL_T_KEY_SYNC = """
@@ -771,9 +997,7 @@ FROM j
 def _q_t_ref_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # referential HEALTH dashboard (the check says which rows violate;
     # this is the SLO number): one zero-shuffle conditional-sum agg
-    from json_schema_rs_spark.operators.table_checks import (
-        referential_coverage)
-    return referential_coverage(
+    return table_checks.referential_coverage(
         _t(spark, sf_dir, "events"), "event_type",
         ["click", "view", "signup", "error"])
 
@@ -797,20 +1021,12 @@ FROM a
 def _q_t_role_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dialogue-protocol mining: top role trigrams — the DISCOVERY
     # complement of the role-transition DFA check
-    from json_schema_rs_spark.operators.table_checks import (
-        role_pattern_stats)
     tx = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    return role_pattern_stats(tx, n=3, k=25)
+    return table_checks.role_pattern_stats(tx, n=3, k=25)
 
 
 _SQL_T_ROLE_PATTERNS = f"""
-WITH tx AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id
-                                 ORDER BY ts, event_id) - 1 AS INT)
-           AS turn_idx,
-         {_ROLE_MAP} AS role
-  FROM events),
+WITH tx AS ({_ORACLE_TX_TOOLS}),
 g AS (SELECT conv_id,
         concat_ws('>', lag(coalesce(role, '?'), 2) OVER w,
                        lag(coalesce(role, '?'), 1) OVER w,
@@ -833,9 +1049,7 @@ def _q_t_fd_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # determinant groups surface with two concrete witnesses
     docs = _t(spark, sf_dir, "documents")
     script = F.when(F.col("doc_id") % 401 == 0, F.lit("CORRUPT"))               .otherwise(F.concat(F.lit("script-"), F.col("lang")))
-    from json_schema_rs_spark.operators.table_checks import (
-        functional_dependency_violations)
-    return functional_dependency_violations(
+    return table_checks.functional_dependency_violations(
         docs.select("lang", script.alias("script")), ["lang"], "script")
 
 
@@ -856,9 +1070,7 @@ def _q_t_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ingest-freshness check at a FIXED reference instant (determinism
     # rule: never wall clock); 30-min staleness bound splits the five
     # event feeds into both polarities at sf0.01
-    from json_schema_rs_spark.operators.table_checks import (
-        freshness_stats)
-    return freshness_stats(
+    return table_checks.freshness_stats(
         _t(spark, sf_dir, "events"), "ts",
         as_of="2024-01-31 00:00:00", max_age_seconds=1800,
         group_col="event_type")
@@ -886,9 +1098,7 @@ def _q_t_dup_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     conflicts = ev.filter(F.col("event_id") % 89 == 0).select(
         "event_id", F.concat(F.col("props"), F.lit("X")).alias("props"))
     dirty = ev.unionByName(retries).unionByName(conflicts)
-    from json_schema_rs_spark.operators.table_checks import (
-        duplicate_conflict_stats)
-    return duplicate_conflict_stats(
+    return table_checks.duplicate_conflict_stats(
         dirty, keys=("event_id",), payload_col="props")
 
 
@@ -978,7 +1188,7 @@ def _q_s_json_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     # variant_explode generator + vocab-sized hash agg, zero Python
     ev = _t(spark, sf_dir, "events").select(
         _jkp_payload_col().alias("payload"))
-    return json_key_profile(ev, "payload")
+    return json_mode.json_key_profile(ev, "payload")
 
 
 _SQL_S_JSON_KEYS = """
@@ -1032,7 +1242,7 @@ def _q_v_json_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      F.lit("}")))
         .otherwise(F.concat(F.lit('{"k": '), sc(eid % 100),
                             F.lit(', "flag": true}'))))
-    spec = spec_from_json_profile(json_key_profile(
+    spec = json_mode.spec_from_json_profile(json_mode.json_key_profile(
         ev.select("event_id", pay_a.alias("payload")), "payload"))
     pay_b = (
         F.when(eid % 5 == 0, F.concat(F.lit('{"k": '), sc(eid % 100),
@@ -1044,7 +1254,7 @@ def _q_v_json_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      F.lit(', "flag": 1}')))
         .otherwise(F.concat(F.lit('{"k": '), sc(eid % 100),
                             F.lit(', "extra": 9}'))))
-    return validate_json_column(
+    return json_mode.validate_json_column(
         ev.select("event_id", pay_b.alias("payload")), spec, "payload",
         key_cols=("event_id",))
 
@@ -1073,8 +1283,7 @@ def _q_v_array_items(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "items": {"type": "number",
                                 "minimum": -2, "maximum": 2}},
         "label": {"type": "integer", "minimum": 0, "maximum": 7}}}
-    return ValidationEngine(spec, key_cols=("vec_id",)) \
-        .validate(_t(spark, sf_dir, "embeddings")).violations
+    return _violations(spark, sf_dir, "embeddings", spec, ("vec_id",))
 
 
 _SQL_V_ARRAY_ITEMS = """
@@ -1117,8 +1326,7 @@ def _q_v_ref_allof(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source": {"$ref": "#/$defs/short3"},
         },
     }
-    return ValidationEngine(spec, key_cols=("doc_id",)) \
-        .validate(_t(spark, sf_dir, "documents")).violations
+    return _violations(spark, sf_dir, "documents", spec, ("doc_id",))
 
 
 _SQL_V_REF_ALLOF = """
@@ -1137,9 +1345,6 @@ FROM documents WHERE source IS NOT NULL AND length(source) > 3
 def _q_v_enum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Structured Streaming over the same file + same compiled plan must
     # byte-match the batch oracle (shares _SQL_V_ENUM)
-    from json_schema_rs_spark.streaming.validate_stream import (
-        run_file_stream_once,
-    )
     spec = {"type": "object", "properties": {
         "event_type": {"type": "string",
                        "enum": ["click", "view", "signup", "purchase"]}}}
@@ -1147,14 +1352,16 @@ def _q_v_enum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = ("event_id bigint, ts timestamp, user_id bigint, "
               "event_type string, value double, props string")
     # the file stream source wants a directory; expose the single parquet
-    # file through one
-    import os
-    import tempfile
+    # file through one. The result reads the memory sink, not the
+    # directory, so the directory goes once the stream has run.
     d = tempfile.mkdtemp(prefix="v_enum_stream_")
-    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"),
-               os.path.join(d, "events.parquet"))
-    return run_file_stream_once(spark, engine, d, schema,
-                                query_name="v_enum_stream_sink")
+    try:
+        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"),
+                   os.path.join(d, "events.parquet"))
+        return validate_stream.run_file_stream_once(
+            spark, engine, d, schema, query_name="v_enum_stream_sink")
+    finally:
+        shutil.rmtree(d)
 
 
 # --- error-variant coverage: every reference error code must fire in at
@@ -1171,8 +1378,7 @@ def _q_v_expected_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id": {"type": "array"},        # bigint col  -> ExpectedArray
         "props": {"type": "object"},         # string col  -> ExpectedObject
     }}
-    return ValidationEngine(spec, key_cols=("event_id",)) \
-        .validate(_t(spark, sf_dir, "events")).violations
+    return _violations(spark, sf_dir, "events", spec, ("event_id",))
 
 
 _SQL_V_EXPECTED_TYPES = """
@@ -1242,8 +1448,7 @@ def _q_v_additional_forbid(spark: SparkSession, sf_dir: str) -> DataFrame:
             "properties": {"event_id": {}, "ts": {}, "user_id": {},
                            "event_type": {}},
             "additionalProperties": False}
-    return ValidationEngine(spec, key_cols=("event_id",)) \
-        .validate(_t(spark, sf_dir, "events")).violations
+    return _violations(spark, sf_dir, "events", spec, ("event_id",))
 
 
 _SQL_V_ADDITIONAL_FORBID = """
@@ -1264,8 +1469,7 @@ def _q_v_invalid_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = {"type": "object",
             "$defs": {"other": {"type": "string"}},
             "properties": {"lang": {"$ref": "#/$defs/nope"}}}
-    return ValidationEngine(spec, key_cols=("doc_id",)) \
-        .validate(_t(spark, sf_dir, "documents")).violations
+    return _violations(spark, sf_dir, "documents", spec, ("doc_id",))
 
 
 _SQL_V_INVALID_REF = """
@@ -1280,8 +1484,7 @@ def _q_v_invalid_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     # though Java/Python accept) -> InvalidPatternInSchema per string row
     spec = {"type": "object", "properties": {
         "text": {"type": "string", "pattern": "(?i)spark"}}}
-    return ValidationEngine(spec, key_cols=("doc_id",)) \
-        .validate(_t(spark, sf_dir, "documents")).violations
+    return _violations(spark, sf_dir, "documents", spec, ("doc_id",))
 
 
 _SQL_V_INVALID_PATTERN = """
@@ -1299,7 +1502,8 @@ def _q_v_invalid_json(spark: SparkSession, sf_dir: str) -> DataFrame:
         "props",
         F.when(F.col("event_id") % 5 == 0, F.concat(F.col("props"), F.lit("x")))
          .otherwise(F.col("props")))
-    return validate_json_column(ev, {}, "props", key_cols=("event_id",))
+    return json_mode.validate_json_column(ev, {}, "props",
+                                          key_cols=("event_id",))
 
 
 _SQL_V_INVALID_JSON = """
@@ -1316,7 +1520,8 @@ FROM events WHERE event_id % 5 = 0 AND props IS NOT NULL
 # ---------------------------------------------------------------------------
 
 def _q_t_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return uniqueness_violations(_t(spark, sf_dir, "orders"), ("o_custkey",))
+    return table_checks.uniqueness_violations(_t(spark, sf_dir, "orders"),
+                                              ("o_custkey",))
 
 
 _SQL_T_UNIQUE = """
@@ -1331,8 +1536,8 @@ def _q_t_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _t(spark, sf_dir, "events")
     vocab = arrow_local_df(
         spark, [("click",), ("view",), ("purchase",)], "event_type string")
-    return referential_violations(events, "event_type", vocab,
-                                  keys=("event_id",))
+    return table_checks.referential_violations(
+        events, "event_type", vocab, keys=("event_id",))
 
 
 _SQL_T_REFERENTIAL = """
@@ -1353,14 +1558,15 @@ def _q_t_referential_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _t(spark, sf_dir, "events")
     vocab = arrow_local_df(
         spark, [("click",), ("view",), ("purchase",)], "event_type string")
-    return referential_violations(events, "event_type", vocab,
-                                  keys=("event_id",), strategy="shuffle")
+    return table_checks.referential_violations(
+        events, "event_type", vocab, keys=("event_id",), strategy="shuffle")
 
 
 def _q_t_gapfree(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", (F.col("l_linenumber") - 1).alias("turn_idx"))
-    return turn_gap_violations(li, conv_col="l_orderkey", idx_col="turn_idx")
+    return table_checks.turn_gap_violations(li, conv_col="l_orderkey",
+                                            idx_col="turn_idx")
 
 
 _SQL_T_GAPFREE = """
@@ -1380,7 +1586,7 @@ def _q_t_monotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # time-ordered by event_id in this dataset)
     ev = _t(spark, sf_dir, "events").select(
         "user_id", (-F.col("event_id")).alias("rev_id"), "ts")
-    return monotonic_ts_violations(
+    return table_checks.monotonic_ts_violations(
         ev, conv_col="user_id", idx_col="rev_id", ts_col="ts")
 
 
@@ -1404,7 +1610,6 @@ def _q_t_reindex(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ts wins) and renumber every conversation densely 0..n-1. The oracle
     # re-derives the corruption AND the repair, proving the surviving
     # rows, survivor choice, and new indices are cross-engine exact.
-    from json_schema_rs_spark.operators.table_checks import reindex_turns
     tx = _transcripts_from_events(_t(spark, sf_dir, "events")).drop("tool")
     hx = F.md5(F.concat(F.col("conv_id"), F.lit("#reidx")))
     c1, c2 = F.substring(hx, 1, 1), F.substring(hx, 2, 1)
@@ -1421,7 +1626,7 @@ def _q_t_reindex(spark: SparkSession, sf_dir: str) -> DataFrame:
                .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 SECOND")))
     allrows = (corr.unionByName(dup)
                    .select("conv_id", "turn_idx", "role", "text", "ts"))
-    out = reindex_turns(allrows, order_cols=("ts", "text"))
+    out = table_checks.reindex_turns(allrows, order_cols=("ts", "text"))
     return out.select(
         "conv_id", "turn_idx", "role", "text",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
@@ -1430,12 +1635,10 @@ def _q_t_reindex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_T_REINDEX = f"""
 WITH tx AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS o,
-         {_ROLE_MAP} AS role, props AS text, ts,
-         substr(md5(CAST(user_id AS VARCHAR) || '#reidx'), 1, 1) AS c1,
-         substr(md5(CAST(user_id AS VARCHAR) || '#reidx'), 2, 1) AS c2
-  FROM events),
+  SELECT conv_id, turn_idx AS o, role, text, ts,
+         substr(md5(conv_id || '#reidx'), 1, 1) AS c1,
+         substr(md5(conv_id || '#reidx'), 2, 1) AS c2
+  FROM ({_ORACLE_TX_TOOLS})),
 corr AS (
   SELECT conv_id,
          CAST(CASE WHEN c1 < '5' THEN o * 3
@@ -1472,7 +1675,6 @@ def _q_t_repair_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-phase violation count by code — 'after' rows exist with
     # n=0 so the oracle checks the repair's effect positively instead
     # of comparing empty sets.
-    from json_schema_rs_spark.operators.table_checks import reindex_turns
     tx = _transcripts_from_events(_t(spark, sf_dir, "events")).drop("tool")
     hx = F.md5(F.concat(F.col("conv_id"), F.lit("#reidx")))
     c1, c2 = F.substring(hx, 1, 1), F.substring(hx, 2, 1)
@@ -1489,12 +1691,13 @@ def _q_t_repair_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
                .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 SECOND")))
     dirty = (corr.unionByName(dup)
                  .select("conv_id", "turn_idx", "role", "text", "ts"))
-    repaired = reindex_turns(dirty, order_cols=("ts", "text"))         .select("conv_id", "turn_idx")
+    repaired = table_checks.reindex_turns(
+        dirty, order_cols=("ts", "text")).select("conv_id", "turn_idx")
 
     def counts(df, phase):
-        v = (uniqueness_violations(df, ("conv_id", "turn_idx"))
+        v = (table_checks.uniqueness_violations(df, ("conv_id", "turn_idx"))
              .select("code")
-             .unionByName(turn_gap_violations(df).select("code")))
+             .unionByName(table_checks.turn_gap_violations(df).select("code")))
         base_codes = arrow_local_df(
             spark, [("DuplicateKey",), ("TurnGap",)], "code string")
         return (base_codes.join(
@@ -1509,12 +1712,10 @@ def _q_t_repair_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_T_REPAIR_VALIDATE = f"""
 WITH tx AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS o,
-         {_ROLE_MAP} AS role, props AS text, ts,
-         substr(md5(CAST(user_id AS VARCHAR) || '#reidx'), 1, 1) AS c1,
-         substr(md5(CAST(user_id AS VARCHAR) || '#reidx'), 2, 1) AS c2
-  FROM events),
+  SELECT conv_id, turn_idx AS o, role, text, ts,
+         substr(md5(conv_id || '#reidx'), 1, 1) AS c1,
+         substr(md5(conv_id || '#reidx'), 2, 1) AS c2
+  FROM ({_ORACLE_TX_TOOLS})),
 corr AS (
   SELECT conv_id,
          CAST(CASE WHEN c1 < '5' THEN o * 3
@@ -1568,7 +1769,6 @@ def _q_t_tree_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corruptions for md5-bucketed subsets) and emit the full tree
     # violation rows — forward/self parents, orphan references, and
     # root-cardinality breaks.
-    from json_schema_rs_spark.operators.table_checks import tree_violations
     tx = _transcripts_from_events(_t(spark, sf_dir, "events"))
     c1 = F.substring(F.md5(F.concat(F.col("conv_id"), F.lit("#tree"))), 1, 1)
     i = F.col("turn_idx")
@@ -1582,15 +1782,13 @@ def _q_t_tree_check(spark: SparkSession, sf_dir: str) -> DataFrame:
          .otherwise(i - 1)                              # valid chain
          .cast("int"))
     pt = tx.select("conv_id", "turn_idx", parent.alias("parent_idx"))
-    return tree_violations(pt)
+    return table_checks.tree_violations(pt)
 
 
 _SQL_T_TREE_CHECK = f"""
 WITH tx AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
-         substr(md5(CAST(user_id AS VARCHAR) || '#tree'), 1, 1) AS c1
-  FROM events),
+  SELECT conv_id, turn_idx, substr(md5(conv_id || '#tree'), 1, 1) AS c1
+  FROM ({_ORACLE_TX_TOOLS})),
 pt AS (
   SELECT conv_id, turn_idx,
          CAST(CASE WHEN turn_idx = 0 THEN
@@ -1632,8 +1830,6 @@ def _q_t_conv_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conversation-grain quality gate: md5-bucketed convs get a
     # stopword-rich suffix (mean quality ~0.50) vs junk suffix (~0.13);
     # threshold 0.3 splits them — keep/drop verdicts both present.
-    from json_schema_rs_spark.operators.textstats import (
-        conversation_quality)
     tx = _transcripts_from_events(_t(spark, sf_dir, "events"))
     suffix = F.when(
         F.substring(F.md5(F.concat(F.col("conv_id"), F.lit("#cq"))),
@@ -1642,7 +1838,7 @@ def _q_t_conv_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.lit(" zz qq xx yy"))
     staged = tx.select("conv_id",
                        F.concat(F.col("text"), suffix).alias("text"))
-    return conversation_quality(staged, min_quality=0.3)
+    return textstats.conversation_quality(staged, min_quality=0.3)
 
 
 _SQL_T_CONV_QUALITY = f"""
@@ -1653,20 +1849,9 @@ WITH tx AS (
                         THEN ' the cat sat of the mat and it is that for'
                         ELSE ' zz qq xx yy' END) AS text
   FROM events),
-b AS (SELECT conv_id, length(text)::DOUBLE AS nc,
-        len(string_split(text, ' '))::DOUBLE AS nw,
-        len(regexp_extract_all(text, '[.,!?;:]'))::DOUBLE AS np,
-        len(list_filter(string_split(text, ' '),
-            w -> list_contains(['the','a','of','and','to','in','is',
-                                'it','that','for'], w)))::DOUBLE AS ns
-      FROM tx),
+b AS (SELECT conv_id, {_ORACLE_QUALITY_FEATURES} FROM tx),
 t AS (SELECT conv_id,
-        CAST(round(round(0.4 * least(nc / 500.0, 1.0)
-                         + 0.3 * least(ns / nw * 5, 1.0)
-                         + 0.2 * least(((nc - (nw - 1)) / nw) / 8, 1.0)
-                         + 0.1 * (1.0 - least(coalesce(np / nullif(nc, 0),
-                                                       0.0) * 10, 1.0)),
-                   6) * 1e6) AS BIGINT) AS qm
+        CAST(round({_ORACLE_QUALITY_SCORE} * 1e6) AS BIGINT) AS qm
       FROM b)
 SELECT conv_id, count(*) AS n_turns,
        floor(sum(qm) / count(*))::BIGINT::DOUBLE / 1e6 AS mean_quality,
@@ -1682,10 +1867,8 @@ def _q_t_coerce_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # synthetic role map) coerce to 'unknown'; output the per-role
     # count by coercion flag so the oracle checks both polarities and
     # the repaired vocabulary in one table.
-    from json_schema_rs_spark.operators.table_checks import (
-        coerce_vocabulary)
     tx = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    fixed = coerce_vocabulary(
+    fixed = table_checks.coerce_vocabulary(
         tx.select("conv_id", "turn_idx", "role"), "role",
         ["system", "user", "assistant", "tool"], fallback="unknown")
     return (fixed.groupBy("role", "was_coerced")
@@ -1715,8 +1898,6 @@ def _q_t_near_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (5 const + 1 varying) words J=5/7 fires, (2+2) J=1/3 silent,
     # (2+1) J=0.5 fires exactly AT the threshold (boundary pinned),
     # (1+3) J=1/7 silent — then emit NearDuplicateTurn violation rows.
-    from json_schema_rs_spark.operators.table_checks import (
-        near_retry_violations)
     tx = _transcripts_from_events(_t(spark, sf_dir, "events"))
     c1 = F.substring(F.md5(F.concat(F.col("conv_id"), F.lit("#retry"))),
                      1, 1)
@@ -1736,15 +1917,11 @@ def _q_t_near_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
              .when(c1 < "c", F.concat_ws(" ", cw(0), cw(1), vw(0)))
              .otherwise(F.concat_ws(" ", cw(0), vw(0), vw(1), vw(2))))
     staged = tx.select("conv_id", "turn_idx", "role", text.alias("text"))
-    return near_retry_violations(staged)
+    return table_checks.near_retry_violations(staged)
 
 
 _SQL_T_NEAR_RETRY = f"""
-WITH tx AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
-         {_ROLE_MAP} AS role
-  FROM events),
+WITH tx AS ({_ORACLE_TX_TOOLS}),
 b AS (
   SELECT conv_id, turn_idx, coalesce(role, '') AS r,
          substr(md5(conv_id || '#retry'), 1, 1) AS c1,
@@ -1789,7 +1966,6 @@ def _q_t_hot_convs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of conversations 20x (the "hot conversation" shape the north rule
     # names), then hot_key_stats must rank them, compute share/skew
     # ratio, and flag is_hot — value-exact cross-engine.
-    from json_schema_rs_spark.operators.table_checks import hot_key_stats
     tx = _transcripts_from_events(_t(spark, sf_dir, "events"))         .select("conv_id")
     fan = F.when(
         F.substring(F.md5(F.concat(F.col("conv_id"), F.lit("#hot"))),
@@ -1797,7 +1973,8 @@ def _q_t_hot_convs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(20)).otherwise(F.lit(1))
     amp = (tx.withColumn("_i", F.explode(F.sequence(F.lit(1), fan)))
              .select("conv_id"))
-    return hot_key_stats(amp, ("conv_id",), top=25, hot_factor=5.0)
+    return table_checks.hot_key_stats(amp, ("conv_id",), top=25,
+                                      hot_factor=5.0)
 
 
 _SQL_T_HOT_CONVS = """
@@ -1925,10 +2102,9 @@ def _q_s_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # complement of the profile's sketch percentiles): values are
     # actual data points at the quantile_disc rank, so the oracle
     # compares them with zero float arithmetic
-    from json_schema_rs_spark.operators.stats import exact_quantiles
     li = _t(spark, sf_dir, "lineitem")
-    return exact_quantiles(li, "l_extendedprice",
-                           (0.25, 0.5, 0.9, 0.99))
+    return stats.exact_quantiles(li, "l_extendedprice",
+                                 (0.25, 0.5, 0.9, 0.99))
 
 
 _SQL_S_EXACT_QUANTILES = """
@@ -1954,10 +2130,9 @@ def _q_s_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-group exact quantiles: every refinement round is ONE corpus
     # scan shared by all (group, q) tasks; values are actual data
     # points, compared with zero float arithmetic
-    from json_schema_rs_spark.operators.stats import exact_quantiles_by
     li = _t(spark, sf_dir, "lineitem")
-    return exact_quantiles_by(li, "l_returnflag", "l_extendedprice",
-                              (0.5, 0.9))
+    return stats.exact_quantiles_by(li, "l_returnflag", "l_extendedprice",
+                                    (0.5, 0.9))
 
 
 _SQL_S_GROUP_QUANTILES = """
@@ -1977,12 +2152,10 @@ def _q_s_exact_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact Pearson r between two per-doc signals, per source — all
     # five accumulations are order-free integer micro sums, so the
     # oracle reproduces r to the bit before rounding
-    from json_schema_rs_spark.operators.stats import exact_corr
-    from json_schema_rs_spark.operators.textstats import token_stats
     docs = _t(spark, sf_dir, "documents")
     t = (docs.select("doc_id", "source")
-         .join(token_stats(docs), "doc_id"))
-    return exact_corr(t, "n_chars", "bpe_tokens", group_col="source")
+         .join(textstats.token_stats(docs), "doc_id"))
+    return stats.exact_corr(t, "n_chars", "bpe_tokens", group_col="source")
 
 
 _SQL_S_EXACT_CORR = r"""
@@ -2239,14 +2412,8 @@ def _q_s_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.round("ks", 9).alias("ks"))
 
 
-_SQL_S_KS = """
-WITH a AS (SELECT value::DOUBLE AS v FROM events WHERE event_id % 2 = 0 AND value IS NOT NULL),
-b AS (SELECT value::DOUBLE AS v FROM events WHERE event_id % 2 = 1 AND value IS NOT NULL),
-na AS (SELECT count(*)::DOUBLE AS n FROM a), nb AS (SELECT count(*)::DOUBLE AS n FROM b),
-ga AS (SELECT v, count(*) AS ca FROM a GROUP BY v),
-gb AS (SELECT v, count(*) AS cb FROM b GROUP BY v),
-m AS (SELECT coalesce(ga.v, gb.v) AS v, coalesce(ca, 0) AS ca, coalesce(cb, 0) AS cb
-      FROM ga FULL OUTER JOIN gb ON ga.v = gb.v),
+_SQL_S_KS = f"""
+WITH {_ORACLE_VALUE_HALVES},
 e AS (SELECT sum(ca) OVER (ORDER BY v) / (SELECT n FROM na) AS fa,
              sum(cb) OVER (ORDER BY v) / (SELECT n FROM nb) AS fb
       FROM m)
@@ -2264,14 +2431,8 @@ def _q_s_cvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(F.round("cvm", 9).alias("cvm"), "n_a", "n_b")
 
 
-_SQL_S_CVM = """
-WITH a AS (SELECT value::DOUBLE AS v FROM events WHERE event_id % 2 = 0 AND value IS NOT NULL),
-b AS (SELECT value::DOUBLE AS v FROM events WHERE event_id % 2 = 1 AND value IS NOT NULL),
-na AS (SELECT count(*)::DOUBLE AS n FROM a), nb AS (SELECT count(*)::DOUBLE AS n FROM b),
-ga AS (SELECT v, count(*) AS ca FROM a GROUP BY v),
-gb AS (SELECT v, count(*) AS cb FROM b GROUP BY v),
-m AS (SELECT coalesce(ga.v, gb.v) AS v, coalesce(ca, 0) AS ca, coalesce(cb, 0) AS cb
-      FROM ga FULL OUTER JOIN gb ON ga.v = gb.v),
+_SQL_S_CVM = f"""
+WITH {_ORACLE_VALUE_HALVES},
 e AS (SELECT ca + cb AS cw,
              sum(ca) OVER (ORDER BY v) / (SELECT n FROM na) AS fa,
              sum(cb) OVER (ORDER BY v) / (SELECT n FROM nb) AS fb
@@ -2347,14 +2508,8 @@ def _q_s_w1(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.round("w1", 6).alias("w1"))
 
 
-_SQL_S_W1 = """
-WITH a AS (SELECT value::DOUBLE AS v FROM events WHERE event_id % 2 = 0 AND value IS NOT NULL),
-b AS (SELECT value::DOUBLE AS v FROM events WHERE event_id % 2 = 1 AND value IS NOT NULL),
-na AS (SELECT count(*)::DOUBLE AS n FROM a), nb AS (SELECT count(*)::DOUBLE AS n FROM b),
-ga AS (SELECT v, count(*) AS ca FROM a GROUP BY v),
-gb AS (SELECT v, count(*) AS cb FROM b GROUP BY v),
-m AS (SELECT coalesce(ga.v, gb.v) AS v, coalesce(ca, 0) AS ca, coalesce(cb, 0) AS cb
-      FROM ga FULL OUTER JOIN gb ON ga.v = gb.v),
+_SQL_S_W1 = f"""
+WITH {_ORACLE_VALUE_HALVES},
 e AS (SELECT v,
              sum(ca) OVER (ORDER BY v) / (SELECT n FROM na) AS fa,
              sum(cb) OVER (ORDER BY v) / (SELECT n FROM nb) AS fb,
@@ -2370,8 +2525,6 @@ FROM e
 # deterministic tool column so the pairing check exercises both codes)
 # ---------------------------------------------------------------------------
 
-_TOOL_MAP = ("CASE WHEN event_type = 'view' AND event_id % 3 = 0 "
-             "THEN 'browse' ELSE NULL END")
 
 _ALLOWED_TRANSITIONS = [
     ("system", "user"), ("user", "assistant"), ("assistant", "user"),
@@ -2380,35 +2533,11 @@ _ALLOWED_TRANSITIONS = [
 _ALLOWED_FIRST = ["system", "user"]
 
 
-def _transcripts_with_tools(events: DataFrame) -> DataFrame:
-    """Flagship transcript view plus a deterministic tool column."""
-    from pyspark.sql import Window
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return events.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).alias("turn_idx"),
-        F.expr(_ROLE_MAP).alias("role"),
-        F.col("props").alias("text"),
-        F.expr(_TOOL_MAP).alias("tool"),
-        F.col("ts"),
-    )
-
-
-_ORACLE_TX_TOOLS = f"""
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
-         {_ROLE_MAP} AS role, props AS text, {_TOOL_MAP} AS tool, ts
-  FROM events
-"""
-
-
 def _q_t_drop_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the stuck-loop REPAIR: turns at idx % 6 in (2,3) are forced into
     # identical assistant replies, so each injected pair loses its
     # second member (and any organic same-role byte-repeats go too);
     # the oracle re-derives the same (role, idx)-sorted lag filter
-    from json_schema_rs_spark.operators.table_checks import (
-        drop_looped_turns)
     tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
     looped = F.col("turn_idx") % 6
     salted = tx.select(
@@ -2418,7 +2547,7 @@ def _q_t_drop_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(looped.isin(2, 3), F.lit("I will comply."))
          .otherwise(F.col("text")).alias("text"),
         "tool", "ts")
-    return drop_looped_turns(salted)
+    return table_checks.drop_looped_turns(salted)
 
 
 _SQL_T_DROP_LOOPS = f"""
@@ -2444,11 +2573,8 @@ WHERE NOT coalesce(coalesce(role, '') = pr
 
 
 def _q_t_role_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from json_schema_rs_spark.operators.table_checks import (
-        role_transition_violations,
-    )
     tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
-    return role_transition_violations(
+    return table_checks.role_transition_violations(
         tx, _ALLOWED_TRANSITIONS, _ALLOWED_FIRST)
 
 
@@ -2474,11 +2600,8 @@ WHERE role IS NOT NULL AND (
 
 
 def _q_t_tool_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from json_schema_rs_spark.operators.table_checks import (
-        tool_pairing_violations,
-    )
     tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
-    return tool_pairing_violations(tx)
+    return table_checks.tool_pairing_violations(tx)
 
 
 _SQL_T_TOOL_PAIRING = f"""
@@ -2509,11 +2632,8 @@ WHERE orphan_result OR orphan_call
 
 
 def _q_t_conv_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from json_schema_rs_spark.operators.table_checks import (
-        conversation_bounds_violations,
-    )
     tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
-    return conversation_bounds_violations(
+    return table_checks.conversation_bounds_violations(
         tx, min_turns=55, max_turns=80, max_duration_seconds=2_500_000)
 
 
@@ -2540,11 +2660,8 @@ FROM agg WHERE dur > 2500000
 def _q_t_context_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     # context-window fit: flag every turn past a cumulative whitespace-
     # token budget (overhead 1 models the "{role}: " render header)
-    from json_schema_rs_spark.operators.table_checks import (
-        context_budget_violations,
-    )
     tx = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    return context_budget_violations(tx, 160, per_turn_overhead=1)
+    return table_checks.context_budget_violations(tx, 160, per_turn_overhead=1)
 
 
 _SQL_T_CONTEXT_BUDGET = f"""
@@ -2566,11 +2683,10 @@ FROM cum WHERE cum_tokens > 160
 def _q_s_violation_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # monitoring complement of violation_stats: per-day violation rate
     # by code over the flagship row-local violation set
-    from json_schema_rs_spark.operators.table_checks import violation_trend
     tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
     viols = ValidationEngine(
         FLAGSHIP_SPEC, key_cols=("conv_id", "turn_idx")).validate(tx).violations
-    return violation_trend(tx, viols, grain="day")
+    return table_checks.violation_trend(tx, viols, grain="day")
 
 
 _SQL_S_VIOLATION_TREND = f"""
@@ -2602,9 +2718,8 @@ def _q_s_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # crawler-health monitor: per-day new-token rate over the transcript
     # text — a healthy ingest keeps finding new vocabulary, a recrawl
     # collapses toward 0
-    from json_schema_rs_spark.operators.textstats import vocab_growth
     tx = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    return vocab_growth(tx.select("text", "ts"))
+    return textstats.vocab_growth(tx.select("text", "ts"))
 
 
 _SQL_S_VOCAB_GROWTH = """
@@ -2630,7 +2745,6 @@ def _q_s_trend_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spike alerting over the trend: a synthetic check with a stable
     # ~2.3% md5-bucketed base rate that jumps to ~75% on the 15th — trend_anomalies must flag exactly those buckets
     # against the expanding history of prior days.
-    from json_schema_rs_spark.operators.table_checks import trend_anomalies
     tx = _transcripts_from_events(_t(spark, sf_dir, "events"))
     day = F.date_trunc("day", F.col("ts"))
     key = F.md5(F.concat(F.col("conv_id"), F.lit("#"),
@@ -2644,15 +2758,11 @@ def _q_s_trend_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
                .withColumn("violation_rate",
                            F.round(F.col("n_violations")
                                    / F.col("n_turns"), 6)))
-    return trend_anomalies(trend, z=3.0)
+    return table_checks.trend_anomalies(trend, z=3.0)
 
 
 _SQL_S_TREND_ANOMALY = f"""
-WITH tx AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
-         props AS text, ts
-  FROM events),
+WITH tx AS ({_ORACLE_TX_TOOLS}),
 trend AS (
   SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS window_start,
          'SpikyCheck' AS code,
@@ -2696,9 +2806,8 @@ WHERE CASE WHEN std > 0 THEN rm::DOUBLE - mean > 3.0 * std
 def _q_s_source_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairwise drift matrix: PSI of the n_chars distribution between
     # every source pair, one corpus scan (eager-checkpointed counts)
-    from json_schema_rs_spark.operators.stats import psi_matrix
-    return psi_matrix(_t(spark, sf_dir, "documents"), "n_chars",
-                      group_col="source", lo=0.0, hi=600.0, nbins=10)
+    return stats.psi_matrix(_t(spark, sf_dir, "documents"), "n_chars",
+                            group_col="source", lo=0.0, hi=600.0, nbins=10)
 
 
 _SQL_S_SOURCE_PSI = """
@@ -2735,24 +2844,17 @@ def _q_t_transcript_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # turn_idx) ordering" as a cross-snapshot check: snapshot a drops
     # turn 7 of every conversation, snapshot b drops turn 5 and
     # uppercases turn 2's text — all three diff codes fire
-    from json_schema_rs_spark.operators.table_checks import transcript_diff
     tx = _transcripts_from_events(_t(spark, sf_dir, "events"))
     a = tx.filter(F.col("turn_idx") != 7)
     b = (tx.filter(F.col("turn_idx") != 5)
            .withColumn("text", F.when(F.col("turn_idx") == 2,
                                       F.upper("text"))
                                .otherwise(F.col("text"))))
-    return transcript_diff(a, b)
+    return table_checks.transcript_diff(a, b)
 
 
 _SQL_T_TRANSCRIPT_DIFF = f"""
-WITH tx AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id
-                                 ORDER BY ts, event_id) - 1 AS INT)
-           AS turn_idx,
-         props AS text
-  FROM events),
+WITH tx AS ({_ORACLE_TX_TOOLS}),
 a AS (SELECT * FROM tx WHERE turn_idx <> 7),
 b AS (SELECT conv_id, turn_idx,
              CASE WHEN turn_idx = 2 THEN upper(text) ELSE text END AS text
@@ -2776,8 +2878,7 @@ def _q_v_violation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # which constraints fire, how often, and how many distinct turn keys
     # they hit — the post-run ops dashboard query over the full flagship
     # violation set
-    from json_schema_rs_spark.operators.table_checks import violation_stats
-    return violation_stats(_flagship(spark, sf_dir))
+    return table_checks.violation_stats(_flagship(spark, sf_dir))
 
 
 _SQL_V_VIOLATION_STATS = f"""
@@ -2795,8 +2896,7 @@ def _q_v_review_queue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # violations per code over the full flagship violation set — exact
     # top-N-per-group via zero-shuffle local top-N then one pruned
     # per-code window (no hot-code shuffle of the whole violation table).
-    from json_schema_rs_spark.operators.table_checks import review_queue
-    return review_queue(_flagship(spark, sf_dir), per_code=10)
+    return table_checks.review_queue(_flagship(spark, sf_dir), per_code=10)
 
 
 _SQL_V_REVIEW_QUEUE = f"""
@@ -2820,14 +2920,12 @@ def _q_t_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one profile pass, verdicts assembled from the single wide
     # aggregate row. Bounds chosen so the report carries BOTH verdicts
     # (min_distinct 6 and max_mean 40 fail on this data).
-    from json_schema_rs_spark.operators.expectations import (
-        table_expectations)
     spec = {"min_rows": 1000, "max_rows": 10**12,
             "columns": {
                 "event_type": {"max_null_frac": 0.001, "min_distinct": 6},
                 "value": {"min_value": 0, "max_value": 1e6,
                           "min_mean": 1, "max_mean": 40}}}
-    rep = table_expectations(_t(spark, sf_dir, "events"), spec)
+    rep = expectations.table_expectations(_t(spark, sf_dir, "events"), spec)
     # message column excluded: its number rendering is an operator-UX
     # contract, not a cross-engine one
     return rep.select("scope", "rule", "observed", "bound", "ok")
@@ -2861,11 +2959,8 @@ def _q_t_conv_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # violation set (row checks + uniqueness + gap-free + monotonic-ts):
     # the north rule's per-partition verdict table at conversation grain,
     # clean conversations included
-    from json_schema_rs_spark.operators.table_checks import (
-        violation_verdicts,
-    )
     tx = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    return violation_verdicts(tx, _flagship(spark, sf_dir))
+    return table_checks.violation_verdicts(tx, _flagship(spark, sf_dir))
 
 
 _SQL_T_CONV_VERDICTS = f"""
@@ -2886,9 +2981,8 @@ FROM base LEFT JOIN c USING (conv_id)
 def _q_t_turn_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stuck-agent detection: same role repeating the same text (other
     # roles wedged between repeats don't reset the streak)
-    from json_schema_rs_spark.operators.table_checks import turn_loop_stats
     tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
-    return turn_loop_stats(tx)
+    return table_checks.turn_loop_stats(tx)
 
 
 _SQL_T_TURN_LOOPS = f"""
@@ -2920,11 +3014,8 @@ FROM a
 
 
 def _q_t_conv_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from json_schema_rs_spark.operators.table_checks import (
-        conversation_profile,
-    )
     tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
-    prof = conversation_profile(tx)
+    prof = table_checks.conversation_profile(tx)
     return prof.select(
         "conv_id", "n_turns", "min_idx", "max_idx", "duration_s",
         "n_roles", "user_turns", "assistant_turns", "total_text_chars",
@@ -2995,17 +3086,8 @@ FROM batch b JOIN fresh f USING (doc_id)
 """
 
 
-_SQL_D_NGRAM = """
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-sh AS (SELECT doc_id,
-              list_distinct([concat_ws(' ', ws[i], ws[i+1], ws[i+2])
-                             for i in range(1, len(ws) - 1)]) AS s
-       FROM w),
-ex AS (SELECT doc_id, unnest(s) AS sg FROM sh),
-p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-      FROM ex a JOIN ex b ON a.sg = b.sg AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-sz AS (SELECT doc_id, len(s) AS n FROM sh)
+_SQL_D_NGRAM = f"""
+WITH {_oracle_overlap("documents")}
 SELECT doc_a, doc_b,
        inter::DOUBLE / (sa.n + sb.n - inter) AS jaccard
 FROM p JOIN sz sa ON p.doc_a = sa.doc_id JOIN sz sb ON p.doc_b = sb.doc_id
@@ -3016,8 +3098,7 @@ WHERE inter::DOUBLE / (sa.n + sb.n - inter) >= 0.8
 def _q_d_source_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # which source produces the duplicates: per-source exact-dup counts,
     # cross-source re-crawl counts, and the dup rate
-    from json_schema_rs_spark.operators.dedup import source_dup_stats
-    return source_dup_stats(_t(spark, sf_dir, "documents"))
+    return dedup.source_dup_stats(_t(spark, sf_dir, "documents"))
 
 
 _SQL_D_SOURCE_DUP_RATE = """
@@ -3044,8 +3125,7 @@ def _q_d_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every source pair — counts exact; ratios rounded. Spark hashes
     # shingles to xxhash64 longs, the oracle uses raw 3-gram strings;
     # identical up to 64-bit collisions (|grams|^2/2^64, negligible).
-    from json_schema_rs_spark.operators.decontam import source_overlap
-    return source_overlap(_t(spark, sf_dir, "documents"))
+    return decontam.source_overlap(_t(spark, sf_dir, "documents"))
 
 
 _SQL_D_SOURCE_OVERLAP = """
@@ -3072,9 +3152,8 @@ def _q_x_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact-count quota sampling: the 8 md5-smallest docs per source
     # (stratified_sample's count-quota complement — fractions can't
     # promise exact per-group counts on skewed strata)
-    from json_schema_rs_spark.operators.sampling import quota_sample
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    return quota_sample(docs, "source", 8, salt="quota")
+    return sampling.quota_sample(docs, "source", 8, salt="quota")
 
 
 _SQL_X_QUOTA_SAMPLE = """
@@ -3096,7 +3175,6 @@ def _q_x_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Unigram features here keep the oracle a plain re-derivation
     # (md5-bucket counts -> floored micro-nat lns -> integer doc sums);
     # the bigram path is pinned by the stdlib twin in tests.
-    from json_schema_rs_spark.operators.sampling import dsir_weights
     docs = _t(spark, sf_dir, "documents")
     raw = docs.select(
         "doc_id",
@@ -3107,33 +3185,16 @@ def _q_x_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("doc_id",
                    F.concat(F.col("text"), F.lit(" quantum flux"))
                    .alias("text")))
-    return dsir_weights(raw, tgt, ns=(1,), buckets=512)
+    return sampling.dsir_weights(raw, tgt, ns=(1,), buckets=512)
 
 
-_SQL_X_DSIR = """
+_SQL_X_DSIR = f"""
 WITH raw AS (SELECT doc_id,
     text || CASE WHEN doc_id % 7 = 0 THEN ' quantum flux' ELSE '' END AS t
   FROM documents),
 tgt AS (SELECT doc_id, text || ' quantum flux' AS t
   FROM documents WHERE doc_id % 5 = 0),
-rg AS (SELECT doc_id,
-         ('0x' || substr(md5(g), 1, 8))::BIGINT % 512 AS b
-       FROM (SELECT doc_id,
-               unnest(list_filter(string_split(t, ' '), x -> x <> '')) AS g
-             FROM raw)),
-tg AS (SELECT ('0x' || substr(md5(g), 1, 8))::BIGINT % 512 AS b
-       FROM (SELECT
-               unnest(list_filter(string_split(t, ' '), x -> x <> '')) AS g
-             FROM tgt)),
-rc AS (SELECT b, count(*) AS c FROM rg GROUP BY b),
-tc AS (SELECT b, count(*) AS c FROM tg GROUP BY b),
-tot AS (SELECT (SELECT count(*) FROM rg) AS nr,
-               (SELECT count(*) FROM tg) AS nt),
-wt AS (SELECT rc.b,
-         CAST(floor(ln((coalesce(tc.c, 0) + 1) / (tot.nt + 512.0)) * 1e6)
-            - floor(ln((rc.c + 1) / (tot.nr + 512.0)) * 1e6) AS BIGINT)
-           AS w
-       FROM rc LEFT JOIN tc ON rc.b = tc.b, tot),
+{_oracle_dsir_weights("doc_id")},
 sc AS (SELECT rg.doc_id, count(*) AS n_grams,
               CAST(sum(wt.w) AS BIGINT) AS logw
        FROM rg JOIN wt ON rg.b = wt.b GROUP BY rg.doc_id)
@@ -3150,7 +3211,6 @@ def _q_x_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the resampling step end-to-end: exact top-50 most target-like
     # docs by (logw_micro DESC, doc_id ASC) — a total order, so the
     # oracle re-derives the identical set from the weight pipeline
-    from json_schema_rs_spark.operators.sampling import dsir_sample
     docs = _t(spark, sf_dir, "documents")
     raw = docs.select(
         "doc_id",
@@ -3161,34 +3221,17 @@ def _q_x_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("doc_id",
                    F.concat(F.col("text"), F.lit(" quantum flux"))
                    .alias("text")))
-    return (dsir_sample(raw, tgt, 50, ns=(1,), buckets=512)
+    return (sampling.dsir_sample(raw, tgt, 50, ns=(1,), buckets=512)
             .select("doc_id", "logw_micro"))
 
 
-_SQL_X_DSIR_SAMPLE = """
+_SQL_X_DSIR_SAMPLE = f"""
 WITH raw AS (SELECT doc_id,
     text || CASE WHEN doc_id % 7 = 0 THEN ' quantum flux' ELSE '' END AS t
   FROM documents),
 tgt AS (SELECT doc_id, text || ' quantum flux' AS t
   FROM documents WHERE doc_id % 5 = 0),
-rg AS (SELECT doc_id,
-         ('0x' || substr(md5(g), 1, 8))::BIGINT % 512 AS b
-       FROM (SELECT doc_id,
-               unnest(list_filter(string_split(t, ' '), x -> x <> '')) AS g
-             FROM raw)),
-tg AS (SELECT ('0x' || substr(md5(g), 1, 8))::BIGINT % 512 AS b
-       FROM (SELECT
-               unnest(list_filter(string_split(t, ' '), x -> x <> '')) AS g
-             FROM tgt)),
-rc AS (SELECT b, count(*) AS c FROM rg GROUP BY b),
-tc AS (SELECT b, count(*) AS c FROM tg GROUP BY b),
-tot AS (SELECT (SELECT count(*) FROM rg) AS nr,
-               (SELECT count(*) FROM tg) AS nt),
-wt AS (SELECT rc.b,
-         CAST(floor(ln((coalesce(tc.c, 0) + 1) / (tot.nt + 512.0)) * 1e6)
-            - floor(ln((rc.c + 1) / (tot.nr + 512.0)) * 1e6) AS BIGINT)
-           AS w
-       FROM rc LEFT JOIN tc ON rc.b = tc.b, tot),
+{_oracle_dsir_weights("doc_id")},
 sc AS (SELECT rg.doc_id,
               CAST(sum(wt.w) AS BIGINT) AS logw_micro
        FROM rg JOIN wt ON rg.b = wt.b GROUP BY rg.doc_id)
@@ -3203,19 +3246,14 @@ def _q_x_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in the kept corpus (the rest). Spark probes 64-bit shingle hashes;
     # the oracle uses raw 3-gram strings (identical up to 2^-64
     # collisions).
-    from json_schema_rs_spark.operators.decontam import novelty_score
     docs = _t(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 3 == 0)
     ref = docs.filter(F.col("doc_id") % 3 != 0)
-    return novelty_score(batch, ref)
+    return decontam.novelty_score(batch, ref)
 
 
-_SQL_X_NOVELTY = """
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-sh AS (SELECT doc_id,
-              list_distinct([concat_ws(' ', ws[i], ws[i+1], ws[i+2])
-                             for i in range(1, len(ws) - 1)]) AS s
-       FROM w),
+_SQL_X_NOVELTY = f"""
+WITH {_oracle_shingles("documents")},
 ref AS (SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 3 <> 0),
 b AS (SELECT doc_id, unnest(s) AS g FROM sh WHERE doc_id % 3 = 0),
 per AS (SELECT b.doc_id, count(*) AS n_shingles,
@@ -3245,12 +3283,8 @@ def _q_d_incremental_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id")
 
 
-_SQL_D_INCREMENTAL_FUZZY = """
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-sh AS (SELECT doc_id,
-              list_distinct([concat_ws(' ', ws[i], ws[i+1], ws[i+2])
-                             for i in range(1, len(ws) - 1)]) AS s
-       FROM w),
+_SQL_D_INCREMENTAL_FUZZY = f"""
+WITH {_oracle_shingles("documents")},
 b AS (SELECT * FROM sh WHERE doc_id % 3 = 0),
 l AS (SELECT * FROM sh WHERE doc_id % 3 <> 0),
 dup AS (SELECT DISTINCT b.doc_id
@@ -3293,7 +3327,7 @@ def _q_d_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.unionByName(wrappers), n=3, threshold=0.9)
 
 
-_SQL_D_CONTAINMENT = """
+_SQL_D_CONTAINMENT = f"""
 WITH u AS (
   SELECT doc_id, text FROM documents
   UNION ALL
@@ -3301,16 +3335,7 @@ WITH u AS (
          'wrapper header boilerplate intro ' || text ||
          ' outro footer closing boilerplate'
   FROM documents WHERE doc_id % 31 = 0),
-w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM u),
-sh AS (SELECT doc_id,
-              list_distinct([concat_ws(' ', ws[i], ws[i+1], ws[i+2])
-                             for i in range(1, len(ws) - 1)]) AS s
-       FROM w),
-ex AS (SELECT doc_id, unnest(s) AS sg FROM sh),
-p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-      FROM ex a JOIN ex b ON a.sg = b.sg AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-sz AS (SELECT doc_id, len(s) AS n FROM sh)
+{_oracle_overlap("u")}
 SELECT doc_a, doc_b, inter AS n_inter,
        sa.n AS size_a, sb.n AS size_b,
        inter::DOUBLE / least(sa.n, sb.n) AS containment,
@@ -3331,30 +3356,10 @@ def _q_d_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.near_dup_groups(pairs)
 
 
-_SQL_D_DUP_GROUPS = """
+_SQL_D_DUP_GROUPS = f"""
 WITH RECURSIVE
-w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-sh AS (SELECT doc_id,
-              list_distinct([concat_ws(' ', ws[i], ws[i+1], ws[i+2])
-                             for i in range(1, len(ws) - 1)]) AS s
-       FROM w),
-ex AS (SELECT doc_id, unnest(s) AS sg FROM sh),
-p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-      FROM ex a JOIN ex b ON a.sg = b.sg AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-sz AS (SELECT doc_id, len(s) AS n FROM sh),
-pr AS (SELECT doc_a, doc_b
-       FROM p JOIN sz sa ON p.doc_a = sa.doc_id
-              JOIN sz sb ON p.doc_b = sb.doc_id
-       WHERE inter::DOUBLE / (sa.n + sb.n - inter) >= 0.8),
-e AS (SELECT doc_a AS a, doc_b AS b FROM pr
-      UNION SELECT doc_b, doc_a FROM pr),
-reach(n, m) AS (
-    SELECT a, a FROM (SELECT DISTINCT a FROM e) t
-    UNION
-    SELECT r.n, e.b FROM reach r JOIN e ON r.m = e.a
-)
-SELECT n AS doc_id, min(m) AS group_id FROM reach GROUP BY n
+{_oracle_dup_groups("documents")}
+SELECT doc_id, group_id FROM g
 """
 
 
@@ -3369,30 +3374,9 @@ def _q_d_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dedup_summary(groups, docs)
 
 
-_SQL_D_DEDUP_REPORT = """
+_SQL_D_DEDUP_REPORT = f"""
 WITH RECURSIVE
-w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-sh AS (SELECT doc_id,
-              list_distinct([concat_ws(' ', ws[i], ws[i+1], ws[i+2])
-                             for i in range(1, len(ws) - 1)]) AS s
-       FROM w),
-ex AS (SELECT doc_id, unnest(s) AS sg FROM sh),
-p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-      FROM ex a JOIN ex b ON a.sg = b.sg AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-sz AS (SELECT doc_id, len(s) AS n FROM sh),
-pr AS (SELECT doc_a, doc_b
-       FROM p JOIN sz sa ON p.doc_a = sa.doc_id
-              JOIN sz sb ON p.doc_b = sb.doc_id
-       WHERE inter::DOUBLE / (sa.n + sb.n - inter) >= 0.8),
-e AS (SELECT doc_a AS a, doc_b AS b FROM pr
-      UNION SELECT doc_b, doc_a FROM pr),
-reach(n, m) AS (
-    SELECT a, a FROM (SELECT DISTINCT a FROM e) t
-    UNION
-    SELECT r.n, e.b FROM reach r JOIN e ON r.m = e.a
-),
-g AS (SELECT n AS doc_id, min(m) AS group_id FROM reach GROUP BY n),
+{_oracle_dup_groups("documents")},
 tok AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS t
         FROM documents),
 per AS (SELECT group_id, count(*) AS gsz, sum(t) AS tt,
@@ -3615,44 +3599,24 @@ def _q_a_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                               k=10, m=4, n_centroids=16)
 
 
-_SQL_A_PQ_TOPK = """
+_SQL_A_PQ_TOPK = f"""
 WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
            FROM embeddings
            WHERE embedding IS NOT NULL AND len(embedding) = 64),
-cen AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
-        FROM e ORDER BY vec_id LIMIT 16),
+pcen AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
+         FROM e ORDER BY vec_id LIMIT 16),
 sub AS (SELECT unnest(range(4)) AS s),
-dist AS (SELECT e.vec_id, sub.s, cen.cid,
+dist AS (SELECT e.vec_id, sub.s, pcen.cid,
            list_sum(list_transform(range(1, 17), i ->
              (v[sub.s * 16 + i] - cv[sub.s * 16 + i])
              * (v[sub.s * 16 + i] - cv[sub.s * 16 + i]))) AS d2
-         FROM e, sub, cen),
-code AS (SELECT vec_id, s, cid FROM (
-           SELECT vec_id, s, cid,
-                  row_number() OVER (PARTITION BY vec_id, s
-                                     ORDER BY d2, cid) AS rn
-           FROM dist) WHERE rn = 1),
-q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 8),
-lut AS (SELECT q.qid, sub.s, cen.cid,
-          list_sum(list_transform(range(1, 17), i ->
-            qv[sub.s * 16 + i] * cv[sub.s * 16 + i])) AS pd
-        FROM q, sub, cen),
-parts AS (SELECT l.qid, co.vec_id,
-            max(CASE WHEN co.s = 0 THEN l.pd END) AS p0,
-            max(CASE WHEN co.s = 1 THEN l.pd END) AS p1,
-            max(CASE WHEN co.s = 2 THEN l.pd END) AS p2,
-            max(CASE WHEN co.s = 3 THEN l.pd END) AS p3
-          FROM code co JOIN lut l ON l.s = co.s AND l.cid = co.cid
-          GROUP BY l.qid, co.vec_id),
+         FROM e, sub, pcen),
+{_ORACLE_PQ_CODE},
+{_ORACLE_PQ_PARTS},
 sc AS (SELECT qid AS query_id, vec_id AS neighbor_id,
          round(((p0 + p1) + p2) + p3, 6) AS adc_sim
        FROM parts WHERE vec_id <> qid),
-r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY adc_sim DESC, neighbor_id)
-        AS rank
-      FROM sc)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, adc_sim
-FROM r WHERE rank <= 10
+{_ORACLE_ADC_TOP10}
 """
 
 
@@ -3819,19 +3783,8 @@ def _q_a_coverage_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "bucket_id", "sample_rank")
 
 
-_SQL_A_COVERAGE_SAMPLE = """
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-           FROM embeddings),
-cen AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 16),
-sc AS (SELECT e.vec_id, cen.cid,
-              list_dot_product(e.v, cen.cv) /
-              (sqrt(list_dot_product(e.v, e.v)) *
-               sqrt(list_dot_product(cen.cv, cen.cv))) AS s
-       FROM e CROSS JOIN cen),
-asg AS (SELECT vec_id, cid AS bucket_id FROM (
-          SELECT sc.*, row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY s DESC, cid) AS rn
-          FROM sc) WHERE rn = 1),
+_SQL_A_COVERAGE_SAMPLE = f"""
+WITH {_ORACLE_IVF_ASSIGN},
 ranked AS (SELECT vec_id, bucket_id,
                   row_number() OVER (PARTITION BY bucket_id
                                      ORDER BY md5(vec_id || '#0'))
@@ -3851,19 +3804,8 @@ def _q_a_cosine_dup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "embeddings"), threshold=0.42, n_centroids=16)
 
 
-_SQL_A_COSINE_DUP_BUCKETED = """
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-           FROM embeddings),
-cen AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 16),
-sc AS (SELECT e.vec_id, cen.cid,
-              list_dot_product(e.v, cen.cv) /
-              (sqrt(list_dot_product(e.v, e.v)) *
-               sqrt(list_dot_product(cen.cv, cen.cv))) AS s
-       FROM e CROSS JOIN cen),
-asg AS (SELECT vec_id, cid AS bucket_id FROM (
-          SELECT sc.*, row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY s DESC, cid) AS rn
-          FROM sc) WHERE rn = 1),
+_SQL_A_COSINE_DUP_BUCKETED = f"""
+WITH {_ORACLE_IVF_ASSIGN},
 b AS (SELECT e.vec_id, e.v, asg.bucket_id FROM e JOIN asg USING (vec_id))
 SELECT a.vec_id AS doc_a, bb.vec_id AS doc_b,
        round(list_dot_product(a.v, bb.v) /
@@ -3886,19 +3828,8 @@ def _q_a_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                                k=5, n_centroids=16)
 
 
-_SQL_A_KNN_JOIN = """
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-           FROM embeddings),
-cen AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 16),
-sc AS (SELECT e.vec_id, cen.cid,
-              list_dot_product(e.v, cen.cv) /
-              (sqrt(list_dot_product(e.v, e.v)) *
-               sqrt(list_dot_product(cen.cv, cen.cv))) AS s
-       FROM e CROSS JOIN cen),
-asg AS (SELECT vec_id, cid AS bucket_id FROM (
-          SELECT sc.*, row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY s DESC, cid) AS rn
-          FROM sc) WHERE rn = 1),
+_SQL_A_KNN_JOIN = f"""
+WITH {_ORACLE_IVF_ASSIGN},
 b AS (SELECT e.vec_id, e.v, asg.bucket_id FROM e JOIN asg USING (vec_id)),
 p AS (SELECT a.vec_id AS src, bb.vec_id AS nbr,
              list_dot_product(a.v, bb.v) /
@@ -3921,15 +3852,13 @@ def _q_a_quality_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quality (exact integer hash -> 6dp), one propagation step over the
     # knn_join graph. Integer micro-unit weighted sums make the result
     # order-independent, hence value-exact cross-engine.
-    from json_schema_rs_spark.operators.similarity import (
-        knn_join, quality_propagate)
     emb = _t(spark, sf_dir, "embeddings")
-    edges = knn_join(emb, k=5, n_centroids=16)
+    edges = similarity.knn_join(emb, k=5, n_centroids=16)
     scores = emb.select(
         "vec_id",
         F.round(((F.col("vec_id") * F.lit(2654435761)) % F.lit(1000003))
                 .cast("double") / F.lit(1000003.0), 6).alias("quality"))
-    return quality_propagate(scores, edges)
+    return similarity.quality_propagate(scores, edges)
 
 
 _SQL_A_QUALITY_PROPAGATE = f"""
@@ -3963,11 +3892,9 @@ def _q_a_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # majority label disagrees with its own label is flagged. Labels are
     # integers with no NULLs in this table (NULL tie-order differs
     # between engines; the operator's NULL handling is unit-tested).
-    from json_schema_rs_spark.operators.similarity import (
-        knn_join, label_outliers)
     emb = _t(spark, sf_dir, "embeddings")
-    edges = knn_join(emb, k=5, n_centroids=16)
-    return label_outliers(emb.select("vec_id", "label"), edges)
+    edges = similarity.knn_join(emb, k=5, n_centroids=16)
+    return similarity.label_outliers(emb.select("vec_id", "label"), edges)
 
 
 _SQL_A_LABEL_OUTLIERS = f"""
@@ -4008,20 +3935,9 @@ def _q_a_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      threshold=0.42, n_centroids=16)
 
 
-_SQL_A_SEMANTIC_DEDUP = """
+_SQL_A_SEMANTIC_DEDUP = f"""
 WITH RECURSIVE
-e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-      FROM embeddings),
-cen AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 16),
-sc AS (SELECT e.vec_id, cen.cid,
-              list_dot_product(e.v, cen.cv) /
-              (sqrt(list_dot_product(e.v, e.v)) *
-               sqrt(list_dot_product(cen.cv, cen.cv))) AS s
-       FROM e CROSS JOIN cen),
-asg AS (SELECT vec_id, cid AS bucket_id FROM (
-          SELECT sc.*, row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY s DESC, cid) AS rn
-          FROM sc) WHERE rn = 1),
+{_ORACLE_IVF_ASSIGN},
 b AS (SELECT e.vec_id, e.v, asg.bucket_id FROM e JOIN asg USING (vec_id)),
 pr AS (SELECT a.vec_id AS doc_a, bb.vec_id AS doc_b
        FROM b a JOIN b bb ON a.bucket_id = bb.bucket_id
@@ -4029,23 +3945,17 @@ pr AS (SELECT a.vec_id AS doc_a, bb.vec_id AS doc_b
        WHERE round(list_dot_product(a.v, bb.v) /
                    (sqrt(list_dot_product(a.v, a.v)) *
                     sqrt(list_dot_product(bb.v, bb.v))), 6) >= 0.42),
-ed AS (SELECT doc_a AS a, doc_b AS b FROM pr
-       UNION SELECT doc_b, doc_a FROM pr),
-reach(n, m) AS (
-    SELECT a, a FROM (SELECT DISTINCT a FROM ed) t
-    UNION
-    SELECT r.n, ed.b FROM reach r JOIN ed ON r.m = ed.a),
-g AS (SELECT n AS vec_id, min(m) AS group_id FROM reach GROUP BY n),
+{_ORACLE_COMPONENTS},
 best AS (SELECT vec_id, group_id, group_size FROM (
-    SELECT g.vec_id, g.group_id,
+    SELECT g.doc_id AS vec_id, g.group_id,
            count(*) OVER (PARTITION BY g.group_id) AS group_size,
            row_number() OVER (PARTITION BY g.group_id
-                              ORDER BY g.vec_id) AS rn
+                              ORDER BY g.doc_id) AS rn
     FROM g) WHERE rn = 1)
 SELECT vec_id, group_id, group_size FROM best
 UNION ALL
 SELECT vec_id, vec_id AS group_id, 1::BIGINT AS group_size
-FROM embeddings WHERE vec_id NOT IN (SELECT vec_id FROM g)
+FROM embeddings WHERE vec_id NOT IN (SELECT doc_id FROM g)
 """
 
 
@@ -4062,19 +3972,8 @@ def _q_a_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # probes the same 4, and ranks the same candidates. Only the k-means-
 # TRAINED variant stays recall-gated (Lloyd iterations are not
 # reasonably expressible in SQL).
-_SQL_A_IVF = """
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-           FROM embeddings),
-cen AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 16),
-sc AS (SELECT e.vec_id, cen.cid,
-              list_dot_product(e.v, cen.cv) /
-              (sqrt(list_dot_product(e.v, e.v)) *
-               sqrt(list_dot_product(cen.cv, cen.cv))) AS s
-       FROM e CROSS JOIN cen),
-asg AS (SELECT vec_id, cid AS bucket_id FROM (
-          SELECT sc.*, row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY s DESC, cid) AS rn
-          FROM sc) WHERE rn = 1),
+_SQL_A_IVF = f"""
+WITH {_ORACLE_IVF_ASSIGN},
 q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 8),
 ps AS (SELECT q.query_id, cen.cid,
               list_dot_product(q.qv, cen.cv) /
@@ -4111,20 +4010,7 @@ def _q_a_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  k=10, n_centroids=16, nprobe=4)
 
 
-_SQL_A_IVF_RECALL = f"""
-WITH ap AS (SELECT query_id, neighbor_id FROM ({_SQL_A_IVF})),
-ex AS (SELECT query_id, neighbor_id FROM ({_SQL_A_COSINE}))
-SELECT (SELECT count(DISTINCT query_id) FROM ex) AS n_queries,
-       10 AS k,
-       (SELECT count(*) FROM ex) AS n_exact,
-       (SELECT count(*) FROM ap SEMI JOIN ex
-          ON ap.query_id = ex.query_id
-         AND ap.neighbor_id = ex.neighbor_id) AS n_hits,
-       round((SELECT count(*) FROM ap SEMI JOIN ex
-                ON ap.query_id = ex.query_id
-               AND ap.neighbor_id = ex.neighbor_id)
-             / CAST((SELECT count(*) FROM ex) AS DOUBLE), 6) AS recall
-"""
+_SQL_A_IVF_RECALL = _oracle_recall(_SQL_A_IVF)
 
 
 def _q_a_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4137,20 +4023,8 @@ def _q_a_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  k=10, m=4, n_centroids=16, nprobe=4)
 
 
-_SQL_A_IVFPQ_TOPK = """
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-           FROM embeddings
-           WHERE embedding IS NOT NULL AND len(embedding) = 64),
-icen AS (SELECT vec_id AS icid, v AS icv FROM e ORDER BY vec_id LIMIT 16),
-bsc AS (SELECT e.vec_id, icen.icid,
-          list_dot_product(e.v, icen.icv) /
-          (sqrt(list_dot_product(e.v, e.v)) *
-           sqrt(list_dot_product(icen.icv, icen.icv))) AS s
-        FROM e CROSS JOIN icen),
-asg AS (SELECT vec_id, icid AS bucket_id FROM (
-          SELECT bsc.*, row_number() OVER (PARTITION BY vec_id
-                                           ORDER BY s DESC, icid) AS rn
-          FROM bsc) WHERE rn = 1),
+_SQL_A_IVFPQ_TOPK = f"""
+WITH {_ORACLE_IVFPQ_COARSE},
 pcen AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
          FROM e ORDER BY vec_id LIMIT 16),
 sub AS (SELECT unnest(range(4)) AS s),
@@ -4159,32 +4033,9 @@ dist AS (SELECT e.vec_id, sub.s, pcen.cid,
              (v[sub.s * 16 + i] - cv[sub.s * 16 + i])
              * (v[sub.s * 16 + i] - cv[sub.s * 16 + i]))) AS d2
          FROM e, sub, pcen),
-code AS (SELECT vec_id, s, cid FROM (
-           SELECT vec_id, s, cid,
-                  row_number() OVER (PARTITION BY vec_id, s
-                                     ORDER BY d2, cid) AS rn
-           FROM dist) WHERE rn = 1),
-q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 8),
-ps AS (SELECT q.qid, icen.icid,
-         list_dot_product(q.qv, icen.icv) /
-         (sqrt(list_dot_product(q.qv, q.qv)) *
-          sqrt(list_dot_product(icen.icv, icen.icv))) AS s
-       FROM q CROSS JOIN icen),
-probes AS (SELECT qid, icid AS bucket_id FROM (
-             SELECT ps.*, row_number() OVER (PARTITION BY qid
-                                             ORDER BY s DESC, icid) AS rn
-             FROM ps WHERE s IS NOT NULL) WHERE rn <= 4),
-lut AS (SELECT q.qid, sub.s, pcen.cid,
-          list_sum(list_transform(range(1, 17), i ->
-            qv[sub.s * 16 + i] * cv[sub.s * 16 + i])) AS pd
-        FROM q, sub, pcen),
-parts AS (SELECT l.qid, co.vec_id,
-            max(CASE WHEN co.s = 0 THEN l.pd END) AS p0,
-            max(CASE WHEN co.s = 1 THEN l.pd END) AS p1,
-            max(CASE WHEN co.s = 2 THEN l.pd END) AS p2,
-            max(CASE WHEN co.s = 3 THEN l.pd END) AS p3
-          FROM code co JOIN lut l ON l.s = co.s AND l.cid = co.cid
-          GROUP BY l.qid, co.vec_id),
+{_ORACLE_PQ_CODE},
+{_ORACLE_IVFPQ_PROBES},
+{_ORACLE_PQ_PARTS},
 sc AS (SELECT parts.qid AS query_id, parts.vec_id AS neighbor_id,
          round(((p0 + p1) + p2) + p3, 6) AS adc_sim
        FROM parts
@@ -4192,12 +4043,7 @@ sc AS (SELECT parts.qid AS query_id, parts.vec_id AS neighbor_id,
        JOIN probes p ON p.qid = parts.qid
                     AND p.bucket_id = asg.bucket_id
        WHERE parts.vec_id <> parts.qid),
-r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY adc_sim DESC, neighbor_id)
-        AS rank
-      FROM sc)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, adc_sim
-FROM r WHERE rank <= 10
+{_ORACLE_ADC_TOP10}
 """
 
 
@@ -4212,20 +4058,8 @@ def _q_a_ivfpq_res(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  by_residual=True)
 
 
-_SQL_A_IVFPQ_RES = """
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-           FROM embeddings
-           WHERE embedding IS NOT NULL AND len(embedding) = 64),
-icen AS (SELECT vec_id AS icid, v AS icv FROM e ORDER BY vec_id LIMIT 16),
-bsc AS (SELECT e.vec_id, icen.icid,
-          list_dot_product(e.v, icen.icv) /
-          (sqrt(list_dot_product(e.v, e.v)) *
-           sqrt(list_dot_product(icen.icv, icen.icv))) AS s
-        FROM e CROSS JOIN icen),
-asg AS (SELECT vec_id, icid AS bucket_id FROM (
-          SELECT bsc.*, row_number() OVER (PARTITION BY vec_id
-                                           ORDER BY s DESC, icid) AS rn
-          FROM bsc) WHERE rn = 1),
+_SQL_A_IVFPQ_RES = f"""
+WITH {_ORACLE_IVFPQ_COARSE},
 srows AS (SELECT vec_id, v FROM (
             SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rk
             FROM e) WHERE rk > 16 AND rk <= 32),
@@ -4247,32 +4081,9 @@ dist AS (SELECT rcor.vec_id, sub.s, pcen.cid,
              (rv[sub.s * 16 + i] - cv[sub.s * 16 + i])
              * (rv[sub.s * 16 + i] - cv[sub.s * 16 + i]))) AS d2
          FROM rcor, sub, pcen),
-code AS (SELECT vec_id, s, cid FROM (
-           SELECT vec_id, s, cid,
-                  row_number() OVER (PARTITION BY vec_id, s
-                                     ORDER BY d2, cid) AS rn
-           FROM dist) WHERE rn = 1),
-q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 8),
-ps AS (SELECT q.qid, icen.icid,
-         list_dot_product(q.qv, icen.icv) /
-         (sqrt(list_dot_product(q.qv, q.qv)) *
-          sqrt(list_dot_product(icen.icv, icen.icv))) AS s
-       FROM q CROSS JOIN icen),
-probes AS (SELECT qid, icid AS bucket_id FROM (
-             SELECT ps.*, row_number() OVER (PARTITION BY qid
-                                             ORDER BY s DESC, icid) AS rn
-             FROM ps WHERE s IS NOT NULL) WHERE rn <= 4),
-lut AS (SELECT q.qid, sub.s, pcen.cid,
-          list_sum(list_transform(range(1, 17), i ->
-            qv[sub.s * 16 + i] * cv[sub.s * 16 + i])) AS pd
-        FROM q, sub, pcen),
-parts AS (SELECT l.qid, co.vec_id,
-            max(CASE WHEN co.s = 0 THEN l.pd END) AS p0,
-            max(CASE WHEN co.s = 1 THEN l.pd END) AS p1,
-            max(CASE WHEN co.s = 2 THEN l.pd END) AS p2,
-            max(CASE WHEN co.s = 3 THEN l.pd END) AS p3
-          FROM code co JOIN lut l ON l.s = co.s AND l.cid = co.cid
-          GROUP BY l.qid, co.vec_id),
+{_ORACLE_PQ_CODE},
+{_ORACLE_IVFPQ_PROBES},
+{_ORACLE_PQ_PARTS},
 sc AS (SELECT parts.qid AS query_id, parts.vec_id AS neighbor_id,
          round(((((list_dot_product(q.qv, icen.icv) + p0) + p1) + p2)
                 + p3), 6) AS adc_sim
@@ -4283,12 +4094,7 @@ sc AS (SELECT parts.qid AS query_id, parts.vec_id AS neighbor_id,
                     AND p.bucket_id = asg.bucket_id
        JOIN q ON q.qid = parts.qid
        WHERE parts.vec_id <> parts.qid),
-r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY adc_sim DESC, neighbor_id)
-        AS rank
-      FROM sc)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, adc_sim
-FROM r WHERE rank <= 10
+{_ORACLE_ADC_TOP10}
 """
 
 
@@ -4301,20 +4107,7 @@ def _q_a_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 k=10, m=4, n_centroids=16)
 
 
-_SQL_A_PQ_RECALL = f"""
-WITH ap AS (SELECT query_id, neighbor_id FROM ({_SQL_A_PQ_TOPK})),
-ex AS (SELECT query_id, neighbor_id FROM ({_SQL_A_COSINE}))
-SELECT (SELECT count(DISTINCT query_id) FROM ex) AS n_queries,
-       10 AS k,
-       (SELECT count(*) FROM ex) AS n_exact,
-       (SELECT count(*) FROM ap SEMI JOIN ex
-          ON ap.query_id = ex.query_id
-         AND ap.neighbor_id = ex.neighbor_id) AS n_hits,
-       round((SELECT count(*) FROM ap SEMI JOIN ex
-                ON ap.query_id = ex.query_id
-               AND ap.neighbor_id = ex.neighbor_id)
-             / CAST((SELECT count(*) FROM ex) AS DOUBLE), 6) AS recall
-"""
+_SQL_A_PQ_RECALL = _oracle_recall(_SQL_A_PQ_TOPK)
 
 
 def _q_a_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4377,7 +4170,6 @@ def _q_v_profile_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
     # out-of-vocabulary event_type on ~1%). The oracle re-derives the
     # SAME envelope from the even half and applies the same predicates
     # with byte-identical messages.
-    from json_schema_rs_spark.plans.infer import spec_from_profile
     ev = _t(spark, sf_dir, "events")
     a = ev.filter(F.col("event_id") % 2 == 0)
     b = (ev.filter(F.col("event_id") % 2 == 1)
@@ -4388,7 +4180,7 @@ def _q_v_profile_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.when(F.col("event_id") % 97 == 0,
                               F.col("value") * 10)
                         .otherwise(F.col("value"))))
-    spec = spec_from_profile(a, ["event_type", "value"])
+    spec = infer.spec_from_profile(a, ["event_type", "value"])
     return ValidationEngine(spec, key_cols=("event_id",)) \
         .validate(b).violations
 
@@ -4579,22 +4371,13 @@ def _q_x_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.corpus_report(_t(spark, sf_dir, "documents"))
 
 
-_SQL_X_CORPUS_REPORT = """
+_SQL_X_CORPUS_REPORT = f"""
 WITH b AS (SELECT source,
   coalesce(length(text), 0) AS nc0,
   len(string_split(coalesce(text, ''), ' ')) AS nw0,
-  length(text)::DOUBLE AS nc,
-  len(string_split(text, ' '))::DOUBLE AS nw,
-  len(regexp_extract_all(text, '[.,!?;:]'))::DOUBLE AS np,
-  len(list_filter(string_split(text, ' '),
-      w -> list_contains(['the','a','of','and','to','in','is','it','that','for'], w)))::DOUBLE AS ns
+  {_ORACLE_QUALITY_FEATURES}
 FROM documents),
-q AS (SELECT source, nc0, nw0,
-  round(0.4 * least(nc / 500.0, 1.0) + 0.3 * least(ns / nw * 5, 1.0)
-      + 0.2 * least(((nc - (nw - 1)) / nw) / 8, 1.0)
-      + 0.1 * (1.0 - least(coalesce(np / nullif(nc, 0), 0.0) * 10, 1.0)), 6)
-    AS qq
-FROM b)
+q AS (SELECT source, nc0, nw0, {_ORACLE_QUALITY_SCORE} AS qq FROM b)
 SELECT source, count(*) AS n_docs,
   CAST(sum(nc0) AS BIGINT) AS total_chars,
   CAST(sum(nw0) AS BIGINT) AS total_tokens,
@@ -4605,20 +4388,14 @@ FROM q GROUP BY source
 """
 
 
-_SQL_X_QUALITY = """
-WITH b AS (SELECT doc_id, length(text)::DOUBLE AS nc,
-  len(string_split(text, ' '))::DOUBLE AS nw,
-  len(regexp_extract_all(text, '[.,!?;:]'))::DOUBLE AS np,
-  len(list_filter(string_split(text, ' '),
-      w -> list_contains(['the','a','of','and','to','in','is','it','that','for'], w)))::DOUBLE AS ns
+_SQL_X_QUALITY = f"""
+WITH b AS (SELECT doc_id, {_ORACLE_QUALITY_FEATURES}
 FROM documents)
 SELECT doc_id,
   round((nc - (nw - 1)) / nw, 6) AS mean_word_len,
   round(coalesce(np / nullif(nc, 0), 0.0), 6) AS punct_ratio,
   round(ns / nw, 6) AS stopword_ratio,
-  round(0.4 * least(nc / 500.0, 1.0) + 0.3 * least(ns / nw * 5, 1.0)
-      + 0.2 * least(((nc - (nw - 1)) / nw) / 8, 1.0)
-      + 0.1 * (1.0 - least(coalesce(np / nullif(nc, 0), 0.0) * 10, 1.0)), 6) AS quality
+  {_ORACLE_QUALITY_SCORE} AS quality
 FROM b
 """
 
@@ -4636,18 +4413,7 @@ def _q_x_quality_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_X_QUALITY_SAMPLE = f"""
-WITH b AS (SELECT doc_id, length(text)::DOUBLE AS nc,
-  len(string_split(text, ' '))::DOUBLE AS nw,
-  len(regexp_extract_all(text, '[.,!?;:]'))::DOUBLE AS np,
-  len(list_filter(string_split(text, ' '),
-      w -> list_contains(['the','a','of','and','to','in','is','it','that','for'], w)))::DOUBLE AS ns
-FROM documents),
-q AS (SELECT doc_id,
-  round(0.4 * least(nc / 500.0, 1.0) + 0.3 * least(ns / nw * 5, 1.0)
-      + 0.2 * least(((nc - (nw - 1)) / nw) / 8, 1.0)
-      + 0.1 * (1.0 - least(coalesce(np / nullif(nc, 0), 0.0) * 10, 1.0)), 6)
-    AS quality
-FROM b)
+WITH {_oracle_quality("documents")}
 SELECT doc_id, quality FROM q
 WHERE quality >= 0.6
   AND substr(md5(concat(CAST(doc_id AS VARCHAR), '#qsamp')), 1, 8)
@@ -4712,8 +4478,7 @@ def _q_x_char_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gibberish/randomness signals: char entropy over the doc's own
     # sorted distinct characters (order-pinned fold) + digit/upper/space
     # ratios — all row-local codegen/HOF, zero shuffle
-    from json_schema_rs_spark.operators.textstats import char_stats
-    return char_stats(_t(spark, sf_dir, "documents"))
+    return textstats.char_stats(_t(spark, sf_dir, "documents"))
 
 
 _SQL_X_CHAR_STATS = """
@@ -4747,7 +4512,6 @@ def _q_x_line_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (every even doc repeats its head line) and duplicate paragraphs
     # (every third doc gets two identical trailing paragraphs), so all
     # six output columns exercise both polarities
-    from json_schema_rs_spark.operators.textstats import line_repetition
     docs = _t(spark, sf_dir, "documents")
     salted = docs.withColumn("text", F.concat(
         F.substring(F.col("text"), 1, 40), F.lit("\n"),
@@ -4758,7 +4522,7 @@ def _q_x_line_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("doc_id") % 3 == 0,
                F.lit("\n\nrepeated para\n\nrepeated para"))
          .otherwise(F.lit(""))))
-    return line_repetition(salted)
+    return textstats.line_repetition(salted)
 
 
 _SQL_X_LINE_REP = r"""
@@ -4802,7 +4566,6 @@ def _q_x_blockwords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # C4 bad-words rule: every 4th doc gets a punctuated blocklist hit,
     # every 9th a plural near-miss that must NOT match (whole-word
     # contract), so count and verdict fire in both polarities
-    from json_schema_rs_spark.operators.textstats import blockword_stats
     docs = _t(spark, sf_dir, "documents")
     salted = docs.select("doc_id", F.concat(
         F.col("text"),
@@ -4810,7 +4573,7 @@ def _q_x_blockwords(spark: SparkSession, sf_dir: str) -> DataFrame:
          .otherwise(F.lit("")),
         F.when(F.col("doc_id") % 9 == 0, F.lit(" the casinos closed"))
          .otherwise(F.lit(""))).alias("text"))
-    return blockword_stats(salted, ["casino", "jackpot"])
+    return textstats.blockword_stats(salted, ["casino", "jackpot"])
 
 
 _SQL_X_BLOCKWORDS = r"""
@@ -4839,8 +4602,6 @@ def _q_x_redact_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (redacted), every 5th a checksum-failing lookalike (kept), every
     # 7th a dashed valid PAN (redacted); the oracle re-derives
     # candidates, the mod-10 fold, and the exact rewritten bytes
-    from json_schema_rs_spark.operators.textstats import (
-        redact_card_numbers)
     docs = _t(spark, sf_dir, "documents")
     salted = docs.select("doc_id", F.concat(
         F.col("text"),
@@ -4851,7 +4612,7 @@ def _q_x_redact_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("doc_id") % 7 == 0,
                F.lit(" pan 5500-0000-0000-0004 end"))
          .otherwise(F.lit(""))).alias("text"))
-    return redact_card_numbers(salted)
+    return textstats.redact_card_numbers(salted)
 
 
 _SQL_X_REDACT_CARDS = r"""
@@ -4894,14 +4655,13 @@ def _q_x_dup_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repeats) is flagged; the oracle re-derives windows, per-doc dup
     # counts, and coverage over gram STRINGS (equal up to 64-bit hash
     # collisions within one doc)
-    from json_schema_rs_spark.operators.textstats import dup_ngram_within
     docs = _t(spark, sf_dir, "documents")
     salted = docs.select("doc_id", F.concat(
         F.col("text"),
         F.when(F.col("doc_id") % 3 == 0,
                F.lit(" alpha beta gamma alpha beta gamma"))
          .otherwise(F.lit(""))).alias("text"))
-    return dup_ngram_within(salted, n=3)
+    return textstats.dup_ngram_within(salted, n=3)
 
 
 _SQL_X_DUP_WITHIN = """
@@ -4944,7 +4704,6 @@ def _q_x_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # base vocab carries only "the"), a 10-bullet block (every 7th),
     # symbol spam (every 13th) and ellipsis lines (every 17th) so each
     # rule fires in both polarities
-    from json_schema_rs_spark.operators.textstats import gopher_gate
     docs = _t(spark, sf_dir, "documents")
     salted = docs.select("doc_id", F.concat(
         F.col("text"),
@@ -4958,7 +4717,7 @@ def _q_x_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("doc_id") % 17 == 0,
                F.lit("\nto be continued...\nmore soon..."))
          .otherwise(F.lit(""))).alias("text"))
-    return gopher_gate(salted)
+    return textstats.gopher_gate(salted)
 
 
 _SQL_X_GOPHER_GATE = r"""
@@ -5015,7 +4774,6 @@ def _q_x_c4_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # line (always dropped), a javascript line on every 4th doc, a
     # "lorem ipsum" closer on every 11th, a curly brace on every 13th —
     # so line and doc rules both fire in both polarities
-    from json_schema_rs_spark.operators.textstats import c4_clean
     docs = _t(spark, sf_dir, "documents")
     salted = docs.select("doc_id", F.concat(
         F.lit("Sentence one about "), F.substring("text", 1, 20),
@@ -5033,7 +4791,7 @@ def _q_x_c4_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
          .otherwise(F.lit("Normal closing line indeed.")),
         F.when(F.col("doc_id") % 13 == 0, F.lit(" {"))
          .otherwise(F.lit(""))).alias("text"))
-    return c4_clean(salted)
+    return textstats.c4_clean(salted)
 
 
 _SQL_X_C4_CLEAN = """
@@ -5076,7 +4834,6 @@ def _q_x_encoding_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # md5-bucketed docs, count each damage class with explicit-codepoint
     # regexes and emit the ratio + verdict (any replacement char, or
     # ratio past 1e-3, is 'damaged').
-    from json_schema_rs_spark.operators.textstats import encoding_damage
     docs = _t(spark, sf_dir, "documents")
     h = F.substring(F.md5(F.concat(F.col("doc_id").cast("string"),
                                    F.lit("#enc"))), 1, 1)
@@ -5084,7 +4841,7 @@ def _q_x_encoding_check(spark: SparkSession, sf_dir: str) -> DataFrame:
              .when(h < "6", F.concat(F.col("text"), F.lit(" �")))
              .when(h < "8", F.concat(F.col("text"), F.lit("\x07")))
              .otherwise(F.col("text")))
-    return encoding_damage(docs.select("doc_id", text.alias("text")))
+    return textstats.encoding_damage(docs.select("doc_id", text.alias("text")))
 
 
 _SQL_X_ENCODING_CHECK = """
@@ -5273,19 +5030,8 @@ def _q_x_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         q, "quality", [0.2, 0.5, 0.8, 1.0], key_col="doc_id")
 
 
-_SQL_X_QUALITY_BUCKETS = """
-WITH b AS (SELECT doc_id, length(text)::DOUBLE AS nc,
-  len(string_split(text, ' '))::DOUBLE AS nw,
-  len(regexp_extract_all(text, '[.,!?;:]'))::DOUBLE AS np,
-  len(list_filter(string_split(text, ' '),
-      w -> list_contains(['the','a','of','and','to','in','is','it','that','for'], w)))::DOUBLE AS ns
-FROM documents),
-q AS (SELECT doc_id,
-  round(0.4 * least(nc / 500.0, 1.0) + 0.3 * least(ns / nw * 5, 1.0)
-      + 0.2 * least(((nc - (nw - 1)) / nw) / 8, 1.0)
-      + 0.1 * (1.0 - least(coalesce(np / nullif(nc, 0), 0.0) * 10, 1.0)),
-      6) AS quality
-FROM b),
+_SQL_X_QUALITY_BUCKETS = f"""
+WITH {_oracle_quality("documents")},
 e AS (SELECT quantile_disc(quality, 0.25) AS e1,
              quantile_disc(quality, 0.50) AS e2,
              quantile_disc(quality, 0.75) AS e3 FROM q),
@@ -5480,12 +5226,8 @@ def _q_x_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_hit_shingles", "contaminated")
 
 
-_SQL_X_DECONTAM = """
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-sh AS (SELECT doc_id,
-              list_distinct([concat_ws(' ', ws[i], ws[i+1], ws[i+2])
-                             for i in range(1, len(ws) - 1)]) AS s
-       FROM w),
+_SQL_X_DECONTAM = f"""
+WITH {_oracle_shingles("documents")},
 bench AS (SELECT DISTINCT unnest(s) AS sg FROM sh WHERE doc_id % 97 = 0),
 ex AS (SELECT doc_id, unnest(s) AS sg FROM sh WHERE doc_id % 97 <> 0),
 hits AS (SELECT doc_id, count(*) AS n_hit FROM ex
@@ -5513,12 +5255,8 @@ def _q_x_fuzzy_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         train, bench, threshold=0.8, n=3, bands=32)
 
 
-_SQL_X_FUZZY_DECONTAM = """
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-sh AS (SELECT doc_id,
-              list_distinct([concat_ws(' ', ws[i], ws[i+1], ws[i+2])
-                             for i in range(1, len(ws) - 1)]) AS s
-       FROM w),
+_SQL_X_FUZZY_DECONTAM = f"""
+WITH {_oracle_shingles("documents")},
 ex_t AS (SELECT doc_id, unnest(s) AS sg FROM sh WHERE doc_id % 7 <> 0),
 ex_b AS (SELECT doc_id, unnest(s) AS sg FROM sh WHERE doc_id % 7 = 0),
 p AS (SELECT t.doc_id AS doc_id, b.doc_id AS bench_id, count(*) AS inter
@@ -5548,7 +5286,7 @@ def _q_x_prep_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         "quality")
 
 
-_SQL_X_PREP_CORPUS = """
+_SQL_X_PREP_CORPUS = f"""
 WITH norm AS (
   SELECT doc_id,
          trim(regexp_replace(regexp_replace(text,
@@ -5563,11 +5301,7 @@ b AS (SELECT doc_id, t, length(t)::DOUBLE AS nc,
       FROM norm),
 q AS (SELECT doc_id, t, length(t) AS n_chars,
              len(string_split(t, ' ')) AS ws_tokens,
-             round(0.4 * least(nc / 500.0, 1.0)
-                 + 0.3 * least(ns / nw * 5, 1.0)
-                 + 0.2 * least(((nc - (nw - 1)) / nw) / 8, 1.0)
-                 + 0.1 * (1.0 - least(coalesce(np / nullif(nc, 0), 0.0) * 10,
-                                      1.0)), 6) AS quality
+             {_ORACLE_QUALITY_SCORE} AS quality
       FROM b),
 gated AS (SELECT * FROM q
           WHERE t IS NOT NULL AND quality >= 0.5 AND doc_id % 97 <> 0),
@@ -5726,8 +5460,6 @@ def _q_x_vocab_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical arc in SQL: total-order vocab head, casefold join with
     # the HAVING-count(*)=1 ambiguity drop, posexploded token remap,
     # position-ordered reassembly.
-    from json_schema_rs_spark.operators.textstats import (
-        remap_tokens, vocab_remap_plan)
 
     docs = _t(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
@@ -5735,8 +5467,8 @@ def _q_x_vocab_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.when(F.col("doc_id") % 5 == 0, F.upper("text"))
          .otherwise(F.col("text")).alias("text"))
-    plan = vocab_remap_plan(base, cur, k=50)
-    rep = remap_tokens(cur, plan, "text")
+    plan = textstats.vocab_remap_plan(base, cur, k=50)
+    rep = textstats.remap_tokens(cur, plan, "text")
     return rep.select("doc_id", "clean_text").orderBy("doc_id")
 
 
@@ -5787,30 +5519,9 @@ def _q_x_soft_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.dup_weighted_sample(docs, groups)
 
 
-_SQL_X_SOFT_DEDUP = """
+_SQL_X_SOFT_DEDUP = f"""
 WITH RECURSIVE
-w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-sh AS (SELECT doc_id,
-              list_distinct([concat_ws(' ', ws[i], ws[i+1], ws[i+2])
-                             for i in range(1, len(ws) - 1)]) AS s
-       FROM w),
-ex AS (SELECT doc_id, unnest(s) AS sg FROM sh),
-p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-      FROM ex a JOIN ex b ON a.sg = b.sg AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-sz AS (SELECT doc_id, len(s) AS n FROM sh),
-pr AS (SELECT doc_a, doc_b
-       FROM p JOIN sz sa ON p.doc_a = sa.doc_id
-              JOIN sz sb ON p.doc_b = sb.doc_id
-       WHERE inter::DOUBLE / (sa.n + sb.n - inter) >= 0.8),
-e AS (SELECT doc_a AS a, doc_b AS b FROM pr
-      UNION SELECT doc_b, doc_a FROM pr),
-reach(n, m) AS (
-    SELECT a, a FROM (SELECT DISTINCT a FROM e) t
-    UNION
-    SELECT r.n, e.b FROM reach r JOIN e ON r.m = e.a
-),
-g AS (SELECT n AS doc_id, min(m) AS group_id FROM reach GROUP BY n),
+{_oracle_dup_groups("documents")},
 sizes AS (SELECT group_id, count(*) AS n_copies FROM g GROUP BY group_id),
 mem AS (SELECT g.doc_id, g.group_id, sizes.n_copies
         FROM g JOIN sizes USING (group_id)),
@@ -5907,25 +5618,16 @@ def _q_d_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groups) IS the transcripts dedup story — identical conversations
     # collapse regardless of row order or physical layout, because the
     # rendering is order-canonical.
-    from json_schema_rs_spark.operators.dedup import exact_duplicate_groups
-    from json_schema_rs_spark.operators.packing import render_conversations
     tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
-    return exact_duplicate_groups(render_conversations(tx),
-                                  text_col="text", id_col="conv_id")
+    return dedup.exact_duplicate_groups(packing.render_conversations(tx),
+                                        text_col="text", id_col="conv_id")
 
 
 _SQL_D_CONV_DEDUP = f"""
-WITH tx AS ({_ORACLE_TX_TOOLS}),
-r AS (SELECT conv_id,
-             string_agg('<|' || coalesce(role, 'unknown') || '|>'
-                        || chr(10) || coalesce(text, ''), chr(10)
-                        ORDER BY coalesce(turn_idx, -2147483648),
-                                 coalesce(role, 'unknown'),
-                                 coalesce(text, '')) AS text
-      FROM tx GROUP BY conv_id)
+WITH {_ORACLE_RENDERED}
 SELECT md5(text) AS text_hash, count(*) AS n_docs,
        min(conv_id) AS keep_id
-FROM r GROUP BY md5(text)
+FROM conv GROUP BY md5(text)
 """
 
 
@@ -5956,9 +5658,8 @@ def _conv_fuzzy_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate per branch — at real scale the rendered corpus is written
     to Iceberg once and dedup reads THAT (same flow as d_dup_groups'
     per-round checkpoint; cost lands in compile_sec)."""
-    from json_schema_rs_spark.operators.packing import render_conversations
     tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
-    r = (render_conversations(tx)
+    r = (packing.render_conversations(tx)
          .select(F.col("conv_id").alias("doc_id"), "text"))
     corpus = r.select(F.explode(F.array(
         F.struct(F.col("doc_id"), F.col("text")),
@@ -5969,27 +5670,8 @@ def _conv_fuzzy_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_D_CONV_FUZZY = f"""
-WITH tx AS ({_ORACLE_TX_TOOLS}),
-r0 AS (SELECT conv_id AS doc_id,
-              string_agg('<|' || coalesce(role, 'unknown') || '|>'
-                         || chr(10) || coalesce(text, ''), chr(10)
-                         ORDER BY coalesce(turn_idx, -2147483648),
-                                  coalesce(role, 'unknown'),
-                                  coalesce(text, '')) AS text
-       FROM tx GROUP BY conv_id),
-r AS (SELECT doc_id, text FROM r0
-      UNION ALL
-      SELECT doc_id || '~v', text || ' v2' FROM r0),
-w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM r),
-sh AS (SELECT doc_id,
-              list_distinct([concat_ws(' ', ws[i], ws[i+1], ws[i+2])
-                             for i in range(1, len(ws) - 1)]) AS s
-       FROM w),
-ex AS (SELECT doc_id, unnest(s) AS sg FROM sh),
-p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-      FROM ex a JOIN ex b ON a.sg = b.sg AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-sz AS (SELECT doc_id, len(s) AS n FROM sh)
+WITH {_ORACLE_CONV_FUZZY_CORPUS},
+{_oracle_overlap("r")}
 SELECT doc_a, doc_b,
        inter::DOUBLE / (sa.n + sb.n - inter) AS jaccard
 FROM p JOIN sz sa ON p.doc_a = sa.doc_id JOIN sz sb ON p.doc_b = sb.doc_id
@@ -6011,62 +5693,19 @@ def _q_d_conv_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ties), singletons surviving as their own group — canonical_docs
     # exercised with STRING ids (conv ids), which the (-score, id)
     # struct-argmax supports natively
-    from json_schema_rs_spark.operators.textstats import quality_score
     corpus = _conv_fuzzy_corpus(spark, sf_dir)
     pairs = dedup.minhash_lsh_pairs(corpus, n=3, threshold=0.8, bands=32)
     groups = dedup.near_dup_groups(pairs)
-    scored = quality_score(corpus, text_col="text", id_col="doc_id") \
-        .select("doc_id", "quality")
+    scored = textstats.quality_score(
+        corpus, text_col="text", id_col="doc_id").select("doc_id", "quality")
     return dedup.canonical_docs(scored, groups)
 
 
 _SQL_D_CONV_CANONICAL = f"""
 WITH RECURSIVE
-tx AS ({_ORACLE_TX_TOOLS}),
-r0 AS (SELECT conv_id AS doc_id,
-              string_agg('<|' || coalesce(role, 'unknown') || '|>'
-                         || chr(10) || coalesce(text, ''), chr(10)
-                         ORDER BY coalesce(turn_idx, -2147483648),
-                                  coalesce(role, 'unknown'),
-                                  coalesce(text, '')) AS text
-       FROM tx GROUP BY conv_id),
-r AS (SELECT doc_id, text FROM r0
-      UNION ALL
-      SELECT doc_id || '~v', text || ' v2' FROM r0),
-w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM r),
-sh AS (SELECT doc_id,
-              list_distinct([concat_ws(' ', ws[i], ws[i+1], ws[i+2])
-                             for i in range(1, len(ws) - 1)]) AS s
-       FROM w),
-ex AS (SELECT doc_id, unnest(s) AS sg FROM sh),
-p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-      FROM ex a JOIN ex b ON a.sg = b.sg AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-sz AS (SELECT doc_id, len(s) AS n FROM sh),
-pr AS (SELECT doc_a, doc_b
-       FROM p JOIN sz sa ON p.doc_a = sa.doc_id
-              JOIN sz sb ON p.doc_b = sb.doc_id
-       WHERE inter::DOUBLE / (sa.n + sb.n - inter) >= 0.8),
-e AS (SELECT doc_a AS a, doc_b AS b FROM pr
-      UNION SELECT doc_b, doc_a FROM pr),
-reach(n, m) AS (
-    SELECT a, a FROM (SELECT DISTINCT a FROM e) t
-    UNION
-    SELECT r2.n, e.b FROM reach r2 JOIN e ON r2.m = e.a
-),
-g AS (SELECT n AS doc_id, min(m) AS group_id FROM reach GROUP BY n),
-qb AS (SELECT doc_id, length(text)::DOUBLE AS nc,
-  len(string_split(text, ' '))::DOUBLE AS nw,
-  len(regexp_extract_all(text, '[.,!?;:]'))::DOUBLE AS np,
-  len(list_filter(string_split(text, ' '),
-      x -> list_contains(['the','a','of','and','to','in','is','it','that','for'], x)))::DOUBLE AS ns
-FROM r),
-q AS (SELECT doc_id,
-  round(0.4 * least(nc / 500.0, 1.0) + 0.3 * least(ns / nw * 5, 1.0)
-      + 0.2 * least(((nc - (nw - 1)) / nw) / 8, 1.0)
-      + 0.1 * (1.0 - least(coalesce(np / nullif(nc, 0), 0.0) * 10, 1.0)), 6)
-    AS quality
-FROM qb),
+{_ORACLE_CONV_FUZZY_CORPUS},
+{_oracle_dup_groups("r")},
+{_oracle_quality("r")},
 best AS (SELECT doc_id, group_id, group_size, quality FROM (
   SELECT q.doc_id, g.group_id,
          count(*) OVER (PARTITION BY g.group_id) AS group_size,
@@ -6083,39 +5722,9 @@ FROM q WHERE doc_id NOT IN (SELECT doc_id FROM g)
 
 _SQL_D_CONV_FUZZY_GROUPS = f"""
 WITH RECURSIVE
-tx AS ({_ORACLE_TX_TOOLS}),
-r0 AS (SELECT conv_id AS doc_id,
-              string_agg('<|' || coalesce(role, 'unknown') || '|>'
-                         || chr(10) || coalesce(text, ''), chr(10)
-                         ORDER BY coalesce(turn_idx, -2147483648),
-                                  coalesce(role, 'unknown'),
-                                  coalesce(text, '')) AS text
-       FROM tx GROUP BY conv_id),
-r AS (SELECT doc_id, text FROM r0
-      UNION ALL
-      SELECT doc_id || '~v', text || ' v2' FROM r0),
-w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM r),
-sh AS (SELECT doc_id,
-              list_distinct([concat_ws(' ', ws[i], ws[i+1], ws[i+2])
-                             for i in range(1, len(ws) - 1)]) AS s
-       FROM w),
-ex AS (SELECT doc_id, unnest(s) AS sg FROM sh),
-p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-      FROM ex a JOIN ex b ON a.sg = b.sg AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-sz AS (SELECT doc_id, len(s) AS n FROM sh),
-pr AS (SELECT doc_a, doc_b
-       FROM p JOIN sz sa ON p.doc_a = sa.doc_id
-              JOIN sz sb ON p.doc_b = sb.doc_id
-       WHERE inter::DOUBLE / (sa.n + sb.n - inter) >= 0.8),
-e AS (SELECT doc_a AS a, doc_b AS b FROM pr
-      UNION SELECT doc_b, doc_a FROM pr),
-reach(n, m) AS (
-    SELECT a, a FROM (SELECT DISTINCT a FROM e) t
-    UNION
-    SELECT r2.n, e.b FROM reach r2 JOIN e ON r2.m = e.a
-)
-SELECT n AS doc_id, min(m) AS group_id FROM reach GROUP BY n
+{_ORACLE_CONV_FUZZY_CORPUS},
+{_oracle_dup_groups("r")}
+SELECT doc_id, group_id FROM g
 """
 
 
@@ -6123,19 +5732,14 @@ def _q_x_truncate_ctx(spark: SparkSession, sf_dir: str) -> DataFrame:
     # context-window truncation: keep each conversation's newest turns
     # that fit a 60-token budget (overhead 2/turn), system turns pinned
     # and charged first — the acting complement of t_context_budget.
-    from json_schema_rs_spark.operators.packing import truncate_to_budget
     tx = (_transcripts_from_events(_t(spark, sf_dir, "events"))
           .select("conv_id", "turn_idx", "role", "text"))
-    kept = truncate_to_budget(tx, 60, per_turn_overhead=2)
+    kept = packing.truncate_to_budget(tx, 60, per_turn_overhead=2)
     return kept.select("conv_id", "turn_idx", "role", "turn_tokens")
 
 
 _SQL_X_TRUNCATE_CTX = f"""
-WITH tx AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
-         {_ROLE_MAP} AS role, props AS text
-  FROM events),
+WITH tx AS ({_ORACLE_TX_TOOLS}),
 st AS (
   SELECT conv_id, turn_idx, role,
          CAST(CASE WHEN text IS NULL THEN 0
@@ -6160,18 +5764,13 @@ WHERE pin OR revcum <= greatest(CAST(60 AS BIGINT) - pincost, 0)
 def _q_x_turn_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conversation-grain sliding windows: every full 3-turn window with
     # stride 2 and its whitespace-token cost (+1/turn render overhead)
-    from json_schema_rs_spark.operators.packing import turn_windows
     tx = (_transcripts_from_events(_t(spark, sf_dir, "events"))
           .select("conv_id", "turn_idx", "text"))
-    return turn_windows(tx, 3, stride=2, per_turn_overhead=1)
+    return packing.turn_windows(tx, 3, stride=2, per_turn_overhead=1)
 
 
 _SQL_X_TURN_WINDOWS = f"""
-WITH tx AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
-         props AS text
-  FROM events),
+WITH tx AS ({_ORACLE_TX_TOOLS}),
 st AS (
   SELECT conv_id, turn_idx,
          CAST(CASE WHEN text IS NULL THEN 0
@@ -6199,23 +5798,15 @@ def _q_x_render_conv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # string + whitespace token count (the pack_sequences budget input).
     # This is the north rule's per-turn-text-equality invariant as an
     # operator: the oracle reproduces the exact rendered bytes.
-    from json_schema_rs_spark.operators.packing import render_conversations
     tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
-    return render_conversations(tx)
+    return packing.render_conversations(tx)
 
 
 _SQL_X_RENDER_CONV = f"""
-WITH tx AS ({_ORACLE_TX_TOOLS}),
-r AS (SELECT conv_id, CAST(count(*) AS INT) AS n_turns,
-             string_agg('<|' || coalesce(role, 'unknown') || '|>'
-                        || chr(10) || coalesce(text, ''), chr(10)
-                        ORDER BY coalesce(turn_idx, -2147483648),
-                                 coalesce(role, 'unknown'),
-                                 coalesce(text, '')) AS text
-      FROM tx GROUP BY conv_id)
+WITH {_ORACLE_RENDERED}
 SELECT conv_id, n_turns, text,
        CAST(len(regexp_split_to_array(text, '\\s+')) AS BIGINT) AS n_tokens
-FROM r
+FROM conv
 """
 
 
@@ -6226,10 +5817,8 @@ def _q_d_conv_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # carries the same marker and must score more target-like).
     # Conversations are selected or rejected WHOLE — the same
     # group-coherence rule every sampler here follows.
-    from json_schema_rs_spark.operators.packing import render_conversations
-    from json_schema_rs_spark.operators.sampling import dsir_weights
     tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
-    r = render_conversations(tx).select("conv_id", "text")
+    r = packing.render_conversations(tx).select("conv_id", "text")
     mark = F.substring(F.md5(F.concat(F.col("conv_id"),
                                       F.lit("#dsirm"))), 1, 1)
     raw = r.select(
@@ -6243,43 +5832,19 @@ def _q_d_conv_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("conv_id",
                    F.concat(F.col("text"), F.lit(" quantum flux"))
                    .alias("text")))
-    return dsir_weights(raw, tgt, text_col="text", id_col="conv_id",
-                        ns=(1,), buckets=512)
+    return sampling.dsir_weights(raw, tgt, text_col="text",
+                                 id_col="conv_id", ns=(1,), buckets=512)
 
 
 _SQL_D_CONV_DSIR = f"""
-WITH tx AS ({_ORACLE_TX_TOOLS}),
-r AS (SELECT conv_id,
-             string_agg('<|' || coalesce(role, 'unknown') || '|>'
-                        || chr(10) || coalesce(text, ''), chr(10)
-                        ORDER BY coalesce(turn_idx, -2147483648),
-                                 coalesce(role, 'unknown'),
-                                 coalesce(text, '')) AS text
-      FROM tx GROUP BY conv_id),
+WITH {_ORACLE_RENDERED},
 raw AS (SELECT conv_id,
     text || CASE WHEN substr(md5(conv_id || '#dsirm'), 1, 1) < '4'
                  THEN ' quantum flux' ELSE '' END AS t
-  FROM r),
+  FROM conv),
 tgt AS (SELECT conv_id, text || ' quantum flux' AS t
-  FROM r WHERE substr(md5(conv_id || '#dsirt'), 1, 1) < '4'),
-rg AS (SELECT conv_id,
-         ('0x' || substr(md5(g), 1, 8))::BIGINT % 512 AS b
-       FROM (SELECT conv_id,
-               unnest(list_filter(string_split(t, ' '), x -> x <> '')) AS g
-             FROM raw)),
-tg AS (SELECT ('0x' || substr(md5(g), 1, 8))::BIGINT % 512 AS b
-       FROM (SELECT
-               unnest(list_filter(string_split(t, ' '), x -> x <> '')) AS g
-             FROM tgt)),
-rc AS (SELECT b, count(*) AS c FROM rg GROUP BY b),
-tc AS (SELECT b, count(*) AS c FROM tg GROUP BY b),
-tot AS (SELECT (SELECT count(*) FROM rg) AS nr,
-               (SELECT count(*) FROM tg) AS nt),
-wt AS (SELECT rc.b,
-         CAST(floor(ln((coalesce(tc.c, 0) + 1) / (tot.nt + 512.0)) * 1e6)
-            - floor(ln((rc.c + 1) / (tot.nr + 512.0)) * 1e6) AS BIGINT)
-           AS w
-       FROM rc LEFT JOIN tc ON rc.b = tc.b, tot),
+  FROM conv WHERE substr(md5(conv_id || '#dsirt'), 1, 1) < '4'),
+{_oracle_dsir_weights("conv_id")},
 sc AS (SELECT rg.conv_id, count(*) AS n_grams,
               CAST(sum(wt.w) AS BIGINT) AS logw
        FROM rg JOIN wt ON rg.b = wt.b GROUP BY rg.conv_id)
@@ -6298,9 +5863,8 @@ def _q_x_sft_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (assistant completions only). Offsets are value-exact vs the
     # oracle's window cumsum, so the mask lines up with x_render_conv's
     # rendered text byte-for-byte.
-    from json_schema_rs_spark.operators.packing import sft_spans
     tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
-    return sft_spans(tx)
+    return packing.sft_spans(tx)
 
 
 _SQL_X_SFT_SPANS = f"""
@@ -6401,18 +5965,7 @@ def _q_d_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_D_CANONICAL = f"""
 WITH g AS ({_SQL_D_DUP_GROUPS}),
-qb AS (SELECT doc_id, length(text)::DOUBLE AS nc,
-  len(string_split(text, ' '))::DOUBLE AS nw,
-  len(regexp_extract_all(text, '[.,!?;:]'))::DOUBLE AS np,
-  len(list_filter(string_split(text, ' '),
-      w -> list_contains(['the','a','of','and','to','in','is','it','that','for'], w)))::DOUBLE AS ns
-FROM documents),
-q AS (SELECT doc_id,
-  round(0.4 * least(nc / 500.0, 1.0) + 0.3 * least(ns / nw * 5, 1.0)
-      + 0.2 * least(((nc - (nw - 1)) / nw) / 8, 1.0)
-      + 0.1 * (1.0 - least(coalesce(np / nullif(nc, 0), 0.0) * 10, 1.0)), 6)
-    AS quality
-FROM qb),
+{_oracle_quality("documents")},
 best AS (SELECT doc_id, group_id, group_size, quality FROM (
   SELECT q.doc_id, g.group_id,
          count(*) OVER (PARTITION BY g.group_id) AS group_size,
@@ -6503,9 +6056,7 @@ def _q_e_split_convs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conversation-identity repair: split reused ids at >30-min gaps,
     # renumber within each split — one exchange, all three windows on
     # the same sort (temporal.split_conversations)
-    from json_schema_rs_spark.operators.temporal import (
-        split_conversations)
-    out = split_conversations(
+    out = temporal.split_conversations(
         _t(spark, sf_dir, "events").select("user_id", "event_id", "ts"),
         conv_col="user_id", idx_col="event_id", ts_col="ts",
         gap_seconds=1800)
@@ -6538,8 +6089,7 @@ def _q_e_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     30-min inactivity gap per user, (ts, event_id) tie order; one row
     per session with count/start/end/duration. One Exchange on user_id;
     the stats aggregate reuses the window's hash partitioning."""
-    from json_schema_rs_spark.operators.temporal import session_stats
-    return session_stats(
+    return temporal.session_stats(
         _t(spark, sf_dir, "events").select("user_id", "event_id", "ts"),
         key_col="user_id", ts_col="ts", gap_seconds=1800,
         order_cols=("event_id",))
@@ -6569,9 +6119,8 @@ def _q_e_turn_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-conversation inter-turn latency profile with 12h stale-gap
     detection (temporal.turn_latency_stats): integer-microsecond sums and
     max are bit-exact cross-engine; avg is one rounded IEEE division."""
-    from json_schema_rs_spark.operators.temporal import turn_latency_stats
     tx = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    return turn_latency_stats(tx, stale_seconds=43200)
+    return temporal.turn_latency_stats(tx, stale_seconds=43200)
 
 
 _SQL_E_TURN_LATENCY = f"""
@@ -6597,9 +6146,8 @@ def _q_e_role_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide response latency by adjacent role pair
     (temporal.role_pair_latency): |roles|^2-row dashboard output,
     integer-microsecond sums bit-exact cross-engine."""
-    from json_schema_rs_spark.operators.temporal import role_pair_latency
     tx = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    return role_pair_latency(tx)
+    return temporal.role_pair_latency(tx)
 
 
 _SQL_E_ROLE_LATENCY = f"""
@@ -6626,14 +6174,13 @@ def _q_e_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     versions / model configs. Union + one Exchange + carried last() —
     no per-row subqueries, no broadcast, no cartesian. (ts, user_id)
     pairs are unique in the generator, so the match is deterministic."""
-    from json_schema_rs_spark.operators.temporal import asof_join
     ev = _t(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click") \
         .select("user_id", "event_id", "ts")
     errors = ev.filter(F.col("event_type") == "error") \
         .select("user_id", "ts", "value")
-    return asof_join(clicks, errors, on="user_id",
-                     right_cols=("value",)) \
+    return temporal.asof_join(clicks, errors, on="user_id",
+                              right_cols=("value",)) \
         .select("event_id", "user_id", "ts", "asof_ts",
                 F.col("asof_value").cast("double").alias("asof_value"))
 
@@ -6665,7 +6212,6 @@ def _q_v_multi_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
     all four roles, v2 narrows the enum and adds a text length floor,
     v9 rows flag UnknownSpecVersion. One plan branch per version, each
     fully whole-stage-codegen'd; all specs compile once on the driver."""
-    from json_schema_rs_spark.operators.runner import multi_spec_validate
     tx = _transcripts_from_events(_t(spark, sf_dir, "events")) \
         .withColumn(
             "spec_id",
@@ -6676,19 +6222,16 @@ def _q_v_multi_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spec_id",
         F.when(F.col("spec_id") == "v3", F.lit("v9"))
         .otherwise(F.col("spec_id")))
-    rep = multi_spec_validate(tx, {"v1": _MSV_V1, "v2": _MSV_V2},
-                              spec_col="spec_id")
+    rep = runner.multi_spec_validate(tx, {"v1": _MSV_V1, "v2": _MSV_V2},
+                                     spec_col="spec_id")
     return rep.violations
 
 
 _SQL_V_MULTI_SPEC = f"""
 WITH tx AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
-         {_ROLE_MAP} AS role, props AS text,
-         CASE user_id % 3 WHEN 0 THEN 'v1' WHEN 1 THEN 'v2'
-              ELSE 'v9' END AS spec_id
-  FROM events)
+  SELECT *, CASE CAST(conv_id AS BIGINT) % 3 WHEN 0 THEN 'v1'
+                 WHEN 1 THEN 'v2' ELSE 'v9' END AS spec_id
+  FROM ({_ORACLE_TX_TOOLS}))
 SELECT conv_id, turn_idx, spec_id, '/role' AS instance_path,
        'NotInEnum' AS code,
        '/role: value "' || role || '" not in enum (allowed: "system", "user", "assistant", "tool")' AS message
@@ -6722,482 +6265,221 @@ FROM tx WHERE spec_id = 'v9'
 """
 
 
-# Every entry name whose LATEST driver CORRECTNESS_r{1..4} row is green.
-# The driver's correctness sweep samples a PREFIX of queries(), so
-# queries() serves (1) round-4 non-green rows whose fixes landed this
-# round, then (2) never-yet-driver-checked oracle-able entries, then
-# (3) already-green entries, and keeps the declared no-value-oracle
-# entries LAST so they never consume a driver slot they cannot pass.
-# Frozen at round-5 start; extend with round-5's artifact next round.
-_DRIVER_GREEN_R1_R4 = frozenset((
-    "a_cosine_dup_bucketed", "a_cosine_dup_pairs", "a_cosine_topk",
-    "a_coverage_sample", "a_ivfpq_res", "a_ivfpq_topk", "a_pq_recall",
-    "a_pq_topk", "a_quantized_topk", "a_source_similarity",
-    "d_canonical_docs", "d_containment", "d_conv_dsir",
-    "d_dedup_report", "d_dup_groups", "d_exact_groups",
-    "d_incremental_dedup", "d_incremental_fuzzy", "d_minhash_lsh",
-    "d_ngram_jaccard", "d_simhash", "d_simhash_pairs",
-    "d_source_overlap", "flagship_transcripts", "m_media_meta",
-    "s_chi2_drift", "s_cvm_drift", "s_emb_drift", "s_exact_corr",
-    "s_exact_quantiles", "s_group_quantiles", "s_histogram",
-    "s_js_drift", "s_json_keys", "s_ks_drift", "s_mad_outliers",
-    "s_profile", "s_profile_drift", "s_psi_drift", "s_trend_anomaly",
-    "s_violation_trend", "s_vocab_drift", "s_w1_drift", "s_winsorize",
-    "t_coerce_vocab", "t_context_budget", "t_conv_bounds",
-    "t_conv_quality", "t_conv_verdicts", "t_drop_loops",
-    "t_dup_conflicts", "t_expectations", "t_fd_check", "t_freshness",
-    "t_gapfree_ordering", "t_hot_convs", "t_key_sync", "t_monotonic_ts",
-    "t_near_retry", "t_ref_coverage", "t_referential",
-    "t_referential_shuffle", "t_reindex_turns", "t_repair_validate",
-    "t_role_patterns", "t_role_protocol", "t_tool_pairing",
-    "t_transcript_diff", "t_tree_check", "t_turn_loops",
-    "t_unique_keys", "v_additional_forbid", "v_anyof", "v_array_errors",
-    "v_array_items", "v_bounds_frac", "v_bounds_int", "v_conditional",
-    "v_const", "v_content_json", "v_enum", "v_enum_stream",
-    "v_expected_types", "v_ext_anchors", "v_ext_numeric",
-    "v_ext_object", "v_formats", "v_invalid_json", "v_invalid_pattern",
-    "v_invalid_ref", "v_json_payload", "v_json_spec", "v_jsonl_source",
-    "v_length", "v_oneof_multi", "v_oneof_none", "v_pattern",
-    "v_pattern_hard", "v_ref_allof", "v_required", "v_review_queue",
-    "v_unevaluated", "v_uuid", "v_vector_check", "v_violation_stats",
-    "x_fingerprint", "x_language_id", "x_quality", "x_token_stats",
-))
-
-# Round-4 driver rows that were non-green for serialization-only reasons
-# (HUGEINT->float64 oracle dtype / array-typed output), all re-proven
-# value-exact and fixed this round — front of the prefix so the next
-# artifact supersedes the red rows. a_ivf_topk's only driver rows predate
-# its r3 value oracle, so it re-joins the front group too.
-_FIXED_RED_R4 = (
-    "a_ivf_topk", "a_mean_embedding", "a_normalize", "d_source_dup_rate",
-    "s_source_psi", "s_vocab_growth", "t_conv_profile",
-)
-
-# No value oracle is possible by design (approximate sketch paths whose
-# output depends on t-digest internals; k-means centroids from
-# driver-side Lloyd iterations). Accuracy/equality-gated in tests/;
-# kept LAST so the driver's sampled prefix spends slots only on entries
-# that can actually turn green.
-_NO_VALUE_ORACLE = (
-    "s_ks_sketch", "s_sketch_drift", "s_w1_sketch", "a_ivf_topk_trained",
+# One row per driver entry: (name, thunk, DuckDB oracle SQL or None).
+# The driver addresses entries by position and samples a prefix of
+# queries(), so the row order is part of the contract and
+# tests/test_entry_contract.py pins it: append new rows at the end and
+# bump the pin on purpose. None marks the four entries with no value
+# oracle by design (approximate sketch paths whose output depends on
+# t-digest internals; k-means centroids from driver-side Lloyd
+# iterations no SQL can reproduce). They sit after every oracle-able
+# entry so the sampled prefix spends no slot on an entry that cannot
+# turn green; their gates are accuracy and recall tests in tests/.
+_ENTRIES = (
+    ("a_ivf_topk", _q_a_ivf, _SQL_A_IVF),
+    ("a_mean_embedding", _q_a_mean_embedding, _SQL_A_MEAN_EMBEDDING),
+    ("a_normalize", _q_a_normalize, _SQL_A_NORMALIZE),
+    ("d_source_dup_rate", _q_d_source_dup_rate, _SQL_D_SOURCE_DUP_RATE),
+    ("s_source_psi", _q_s_source_psi, _SQL_S_SOURCE_PSI),
+    ("s_vocab_growth", _q_s_vocab_growth, _SQL_S_VOCAB_GROWTH),
+    ("t_conv_profile", _q_t_conv_profile, _SQL_T_CONV_PROFILE),
+    ("s_sketch_counts", _q_s_sketch_counts, _SQL_S_SKETCH_COUNTS),
+    ("a_centroid_classify", _q_a_centroid_classify, _SQL_A_CENTROID_CLASSIFY),
+    ("a_dim_profile", _q_a_dim_profile, _SQL_A_DIM_PROFILE),
+    ("a_knn_join", _q_a_knn_join, _SQL_A_KNN_JOIN),
+    ("a_quality_propagate", _q_a_quality_propagate, _SQL_A_QUALITY_PROPAGATE),
+    ("a_label_outliers", _q_a_label_outliers, _SQL_A_LABEL_OUTLIERS),
+    ("a_srp_dup_pairs", _q_a_srp_dup_pairs, _SQL_A_SRP_DUP_PAIRS),
+    ("a_semantic_dedup", _q_a_semantic_dedup, _SQL_A_SEMANTIC_DEDUP),
+    ("a_ivf_recall", _q_a_ivf_recall, _SQL_A_IVF_RECALL),
+    ("x_top_tokens", _q_x_top_tokens, _SQL_X_TOP_TOKENS),
+    ("x_heavy_hitters", _q_x_heavy_hitters, _SQL_X_HEAVY_HITTERS),
+    ("x_encoding_check", _q_x_encoding_check, _SQL_X_ENCODING_CHECK),
+    ("x_char_stats", _q_x_char_stats, _SQL_X_CHAR_STATS),
+    ("x_line_rep", _q_x_line_rep, _SQL_X_LINE_REP),
+    ("x_c4_clean", _q_x_c4_clean, _SQL_X_C4_CLEAN),
+    ("x_gopher_gate", _q_x_gopher_gate, _SQL_X_GOPHER_GATE),
+    ("x_dup_within", _q_x_dup_within, _SQL_X_DUP_WITHIN),
+    ("x_redact_cards", _q_x_redact_cards, _SQL_X_REDACT_CARDS),
+    ("x_blockwords", _q_x_blockwords, _SQL_X_BLOCKWORDS),
+    ("x_rep_ngram", _q_x_rep_ngram, _SQL_X_REP_NGRAM),
+    ("x_dup_ngrams", _q_x_dup_ngrams, _SQL_X_DUP_NGRAMS),
+    ("x_ngram_diversity", _q_x_ngram_diversity, _SQL_X_NGRAM_DIVERSITY),
+    ("x_quality_buckets", _q_x_quality_buckets, _SQL_X_QUALITY_BUCKETS),
+    ("x_oov_rate", _q_x_oov_rate, _SQL_X_OOV_RATE),
+    ("v_lang_mismatch", _q_v_lang_mismatch, _SQL_V_LANG_MISMATCH),
+    ("x_top_tokens_by", _q_x_top_tokens_by, _SQL_X_TOP_TOKENS_BY),
+    ("x_dedup_spans", _q_x_dedup_spans, _SQL_X_DEDUP_SPANS),
+    ("x_decontam_spans", _q_x_decontam_spans, _SQL_X_DECONTAM_SPANS),
+    ("x_lm_quality", _q_x_lm_quality, _SQL_X_LM_QUALITY),
+    ("x_decontaminate", _q_x_decontaminate, _SQL_X_DECONTAM),
+    ("x_fuzzy_decontam", _q_x_fuzzy_decontam, _SQL_X_FUZZY_DECONTAM),
+    ("x_novelty", _q_x_novelty, _SQL_X_NOVELTY),
+    ("x_quota_sample", _q_x_quota_sample, _SQL_X_QUOTA_SAMPLE),
+    ("x_dsir", _q_x_dsir, _SQL_X_DSIR),
+    ("x_dsir_sample", _q_x_dsir_sample, _SQL_X_DSIR_SAMPLE),
+    ("x_prep_corpus", _q_x_prep_corpus, _SQL_X_PREP_CORPUS),
+    ("x_corpus_report", _q_x_corpus_report, _SQL_X_CORPUS_REPORT),
+    ("x_quality_sample", _q_x_quality_sample, _SQL_X_QUALITY_SAMPLE),
+    ("x_doc_sample", _q_x_sample, _SQL_X_SAMPLE),
+    ("x_split_counts", _q_x_split, _SQL_X_SPLIT),
+    ("x_strat_sample", _q_x_strat, _SQL_X_STRAT),
+    ("x_shard_corpus", _q_x_shard, _SQL_X_SHARD),
+    ("x_mix_sources", _q_x_mix, _SQL_X_MIX),
+    ("x_mix_budget", _q_x_mix_budget, _SQL_X_MIX_BUDGET),
+    ("x_mix_temperature", _q_x_mix_temperature, _SQL_X_MIX_TEMPERATURE),
+    ("x_soft_dedup", _q_x_soft_dedup, _SQL_X_SOFT_DEDUP),
+    ("x_vocab_repair", _q_x_vocab_repair, _SQL_X_VOCAB_REPAIR),
+    ("x_pack_chunks", _q_x_pack, _SQL_X_PACK),
+    ("x_pack_report", _q_x_pack_report, _SQL_X_PACK_REPORT),
+    ("x_chunk_windows", _q_x_chunks, _SQL_X_CHUNKS),
+    ("x_turn_windows", _q_x_turn_windows, _SQL_X_TURN_WINDOWS),
+    ("x_render_conv", _q_x_render_conv, _SQL_X_RENDER_CONV),
+    ("x_truncate_ctx", _q_x_truncate_ctx, _SQL_X_TRUNCATE_CTX),
+    ("x_sft_spans", _q_x_sft_spans, _SQL_X_SFT_SPANS),
+    ("x_normalize_text", _q_x_normalize, _SQL_X_NORMALIZE),
+    ("v_profile_spec", _q_v_profile_spec, _SQL_V_PROFILE_SPEC),
+    ("v_clean_route", _q_v_clean_route, _SQL_V_CLEAN_ROUTE),
+    ("x_redact_pii", _q_x_redact, _SQL_X_REDACT),
+    ("x_boilerplate", _q_x_boilerplate, _SQL_X_BOILERPLATE),
+    ("x_url_domains", _q_x_url_domains, _SQL_X_URL_DOMAINS),
+    ("d_conv_dedup", _q_d_conv_dedup, _SQL_D_CONV_DEDUP),
+    ("d_conv_fuzzy", _q_d_conv_fuzzy, _SQL_D_CONV_FUZZY),
+    ("d_conv_fuzzy_groups", _q_d_conv_fuzzy_groups, _SQL_D_CONV_FUZZY_GROUPS),
+    ("d_conv_canonical", _q_d_conv_canonical, _SQL_D_CONV_CANONICAL),
+    ("e_split_convs", _q_e_split_convs, _SQL_E_SPLIT_CONVS),
+    ("e_sessionize", _q_e_sessionize, _SQL_E_SESSIONIZE),
+    ("e_asof_join", _q_e_asof_join, _SQL_E_ASOF_JOIN),
+    ("e_turn_latency", _q_e_turn_latency, _SQL_E_TURN_LATENCY),
+    ("e_role_latency", _q_e_role_latency, _SQL_E_ROLE_LATENCY),
+    ("v_multi_spec", _q_v_multi_spec, _SQL_V_MULTI_SPEC),
+    ("m_media_stats", _q_m_media_stats, _SQL_M_MEDIA_STATS),
+    ("m_frame_plan", _q_m_frames, _SQL_M_FRAMES),
+    ("flagship_transcripts", _flagship, _FLAGSHIP_ORACLE),
+    ("v_enum", _q_v_enum, _SQL_V_ENUM),
+    ("v_const", _q_v_const, _SQL_V_CONST),
+    ("v_bounds_int", _q_v_bounds, _SQL_V_BOUNDS),
+    ("v_ext_numeric", _q_v_ext_numeric, _SQL_V_EXT_NUMERIC),
+    ("v_ext_anchors", _q_v_ext_anchors, _SQL_V_EXT_ANCHORS),
+    ("v_formats", _q_v_formats, _SQL_V_FORMATS),
+    ("v_unevaluated", _q_v_unevaluated, _SQL_V_UNEVALUATED),
+    ("v_conditional", _q_v_conditional, _SQL_V_CONDITIONAL),
+    ("v_ext_object", _q_v_ext_object, _SQL_V_EXT_OBJECT),
+    ("v_content_json", _q_v_content_json, _SQL_V_CONTENT_JSON),
+    ("v_bounds_frac", _q_v_bounds_frac, _SQL_V_BOUNDS_FRAC),
+    ("v_length", _q_v_length, _SQL_V_LENGTH),
+    ("v_pattern", _q_v_pattern, _SQL_V_PATTERN),
+    ("v_pattern_hard", _q_v_pattern_hard, _SQL_V_PATTERN_HARD),
+    ("v_uuid", _q_v_uuid, _SQL_V_UUID),
+    ("v_required", _q_v_required, _SQL_V_REQUIRED),
+    ("v_anyof", _q_v_anyof, _SQL_V_ANYOF),
+    ("v_oneof_none", _q_v_oneof_none, _SQL_V_ONEOF_NONE),
+    ("v_oneof_multi", _q_v_oneof_multi, _SQL_V_ONEOF_MULTI),
+    ("v_json_payload", _q_v_json_payload, _SQL_V_JSON_PAYLOAD),
+    ("t_key_sync", _q_t_key_sync, _SQL_T_KEY_SYNC),
+    ("t_ref_coverage", _q_t_ref_coverage, _SQL_T_REF_COVERAGE),
+    ("t_role_patterns", _q_t_role_patterns, _SQL_T_ROLE_PATTERNS),
+    ("t_fd_check", _q_t_fd_check, _SQL_T_FD_CHECK),
+    ("t_freshness", _q_t_freshness, _SQL_T_FRESHNESS),
+    ("t_dup_conflicts", _q_t_dup_conflicts, _SQL_T_DUP_CONFLICTS),
+    ("s_mad_outliers", _q_s_mad_outliers, _SQL_S_MAD_OUTLIERS),
+    ("s_histogram", _q_s_histogram, _SQL_S_HISTOGRAM),
+    ("s_winsorize", _q_s_winsorize, _SQL_S_WINSORIZE),
+    ("s_json_keys", _q_s_json_keys, _SQL_S_JSON_KEYS),
+    ("v_json_spec", _q_v_json_spec, _SQL_V_JSON_SPEC),
+    ("v_array_items", _q_v_array_items, _SQL_V_ARRAY_ITEMS),
+    ("v_ref_allof", _q_v_ref_allof, _SQL_V_REF_ALLOF),
+    ("v_enum_stream", _q_v_enum_stream, _SQL_V_ENUM),
+    ("v_jsonl_source", _q_v_jsonl_source, _SQL_V_JSONL_SOURCE),
+    ("v_expected_types", _q_v_expected_types, _SQL_V_EXPECTED_TYPES),
+    ("v_array_errors", _q_v_array_errors, _SQL_V_ARRAY_ERRORS),
+    ("v_additional_forbid", _q_v_additional_forbid, _SQL_V_ADDITIONAL_FORBID),
+    ("v_invalid_ref", _q_v_invalid_ref, _SQL_V_INVALID_REF),
+    ("v_invalid_pattern", _q_v_invalid_pattern, _SQL_V_INVALID_PATTERN),
+    ("v_invalid_json", _q_v_invalid_json, _SQL_V_INVALID_JSON),
+    ("t_unique_keys", _q_t_unique, _SQL_T_UNIQUE),
+    ("t_referential", _q_t_referential, _SQL_T_REFERENTIAL),
+    ("t_referential_shuffle", _q_t_referential_shuffle, _SQL_T_REFERENTIAL),
+    ("t_gapfree_ordering", _q_t_gapfree, _SQL_T_GAPFREE),
+    ("t_monotonic_ts", _q_t_monotonic, _SQL_T_MONOTONIC),
+    ("t_reindex_turns", _q_t_reindex, _SQL_T_REINDEX),
+    ("t_repair_validate", _q_t_repair_validate, _SQL_T_REPAIR_VALIDATE),
+    ("t_tree_check", _q_t_tree_check, _SQL_T_TREE_CHECK),
+    ("t_near_retry", _q_t_near_retry, _SQL_T_NEAR_RETRY),
+    ("t_coerce_vocab", _q_t_coerce_vocab, _SQL_T_COERCE_VOCAB),
+    ("t_conv_quality", _q_t_conv_quality, _SQL_T_CONV_QUALITY),
+    ("t_hot_convs", _q_t_hot_convs, _SQL_T_HOT_CONVS),
+    ("t_role_protocol", _q_t_role_protocol, _SQL_T_ROLE_PROTOCOL),
+    ("t_tool_pairing", _q_t_tool_pairing, _SQL_T_TOOL_PAIRING),
+    ("t_conv_bounds", _q_t_conv_bounds, _SQL_T_CONV_BOUNDS),
+    ("t_context_budget", _q_t_context_budget, _SQL_T_CONTEXT_BUDGET),
+    ("s_violation_trend", _q_s_violation_trend, _SQL_S_VIOLATION_TREND),
+    ("s_trend_anomaly", _q_s_trend_anomaly, _SQL_S_TREND_ANOMALY),
+    ("t_turn_loops", _q_t_turn_loops, _SQL_T_TURN_LOOPS),
+    ("t_drop_loops", _q_t_drop_loops, _SQL_T_DROP_LOOPS),
+    ("t_conv_verdicts", _q_t_conv_verdicts, _SQL_T_CONV_VERDICTS),
+    ("t_expectations", _q_t_expectations, _SQL_T_EXPECTATIONS),
+    ("v_violation_stats", _q_v_violation_stats, _SQL_V_VIOLATION_STATS),
+    ("v_review_queue", _q_v_review_queue, _SQL_V_REVIEW_QUEUE),
+    ("t_transcript_diff", _q_t_transcript_diff, _SQL_T_TRANSCRIPT_DIFF),
+    ("s_profile", _q_s_profile, _SQL_S_PROFILE),
+    ("s_exact_quantiles", _q_s_exact_quantiles, _SQL_S_EXACT_QUANTILES),
+    ("s_exact_corr", _q_s_exact_corr, _SQL_S_EXACT_CORR),
+    ("s_group_quantiles", _q_s_group_quantiles, _SQL_S_GROUP_QUANTILES),
+    ("s_profile_drift", _q_s_profile_drift, _SQL_S_PROFILE_DRIFT),
+    ("s_chi2_drift", _q_s_chi2, _SQL_S_CHI2),
+    ("s_ks_drift", _q_s_ks, _SQL_S_KS),
+    ("s_cvm_drift", _q_s_cvm, _SQL_S_CVM),
+    ("s_vocab_drift", _q_s_vocab_drift, _SQL_S_VOCAB_DRIFT),
+    ("s_emb_drift", _q_s_emb_drift, _SQL_S_EMB_DRIFT),
+    ("s_psi_drift", _q_s_psi, _SQL_S_PSI),
+    ("s_js_drift", _q_s_js, _SQL_S_JS),
+    ("s_w1_drift", _q_s_w1, _SQL_S_W1),
+    ("d_exact_groups", _q_d_exact, _SQL_D_EXACT),
+    ("d_incremental_dedup", _q_d_incremental, _SQL_D_INCREMENTAL),
+    ("d_incremental_fuzzy", _q_d_incremental_fuzzy, _SQL_D_INCREMENTAL_FUZZY),
+    ("d_ngram_jaccard", _q_d_ngram, _SQL_D_NGRAM),
+    ("d_containment", _q_d_containment, _SQL_D_CONTAINMENT),
+    ("d_source_overlap", _q_d_source_overlap, _SQL_D_SOURCE_OVERLAP),
+    ("d_minhash_lsh", _q_d_minhash, _SQL_D_NGRAM),
+    ("d_dup_groups", _q_d_dup_groups, _SQL_D_DUP_GROUPS),
+    ("d_dedup_report", _q_d_dedup_report, _SQL_D_DEDUP_REPORT),
+    ("d_conv_dsir", _q_d_conv_dsir, _SQL_D_CONV_DSIR),
+    ("d_canonical_docs", _q_d_canonical, _SQL_D_CANONICAL),
+    ("d_simhash", _q_d_simhash, _SQL_D_SIMHASH),
+    ("d_simhash_pairs", _q_d_simhash_pairs, _SQL_D_SIMHASH_PAIRS),
+    ("a_cosine_topk", _q_a_cosine, _SQL_A_COSINE),
+    ("v_vector_check", _q_v_vector_check, _SQL_V_VECTOR_CHECK),
+    ("a_quantized_topk", _q_a_quantized_topk, _SQL_A_QUANTIZED_TOPK),
+    ("a_pq_topk", _q_a_pq_topk, _SQL_A_PQ_TOPK),
+    ("a_pq_recall", _q_a_pq_recall, _SQL_A_PQ_RECALL),
+    ("a_ivfpq_topk", _q_a_ivfpq_topk, _SQL_A_IVFPQ_TOPK),
+    ("a_ivfpq_res", _q_a_ivfpq_res, _SQL_A_IVFPQ_RES),
+    ("a_cosine_dup_pairs", _q_a_cosine_dup, _SQL_A_COSINE_DUP),
+    ("a_cosine_dup_bucketed", _q_a_cosine_dup_bucketed,
+     _SQL_A_COSINE_DUP_BUCKETED),
+    ("a_coverage_sample", _q_a_coverage_sample, _SQL_A_COVERAGE_SAMPLE),
+    ("a_source_similarity", _q_a_source_similarity, _SQL_A_SOURCE_SIMILARITY),
+    ("x_token_stats", _q_x_tokens, _SQL_X_TOKENS),
+    ("x_quality", _q_x_quality, _SQL_X_QUALITY),
+    ("x_language_id", _q_x_langid, _SQL_X_LANGID),
+    ("x_fingerprint", _q_x_fingerprint, _SQL_X_FINGERPRINT),
+    ("m_media_meta", _q_m_media, _SQL_M_MEDIA),
+    ("s_ks_sketch", _q_s_ks_sketch, None),
+    ("s_sketch_drift", _q_s_sketch_drift, None),
+    ("s_w1_sketch", _q_s_w1_sketch, None),
+    ("a_ivf_topk_trained", _q_a_ivf_trained, None),
 )
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ the
-    training-data pipeline operators). Column names match oracle_sql.
-    Ordering: never-driver-checked entries first (stable within each
-    group) — see ``_DRIVER_GREEN_R1_R4`` / ``_FIXED_RED_R4`` /
-    ``_NO_VALUE_ORACLE``."""
-    q = {
-        "flagship_transcripts": _flagship,
-        # row-local validation keywords
-        "v_enum": _q_v_enum,
-        "v_const": _q_v_const,
-        "v_bounds_int": _q_v_bounds,
-        "v_ext_numeric": _q_v_ext_numeric,
-        "v_ext_anchors": _q_v_ext_anchors,
-        "v_formats": _q_v_formats,
-        "v_unevaluated": _q_v_unevaluated,
-        "v_conditional": _q_v_conditional,
-        "v_ext_object": _q_v_ext_object,
-        "v_content_json": _q_v_content_json,
-        "v_bounds_frac": _q_v_bounds_frac,
-        "v_length": _q_v_length,
-        "v_pattern": _q_v_pattern,
-        "v_pattern_hard": _q_v_pattern_hard,
-        "v_uuid": _q_v_uuid,
-        "v_required": _q_v_required,
-        "v_anyof": _q_v_anyof,
-        "v_oneof_none": _q_v_oneof_none,
-        "v_oneof_multi": _q_v_oneof_multi,
-        "v_json_payload": _q_v_json_payload,
-        "t_key_sync": _q_t_key_sync,
-        "t_ref_coverage": _q_t_ref_coverage,
-        "t_role_patterns": _q_t_role_patterns,
-        "t_fd_check": _q_t_fd_check,
-        "t_freshness": _q_t_freshness,
-        "t_dup_conflicts": _q_t_dup_conflicts,
-        "s_mad_outliers": _q_s_mad_outliers,
-        "s_histogram": _q_s_histogram,
-        "s_winsorize": _q_s_winsorize,
-        "s_json_keys": _q_s_json_keys,
-        "v_json_spec": _q_v_json_spec,
-        "v_array_items": _q_v_array_items,
-        "v_ref_allof": _q_v_ref_allof,
-        "v_enum_stream": _q_v_enum_stream,
-        "v_jsonl_source": _q_v_jsonl_source,
-        # error-variant coverage (every reference error code fires)
-        "v_expected_types": _q_v_expected_types,
-        "v_array_errors": _q_v_array_errors,
-        "v_additional_forbid": _q_v_additional_forbid,
-        "v_invalid_ref": _q_v_invalid_ref,
-        "v_invalid_pattern": _q_v_invalid_pattern,
-        "v_invalid_json": _q_v_invalid_json,
-        # table-level checks
-        "t_unique_keys": _q_t_unique,
-        "t_referential": _q_t_referential,
-        "t_referential_shuffle": _q_t_referential_shuffle,
-        "t_gapfree_ordering": _q_t_gapfree,
-        "t_monotonic_ts": _q_t_monotonic,
-        "t_reindex_turns": _q_t_reindex,
-        "t_repair_validate": _q_t_repair_validate,
-        "t_tree_check": _q_t_tree_check,
-        "t_near_retry": _q_t_near_retry,
-        "t_coerce_vocab": _q_t_coerce_vocab,
-        "t_conv_quality": _q_t_conv_quality,
-        "t_hot_convs": _q_t_hot_convs,
-        # conversation-protocol checks
-        "t_role_protocol": _q_t_role_protocol,
-        "t_tool_pairing": _q_t_tool_pairing,
-        "t_conv_bounds": _q_t_conv_bounds,
-        "t_context_budget": _q_t_context_budget,
-        "s_violation_trend": _q_s_violation_trend,
-        "s_trend_anomaly": _q_s_trend_anomaly,
-        "s_vocab_growth": _q_s_vocab_growth,
-        "t_conv_profile": _q_t_conv_profile,
-        "t_turn_loops": _q_t_turn_loops,
-        "t_drop_loops": _q_t_drop_loops,
-        "t_conv_verdicts": _q_t_conv_verdicts,
-        "t_expectations": _q_t_expectations,
-        "v_violation_stats": _q_v_violation_stats,
-        "v_review_queue": _q_v_review_queue,
-        "t_transcript_diff": _q_t_transcript_diff,
-        # stats + drift
-        "s_profile": _q_s_profile,
-        "s_exact_quantiles": _q_s_exact_quantiles,
-        "s_exact_corr": _q_s_exact_corr,
-        "s_group_quantiles": _q_s_group_quantiles,
-        "s_profile_drift": _q_s_profile_drift,
-        "s_chi2_drift": _q_s_chi2,
-        "s_ks_drift": _q_s_ks,
-        "s_cvm_drift": _q_s_cvm,
-        "s_vocab_drift": _q_s_vocab_drift,
-        "s_emb_drift": _q_s_emb_drift,
-        "s_ks_sketch": _q_s_ks_sketch,
-        "s_sketch_drift": _q_s_sketch_drift,
-        "s_sketch_counts": _q_s_sketch_counts,
-        "s_psi_drift": _q_s_psi,
-        "s_source_psi": _q_s_source_psi,
-        "s_js_drift": _q_s_js,
-        "s_w1_drift": _q_s_w1,
-        "s_w1_sketch": _q_s_w1_sketch,
-        # dedup
-        "d_exact_groups": _q_d_exact,
-        "d_incremental_dedup": _q_d_incremental,
-        "d_incremental_fuzzy": _q_d_incremental_fuzzy,
-        "d_ngram_jaccard": _q_d_ngram,
-        "d_containment": _q_d_containment,
-        "d_source_overlap": _q_d_source_overlap,
-        "d_source_dup_rate": _q_d_source_dup_rate,
-        "d_minhash_lsh": _q_d_minhash,
-        "d_dup_groups": _q_d_dup_groups,
-        "d_dedup_report": _q_d_dedup_report,
-        "d_conv_dsir": _q_d_conv_dsir,
-        "d_canonical_docs": _q_d_canonical,
-        "d_simhash": _q_d_simhash,
-        "d_simhash_pairs": _q_d_simhash_pairs,
-        # similarity search
-        "a_cosine_topk": _q_a_cosine,
-        "v_vector_check": _q_v_vector_check,
-        "a_normalize": _q_a_normalize,
-        "a_quantized_topk": _q_a_quantized_topk,
-        "a_pq_topk": _q_a_pq_topk,
-        "a_pq_recall": _q_a_pq_recall,
-        "a_ivfpq_topk": _q_a_ivfpq_topk,
-        "a_ivfpq_res": _q_a_ivfpq_res,
-        "a_cosine_dup_pairs": _q_a_cosine_dup,
-        "a_cosine_dup_bucketed": _q_a_cosine_dup_bucketed,
-        "a_coverage_sample": _q_a_coverage_sample,
-        "a_mean_embedding": _q_a_mean_embedding,
-        "a_source_similarity": _q_a_source_similarity,
-        "a_centroid_classify": _q_a_centroid_classify,
-        "a_dim_profile": _q_a_dim_profile,
-        "a_knn_join": _q_a_knn_join,
-        "a_quality_propagate": _q_a_quality_propagate,
-        "a_label_outliers": _q_a_label_outliers,
-        "a_srp_dup_pairs": _q_a_srp_dup_pairs,
-        "a_semantic_dedup": _q_a_semantic_dedup,
-        "a_ivf_topk": _q_a_ivf,
-        "a_ivf_recall": _q_a_ivf_recall,
-        "a_ivf_topk_trained": _q_a_ivf_trained,
-        # text analysis
-        "x_token_stats": _q_x_tokens,
-        "x_top_tokens": _q_x_top_tokens,
-        "x_heavy_hitters": _q_x_heavy_hitters,
-        "x_encoding_check": _q_x_encoding_check,
-        "x_char_stats": _q_x_char_stats,
-        "x_line_rep": _q_x_line_rep,
-        "x_c4_clean": _q_x_c4_clean,
-        "x_gopher_gate": _q_x_gopher_gate,
-        "x_dup_within": _q_x_dup_within,
-        "x_redact_cards": _q_x_redact_cards,
-        "x_blockwords": _q_x_blockwords,
-        "x_rep_ngram": _q_x_rep_ngram,
-        "x_dup_ngrams": _q_x_dup_ngrams,
-        "x_ngram_diversity": _q_x_ngram_diversity,
-        "x_quality_buckets": _q_x_quality_buckets,
-        "x_oov_rate": _q_x_oov_rate,
-        "v_lang_mismatch": _q_v_lang_mismatch,
-        "x_top_tokens_by": _q_x_top_tokens_by,
-        "x_dedup_spans": _q_x_dedup_spans,
-        "x_decontam_spans": _q_x_decontam_spans,
-        "x_lm_quality": _q_x_lm_quality,
-        "x_decontaminate": _q_x_decontaminate,
-        "x_fuzzy_decontam": _q_x_fuzzy_decontam,
-        "x_novelty": _q_x_novelty,
-        "x_quota_sample": _q_x_quota_sample,
-        "x_dsir": _q_x_dsir,
-        "x_dsir_sample": _q_x_dsir_sample,
-        "x_prep_corpus": _q_x_prep_corpus,
-        "x_quality": _q_x_quality,
-        "x_corpus_report": _q_x_corpus_report,
-        "x_language_id": _q_x_langid,
-        "x_fingerprint": _q_x_fingerprint,
-        # deterministic sampling / splits
-        "x_quality_sample": _q_x_quality_sample,
-        "x_doc_sample": _q_x_sample,
-        "x_split_counts": _q_x_split,
-        "x_strat_sample": _q_x_strat,
-        "x_shard_corpus": _q_x_shard,
-        "x_mix_sources": _q_x_mix,
-        "x_mix_budget": _q_x_mix_budget,
-        "x_mix_temperature": _q_x_mix_temperature,
-        "x_soft_dedup": _q_x_soft_dedup,
-        "x_vocab_repair": _q_x_vocab_repair,
-        "x_pack_chunks": _q_x_pack,
-        "x_pack_report": _q_x_pack_report,
-        "x_chunk_windows": _q_x_chunks,
-        "x_turn_windows": _q_x_turn_windows,
-        "x_render_conv": _q_x_render_conv,
-        "x_truncate_ctx": _q_x_truncate_ctx,
-        "x_sft_spans": _q_x_sft_spans,
-        "x_normalize_text": _q_x_normalize,
-        "v_profile_spec": _q_v_profile_spec,
-        "v_clean_route": _q_v_clean_route,
-        "x_redact_pii": _q_x_redact,
-        "x_boilerplate": _q_x_boilerplate,
-        "x_url_domains": _q_x_url_domains,
-        "d_conv_dedup": _q_d_conv_dedup,
-        "d_conv_fuzzy": _q_d_conv_fuzzy,
-        "d_conv_fuzzy_groups": _q_d_conv_fuzzy_groups,
-        "d_conv_canonical": _q_d_conv_canonical,
-        # temporal operators + schema-registry routing
-        "e_split_convs": _q_e_split_convs,
-        "e_sessionize": _q_e_sessionize,
-        "e_asof_join": _q_e_asof_join,
-        "e_turn_latency": _q_e_turn_latency,
-        "e_role_latency": _q_e_role_latency,
-        "v_multi_spec": _q_v_multi_spec,
-        # multimodal plumbing
-        "m_media_meta": _q_m_media,
-        "m_media_stats": _q_m_media_stats,
-        "m_frame_plan": _q_m_frames,
-    }
-    front = list(_FIXED_RED_R4)
-    placed = set(front) | set(_NO_VALUE_ORACLE)
-    front += [n for n in q
-              if n not in _DRIVER_GREEN_R1_R4 and n not in placed]
-    green = [n for n in q
-             if n in _DRIVER_GREEN_R1_R4 and n not in placed]
-    order = front + green + list(_NO_VALUE_ORACLE)
-    return {name: q[name] for name in order}
+    training-data pipeline operators), in ``_ENTRIES`` order. Column
+    names match oracle_sql."""
+    return {name: thunk for name, thunk, _ in _ENTRIES}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB twins. ``a_ivf_topk_trained`` is omitted on purpose: its
-    k-means centroids come from driver-side Lloyd iterations no SQL
-    oracle can reproduce — its exactness gate is the recall assertion in
-    tests/ (trained must meet at least the untrained floor). The
-    UNTRAINED ``a_ivf_topk`` is fully deterministic given its fixed
-    lowest-id centroids and DOES carry a value oracle."""
-    return {
-        "flagship_transcripts": _FLAGSHIP_ORACLE,
-        "v_enum": _SQL_V_ENUM,
-        "v_const": _SQL_V_CONST,
-        "v_bounds_int": _SQL_V_BOUNDS,
-        "v_ext_numeric": _SQL_V_EXT_NUMERIC,
-        "v_ext_anchors": _SQL_V_EXT_ANCHORS,
-        "v_formats": _SQL_V_FORMATS,
-        "v_unevaluated": _sql_v_unevaluated(),
-        "v_conditional": _sql_v_conditional(),
-        "v_ext_object": _sql_v_ext_object(),
-        "v_content_json": _SQL_V_CONTENT_JSON,
-        "v_bounds_frac": _SQL_V_BOUNDS_FRAC,
-        "v_length": _SQL_V_LENGTH,
-        "v_pattern": _SQL_V_PATTERN,
-        "v_pattern_hard": _SQL_V_PATTERN_HARD,
-        "v_uuid": _SQL_V_UUID,
-        "v_required": _SQL_V_REQUIRED,
-        "v_anyof": _SQL_V_ANYOF,
-        "v_oneof_none": _SQL_V_ONEOF_NONE,
-        "v_oneof_multi": _SQL_V_ONEOF_MULTI,
-        "v_json_payload": _SQL_V_JSON_PAYLOAD,
-        "t_key_sync": _SQL_T_KEY_SYNC,
-        "t_ref_coverage": _SQL_T_REF_COVERAGE,
-        "t_role_patterns": _SQL_T_ROLE_PATTERNS,
-        "t_fd_check": _SQL_T_FD_CHECK,
-        "t_freshness": _SQL_T_FRESHNESS,
-        "t_dup_conflicts": _SQL_T_DUP_CONFLICTS,
-        "s_mad_outliers": _SQL_S_MAD_OUTLIERS,
-        "s_histogram": _SQL_S_HISTOGRAM,
-        "s_winsorize": _SQL_S_WINSORIZE,
-        "s_json_keys": _SQL_S_JSON_KEYS,
-        "v_json_spec": _SQL_V_JSON_SPEC,
-        "v_array_items": _SQL_V_ARRAY_ITEMS,
-        "v_ref_allof": _SQL_V_REF_ALLOF,
-        "v_enum_stream": _SQL_V_ENUM,
-        "v_jsonl_source": _SQL_V_JSONL_SOURCE,
-        "v_expected_types": _SQL_V_EXPECTED_TYPES,
-        "v_array_errors": _SQL_V_ARRAY_ERRORS,
-        "v_additional_forbid": _SQL_V_ADDITIONAL_FORBID,
-        "v_invalid_ref": _SQL_V_INVALID_REF,
-        "v_invalid_pattern": _SQL_V_INVALID_PATTERN,
-        "v_invalid_json": _SQL_V_INVALID_JSON,
-        "t_unique_keys": _SQL_T_UNIQUE,
-        "t_referential": _SQL_T_REFERENTIAL,
-        "t_referential_shuffle": _SQL_T_REFERENTIAL,
-        "t_gapfree_ordering": _SQL_T_GAPFREE,
-        "t_monotonic_ts": _SQL_T_MONOTONIC,
-        "t_reindex_turns": _SQL_T_REINDEX,
-        "t_repair_validate": _SQL_T_REPAIR_VALIDATE,
-        "t_tree_check": _SQL_T_TREE_CHECK,
-        "t_near_retry": _SQL_T_NEAR_RETRY,
-        "t_coerce_vocab": _SQL_T_COERCE_VOCAB,
-        "t_conv_quality": _SQL_T_CONV_QUALITY,
-        "t_hot_convs": _SQL_T_HOT_CONVS,
-        "t_role_protocol": _SQL_T_ROLE_PROTOCOL,
-        "t_tool_pairing": _SQL_T_TOOL_PAIRING,
-        "t_conv_bounds": _SQL_T_CONV_BOUNDS,
-        "t_context_budget": _SQL_T_CONTEXT_BUDGET,
-        "s_violation_trend": _SQL_S_VIOLATION_TREND,
-        "s_trend_anomaly": _SQL_S_TREND_ANOMALY,
-        "s_vocab_growth": _SQL_S_VOCAB_GROWTH,
-        "t_conv_profile": _SQL_T_CONV_PROFILE,
-        "t_turn_loops": _SQL_T_TURN_LOOPS,
-        "t_drop_loops": _SQL_T_DROP_LOOPS,
-        "t_conv_verdicts": _SQL_T_CONV_VERDICTS,
-        "t_expectations": _SQL_T_EXPECTATIONS,
-        "v_violation_stats": _SQL_V_VIOLATION_STATS,
-        "v_review_queue": _SQL_V_REVIEW_QUEUE,
-        "t_transcript_diff": _SQL_T_TRANSCRIPT_DIFF,
-        "s_profile": _SQL_S_PROFILE,
-        "s_exact_quantiles": _SQL_S_EXACT_QUANTILES,
-        "s_exact_corr": _SQL_S_EXACT_CORR,
-        "s_group_quantiles": _SQL_S_GROUP_QUANTILES,
-        "s_profile_drift": _SQL_S_PROFILE_DRIFT,
-        "s_chi2_drift": _SQL_S_CHI2,
-        "s_ks_drift": _SQL_S_KS,
-        "s_cvm_drift": _SQL_S_CVM,
-        "s_vocab_drift": _SQL_S_VOCAB_DRIFT,
-        "s_emb_drift": _SQL_S_EMB_DRIFT,
-        "s_psi_drift": _SQL_S_PSI,
-        "s_sketch_counts": _SQL_S_SKETCH_COUNTS,
-        "s_source_psi": _SQL_S_SOURCE_PSI,
-        "s_js_drift": _SQL_S_JS,
-        "s_w1_drift": _SQL_S_W1,
-        "d_exact_groups": _SQL_D_EXACT,
-        "d_incremental_dedup": _SQL_D_INCREMENTAL,
-        "d_incremental_fuzzy": _SQL_D_INCREMENTAL_FUZZY,
-        "d_ngram_jaccard": _SQL_D_NGRAM,
-        "d_containment": _SQL_D_CONTAINMENT,
-        "d_source_overlap": _SQL_D_SOURCE_OVERLAP,
-        "d_source_dup_rate": _SQL_D_SOURCE_DUP_RATE,
-        "d_minhash_lsh": _SQL_D_NGRAM,
-        "d_dup_groups": _SQL_D_DUP_GROUPS,
-        "d_dedup_report": _SQL_D_DEDUP_REPORT,
-        "d_conv_dsir": _SQL_D_CONV_DSIR,
-        "d_canonical_docs": _SQL_D_CANONICAL,
-        "d_simhash": _SQL_D_SIMHASH,
-        "d_simhash_pairs": _SQL_D_SIMHASH_PAIRS,
-        "a_cosine_topk": _SQL_A_COSINE,
-        "v_vector_check": _SQL_V_VECTOR_CHECK,
-        "a_normalize": _SQL_A_NORMALIZE,
-        "a_quantized_topk": _SQL_A_QUANTIZED_TOPK,
-        "a_pq_topk": _SQL_A_PQ_TOPK,
-        "a_pq_recall": _SQL_A_PQ_RECALL,
-        "a_ivfpq_topk": _SQL_A_IVFPQ_TOPK,
-        "a_ivfpq_res": _SQL_A_IVFPQ_RES,
-        "a_cosine_dup_pairs": _SQL_A_COSINE_DUP,
-        "a_cosine_dup_bucketed": _SQL_A_COSINE_DUP_BUCKETED,
-        "a_coverage_sample": _SQL_A_COVERAGE_SAMPLE,
-        "a_mean_embedding": _SQL_A_MEAN_EMBEDDING,
-        "a_source_similarity": _SQL_A_SOURCE_SIMILARITY,
-        "a_centroid_classify": _SQL_A_CENTROID_CLASSIFY,
-        "a_dim_profile": _SQL_A_DIM_PROFILE,
-        "a_knn_join": _SQL_A_KNN_JOIN,
-        "a_quality_propagate": _SQL_A_QUALITY_PROPAGATE,
-        "a_label_outliers": _SQL_A_LABEL_OUTLIERS,
-        "a_srp_dup_pairs": _SQL_A_SRP_DUP_PAIRS,
-        "a_semantic_dedup": _SQL_A_SEMANTIC_DEDUP,
-        "a_ivf_topk": _SQL_A_IVF,
-        "a_ivf_recall": _SQL_A_IVF_RECALL,
-        "x_token_stats": _SQL_X_TOKENS,
-        "x_top_tokens": _SQL_X_TOP_TOKENS,
-        "x_heavy_hitters": _SQL_X_HEAVY_HITTERS,
-        "x_encoding_check": _SQL_X_ENCODING_CHECK,
-        "x_char_stats": _SQL_X_CHAR_STATS,
-        "x_line_rep": _SQL_X_LINE_REP,
-        "x_c4_clean": _SQL_X_C4_CLEAN,
-        "x_gopher_gate": _SQL_X_GOPHER_GATE,
-        "x_dup_within": _SQL_X_DUP_WITHIN,
-        "x_redact_cards": _SQL_X_REDACT_CARDS,
-        "x_blockwords": _SQL_X_BLOCKWORDS,
-        "x_rep_ngram": _SQL_X_REP_NGRAM,
-        "x_dup_ngrams": _SQL_X_DUP_NGRAMS,
-        "x_ngram_diversity": _SQL_X_NGRAM_DIVERSITY,
-        "x_quality_buckets": _SQL_X_QUALITY_BUCKETS,
-        "x_oov_rate": _SQL_X_OOV_RATE,
-        "v_lang_mismatch": _SQL_V_LANG_MISMATCH,
-        "x_top_tokens_by": _SQL_X_TOP_TOKENS_BY,
-        "x_dedup_spans": _SQL_X_DEDUP_SPANS,
-        "x_decontam_spans": _SQL_X_DECONTAM_SPANS,
-        "x_lm_quality": _SQL_X_LM_QUALITY,
-        "x_decontaminate": _SQL_X_DECONTAM,
-        "x_fuzzy_decontam": _SQL_X_FUZZY_DECONTAM,
-        "x_novelty": _SQL_X_NOVELTY,
-        "x_quota_sample": _SQL_X_QUOTA_SAMPLE,
-        "x_dsir": _SQL_X_DSIR,
-        "x_dsir_sample": _SQL_X_DSIR_SAMPLE,
-        "x_prep_corpus": _SQL_X_PREP_CORPUS,
-        "x_vocab_repair": _SQL_X_VOCAB_REPAIR,
-        "x_quality": _SQL_X_QUALITY,
-        "x_corpus_report": _SQL_X_CORPUS_REPORT,
-        "x_language_id": _SQL_X_LANGID,
-        "x_fingerprint": _SQL_X_FINGERPRINT,
-        "x_quality_sample": _SQL_X_QUALITY_SAMPLE,
-        "x_doc_sample": _SQL_X_SAMPLE,
-        "x_split_counts": _SQL_X_SPLIT,
-        "x_strat_sample": _SQL_X_STRAT,
-        "x_shard_corpus": _SQL_X_SHARD,
-        "x_mix_sources": _SQL_X_MIX,
-        "x_mix_budget": _SQL_X_MIX_BUDGET,
-        "x_mix_temperature": _SQL_X_MIX_TEMPERATURE,
-        "x_soft_dedup": _SQL_X_SOFT_DEDUP,
-        "x_pack_chunks": _SQL_X_PACK,
-        "x_pack_report": _SQL_X_PACK_REPORT,
-        "x_chunk_windows": _SQL_X_CHUNKS,
-        "x_turn_windows": _SQL_X_TURN_WINDOWS,
-        "x_render_conv": _SQL_X_RENDER_CONV,
-        "x_truncate_ctx": _SQL_X_TRUNCATE_CTX,
-        "x_sft_spans": _SQL_X_SFT_SPANS,
-        "x_normalize_text": _SQL_X_NORMALIZE,
-        "v_profile_spec": _SQL_V_PROFILE_SPEC,
-        "v_clean_route": _SQL_V_CLEAN_ROUTE,
-        "x_redact_pii": _SQL_X_REDACT,
-        "x_boilerplate": _SQL_X_BOILERPLATE,
-        "x_url_domains": _SQL_X_URL_DOMAINS,
-        "d_conv_dedup": _SQL_D_CONV_DEDUP,
-        "d_conv_fuzzy": _SQL_D_CONV_FUZZY,
-        "d_conv_fuzzy_groups": _SQL_D_CONV_FUZZY_GROUPS,
-        "d_conv_canonical": _SQL_D_CONV_CANONICAL,
-        "e_split_convs": _SQL_E_SPLIT_CONVS,
-        "e_sessionize": _SQL_E_SESSIONIZE,
-        "e_asof_join": _SQL_E_ASOF_JOIN,
-        "e_turn_latency": _SQL_E_TURN_LATENCY,
-        "e_role_latency": _SQL_E_ROLE_LATENCY,
-        "v_multi_spec": _SQL_V_MULTI_SPEC,
-        "m_media_meta": _SQL_M_MEDIA,
-        "m_media_stats": _SQL_M_MEDIA_STATS,
-        "m_frame_plan": _SQL_M_FRAMES,
-    }
+    """DuckDB twins of every entry that has a value oracle, in
+    ``queries()`` order."""
+    return {name: sql for name, _, sql in _ENTRIES if sql is not None}

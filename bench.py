@@ -27,204 +27,6 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 TURNS = int(os.environ.get("SPARK_GRAFT_BENCH_TURNS", "2000000"))
 TURNS_PER_CONV = 50
 
-HEADLINE = [
-    "flagship_transcripts",
-    "v_bounds_int",
-    "v_pattern",
-    "v_array_items",
-    "v_json_payload",
-    "t_unique_keys",
-    "t_gapfree_ordering",
-    "s_profile",
-    "s_chi2_drift",
-    "d_minhash_lsh",
-    "d_simhash",
-    "a_cosine_topk",
-    "a_cosine_dup_pairs",
-    "a_cosine_dup_bucketed",
-    "a_srp_dup_pairs",
-    "a_semantic_dedup",
-    "a_knn_join",
-    "a_quantized_topk",
-    "a_ivf_topk",
-    "d_dup_groups",
-    "v_pattern_hard",
-    "v_ext_numeric",
-    "v_conditional",
-    "v_ext_object",
-    "v_content_json",
-    "x_quality",
-    "m_media_meta",
-    "t_role_protocol",
-    "t_tool_pairing",
-    "t_conv_profile",
-    "t_conv_verdicts",
-    "t_transcript_diff",
-    "d_conv_dedup",
-    "s_psi_drift",
-    "s_profile_drift",
-    "a_ivf_topk_trained",
-    "s_w1_drift",
-    "x_doc_sample",
-    "x_mix_sources",
-    "x_mix_temperature",
-    "x_pack_chunks",
-    "x_decontaminate",
-    "x_top_tokens",
-    "x_rep_ngram",
-    "x_dup_ngrams",
-    "x_lm_quality",
-    "x_chunk_windows",
-    "x_render_conv",
-    "x_normalize_text",
-    "x_redact_pii",
-    "x_boilerplate",
-    "x_url_domains",
-    "v_profile_spec",
-    "x_fuzzy_decontam",
-    "x_prep_corpus",
-    "x_dedup_spans",
-    "s_cvm_drift",
-    "s_vocab_drift",
-    "s_emb_drift",
-    "v_jsonl_source",
-    "t_repair_validate",
-    "t_tree_check",
-    "t_near_retry",
-    "x_sft_spans",
-    "x_quality_sample",
-    "x_heavy_hitters",
-    "x_truncate_ctx",
-    "d_source_overlap",
-    "x_decontam_spans",
-    "x_char_stats",
-    "x_line_rep",
-    "x_c4_clean",
-    "x_gopher_gate",
-    "d_dedup_report",
-    "x_dup_within",
-    "x_redact_cards",
-    "x_blockwords",
-    "t_drop_loops",
-    "a_pq_topk",
-    "a_pq_recall",
-    "a_ivfpq_topk",
-    "a_ivfpq_res",
-    "s_exact_quantiles",
-    "s_exact_corr",
-    "s_group_quantiles",
-    "d_conv_dsir",
-    "d_source_dup_rate",
-    "s_vocab_growth",
-    "t_conv_quality",
-    "a_ivf_recall",
-    "x_quota_sample",
-    "x_dsir",
-    "s_source_psi",
-    "x_turn_windows",
-    "x_novelty",
-    "v_review_queue",
-    "a_quality_propagate",
-    "s_trend_anomaly",
-    "d_incremental_fuzzy",
-    "x_encoding_check",
-    "a_label_outliers",
-    "t_coerce_vocab",
-    "e_sessionize",
-    "e_asof_join",
-    "v_multi_spec",
-    "x_shard_corpus",
-    "d_canonical_docs",
-    "t_turn_loops",
-    "x_corpus_report",
-    "t_context_budget",
-    "s_violation_trend",
-    "d_conv_fuzzy",
-    "d_conv_fuzzy_groups",
-    "d_conv_canonical",
-    "e_turn_latency",
-    "s_json_keys",
-    "x_ngram_diversity",
-    "a_coverage_sample",
-    "x_pack_report",
-    "a_mean_embedding",
-    "d_containment",
-    "v_json_spec",
-    "s_winsorize",
-    "a_source_similarity",
-    "a_centroid_classify",
-    "x_oov_rate",
-    "t_freshness",
-    "t_dup_conflicts",
-    "t_fd_check",
-    "x_top_tokens_by",
-    "v_lang_mismatch",
-    "s_histogram",
-    "s_mad_outliers",
-    "e_split_convs",
-    "a_dim_profile",
-    "t_ref_coverage",
-    "t_role_patterns",
-    "x_quality_buckets",
-    "t_key_sync",
-    "m_media_stats",
-    "e_role_latency",
-    "v_vector_check",
-    "a_normalize",
-    "t_reindex_turns",
-    "t_hot_convs",
-    "x_soft_dedup",
-    "x_vocab_repair",
-    "d_incremental_dedup",
-    # round-4 breadth completion: every remaining queries() entry, so
-    # BENCH covers the full operator surface (sub-second row-local
-    # validators and light aggregates; all sf0.1-smoked before landing)
-    "d_exact_groups",
-    "d_ngram_jaccard",
-    "d_simhash_pairs",
-    "m_frame_plan",
-    "s_js_drift",
-    "s_ks_drift",
-    "s_ks_sketch",
-    "s_sketch_drift",
-    "s_sketch_counts",
-    "s_w1_sketch",
-    "t_conv_bounds",
-    "t_expectations",
-    "t_monotonic_ts",
-    "t_referential",
-    "t_referential_shuffle",
-    "v_additional_forbid",
-    "v_anyof",
-    "v_array_errors",
-    "v_bounds_frac",
-    "v_clean_route",
-    "v_const",
-    "v_enum",
-    "v_enum_stream",
-    "v_expected_types",
-    "v_ext_anchors",
-    "v_formats",
-    "v_invalid_json",
-    "v_invalid_pattern",
-    "v_invalid_ref",
-    "v_length",
-    "v_oneof_multi",
-    "v_oneof_none",
-    "v_ref_allof",
-    "v_required",
-    "v_unevaluated",
-    "v_uuid",
-    "v_violation_stats",
-    "x_dsir_sample",
-    "x_fingerprint",
-    "x_language_id",
-    "x_mix_budget",
-    "x_split_counts",
-    "x_strat_sample",
-    "x_token_stats",
-]
-
 
 def _force(df) -> None:
     """Execute the full plan, all columns, no sink cost."""
@@ -332,9 +134,7 @@ def main() -> None:
     qsecs: dict[str, float] = {}
     csecs: dict[str, float] = {}
     msecs: dict[str, float] = {}
-    qs = entry_mod.queries()
-    for name in HEADLINE:
-        fn = qs[name]
+    for name, fn in entry_mod.queries().items():
         print(f"bench: {name}", file=sys.stderr, flush=True)
         c, e, m = timed(lambda: fn(spark, SF_DIR), runs=3)
         qsecs[name] = round(e, 3)

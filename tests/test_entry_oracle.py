@@ -1,16 +1,19 @@
 """Driver-gate parity: every ``__spark_entry__.queries()`` entry must match
 its DuckDB ``oracle_sql()`` twin (row count + schema + order-insensitive
-canonical values) at the test scale factor."""
+canonical values) at the test scale factor, through the same gate runner
+as ``tools/oracle_check.py``."""
 
 import os
 import sys
+import tempfile
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from tests.oracle_harness import compare_one, duck_con  # noqa: E402
+from tests.test_entry_contract import NO_ORACLE  # noqa: E402
+from tools.oracle_check import duck_con, run_gate  # noqa: E402
 
 QUERIES = sorted(entry_mod.queries())
 
@@ -24,8 +27,21 @@ def duck(sf_dir):
 
 @pytest.mark.parametrize("name", QUERIES)
 def test_query_matches_oracle(spark, duck, sf_dir, name):
-    ok, msg = compare_one(name, spark, duck, sf_dir, entry_mod)
-    assert ok, msg
+    [(_, status, detail)] = run_gate(spark, duck, entry_mod, sf_dir, [name])
+    assert status == ("NO_ORACLE" if name in NO_ORACLE else "PASS"), detail
+
+
+def test_enum_stream_removes_its_temp_dir(spark, sf_dir, tmp_path,
+                                          monkeypatch):
+    """The streaming entry stages its input in a temp directory and
+    must remove it; its rows are the batch v_enum rows."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    stream = entry_mod.queries()["v_enum_stream"]
+    runs = [sorted(stream(spark, sf_dir).collect()) for _ in range(2)]
+    assert not list(tmp_path.glob("v_enum_stream_*"))
+    batch = sorted(entry_mod.queries()["v_enum"](spark, sf_dir).collect())
+    assert runs[0] == runs[1] == batch
+    assert batch
 
 
 def test_entry_smoke(spark):

@@ -115,6 +115,19 @@ def compare_frames(spdf, opdf):
                                f" oracle={okeys[diff_i]}")
 
 
+def duck_con(sf_dir):
+    """A DuckDB connection with every table of ``sf_dir`` registered as
+    a view named after it, as the driver registers them."""
+    import duckdb
+    con = duckdb.connect()
+    for t in TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
 def run_gate(spark, con, entry_mod, sf_dir, names=None):
     """Run the driver gate over the given query names. Yields
     (name, status, detail) where status in PASS/FAIL/NO_ORACLE/ERR."""
@@ -147,7 +160,6 @@ def run_gate(spark, con, entry_mod, sf_dir, names=None):
 
 
 def main() -> None:
-    import duckdb
     from pyspark.sql import SparkSession
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -161,13 +173,7 @@ def main() -> None:
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
+    con = duck_con(sf_dir)
     import __spark_entry__ as entry
     bad = []
     for name, status, detail in run_gate(spark, con, entry, sf_dir, only):
