@@ -66,9 +66,11 @@ _TOOL_MAP = ("CASE WHEN event_type = 'view' AND event_id % 3 = 0 "
              "THEN 'browse' ELSE NULL END")
 
 
-def _transcripts_from_events(events: DataFrame) -> DataFrame:
+def _transcripts_from_events(events: DataFrame,
+                             tool: str = "CAST(NULL AS STRING)") -> DataFrame:
     """Deterministic transcript-shaped view of the events table:
-    conv_id = user, turn_idx = dense per-conv position by (ts, event_id).
+    conv_id = user, turn_idx = dense per-conv position by (ts, event_id),
+    ``tool`` = the SQL of the tool column (NULL, or ``_TOOL_MAP``).
 
     Note for the oracle: because turn_idx is row_number()-1 over
     (ts, event_id), DuplicateKey / TurnGap / NonMonotonicTs / BelowMinimum
@@ -81,20 +83,7 @@ def _transcripts_from_events(events: DataFrame) -> DataFrame:
         (F.row_number().over(w) - 1).alias("turn_idx"),
         F.expr(_ROLE_MAP).alias("role"),
         F.col("props").alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.col("ts"),
-    )
-
-
-def _transcripts_with_tools(events: DataFrame) -> DataFrame:
-    """Flagship transcript view plus a deterministic tool column."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return events.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).alias("turn_idx"),
-        F.expr(_ROLE_MAP).alias("role"),
-        F.col("props").alias("text"),
-        F.expr(_TOOL_MAP).alias("tool"),
+        F.expr(tool).alias("tool"),
         F.col("ts"),
     )
 
@@ -612,7 +601,7 @@ def _q_v_unevaluated(spark: SparkSession, sf_dir: str) -> DataFrame:
                        "text": {"type": "string"}},
         "unevaluatedProperties": False,
     }
-    tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
+    tx = _transcripts_from_events(_t(spark, sf_dir, "events"), _TOOL_MAP)
     return ValidationEngine(spec, key_cols=("conv_id", "turn_idx"),
                             extensions=True).validate(tx).violations
 
@@ -688,7 +677,7 @@ def _q_v_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dependentRequired": {"tool": ["ts"]},
         "properties": {"role": {"type": "string"}},
     }
-    tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
+    tx = _transcripts_from_events(_t(spark, sf_dir, "events"), _TOOL_MAP)
     return ValidationEngine(spec, key_cols=("conv_id", "turn_idx"),
                             extensions=True).validate(tx).violations
 
@@ -730,7 +719,7 @@ def _q_v_ext_object(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tool": {"properties": {"role": {"const": "tool"}}}},
         "properties": {"role": {"type": "string"}},
     }
-    tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
+    tx = _transcripts_from_events(_t(spark, sf_dir, "events"), _TOOL_MAP)
     return ValidationEngine(spec, key_cols=("conv_id", "turn_idx"),
                             extensions=True).validate(tx).violations
 
@@ -2538,7 +2527,7 @@ def _q_t_drop_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical assistant replies, so each injected pair loses its
     # second member (and any organic same-role byte-repeats go too);
     # the oracle re-derives the same (role, idx)-sorted lag filter
-    tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
+    tx = _transcripts_from_events(_t(spark, sf_dir, "events"), _TOOL_MAP)
     looped = F.col("turn_idx") % 6
     salted = tx.select(
         "conv_id", "turn_idx",
@@ -2573,7 +2562,7 @@ WHERE NOT coalesce(coalesce(role, '') = pr
 
 
 def _q_t_role_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
+    tx = _transcripts_from_events(_t(spark, sf_dir, "events"), _TOOL_MAP)
     return table_checks.role_transition_violations(
         tx, _ALLOWED_TRANSITIONS, _ALLOWED_FIRST)
 
@@ -2600,7 +2589,7 @@ WHERE role IS NOT NULL AND (
 
 
 def _q_t_tool_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
+    tx = _transcripts_from_events(_t(spark, sf_dir, "events"), _TOOL_MAP)
     return table_checks.tool_pairing_violations(tx)
 
 
@@ -2632,7 +2621,7 @@ WHERE orphan_result OR orphan_call
 
 
 def _q_t_conv_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
+    tx = _transcripts_from_events(_t(spark, sf_dir, "events"), _TOOL_MAP)
     return table_checks.conversation_bounds_violations(
         tx, min_turns=55, max_turns=80, max_duration_seconds=2_500_000)
 
@@ -2683,7 +2672,7 @@ FROM cum WHERE cum_tokens > 160
 def _q_s_violation_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # monitoring complement of violation_stats: per-day violation rate
     # by code over the flagship row-local violation set
-    tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
+    tx = _transcripts_from_events(_t(spark, sf_dir, "events"), _TOOL_MAP)
     viols = ValidationEngine(
         FLAGSHIP_SPEC, key_cols=("conv_id", "turn_idx")).validate(tx).violations
     return table_checks.violation_trend(tx, viols, grain="day")
@@ -2981,7 +2970,7 @@ FROM base LEFT JOIN c USING (conv_id)
 def _q_t_turn_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stuck-agent detection: same role repeating the same text (other
     # roles wedged between repeats don't reset the streak)
-    tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
+    tx = _transcripts_from_events(_t(spark, sf_dir, "events"), _TOOL_MAP)
     return table_checks.turn_loop_stats(tx)
 
 
@@ -3014,7 +3003,7 @@ FROM a
 
 
 def _q_t_conv_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
+    tx = _transcripts_from_events(_t(spark, sf_dir, "events"), _TOOL_MAP)
     prof = table_checks.conversation_profile(tx)
     return prof.select(
         "conv_id", "n_turns", "min_idx", "max_idx", "duration_s",
@@ -5618,7 +5607,7 @@ def _q_d_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groups) IS the transcripts dedup story — identical conversations
     # collapse regardless of row order or physical layout, because the
     # rendering is order-canonical.
-    tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
+    tx = _transcripts_from_events(_t(spark, sf_dir, "events"), _TOOL_MAP)
     return dedup.exact_duplicate_groups(packing.render_conversations(tx),
                                         text_col="text", id_col="conv_id")
 
@@ -5658,7 +5647,7 @@ def _conv_fuzzy_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate per branch — at real scale the rendered corpus is written
     to Iceberg once and dedup reads THAT (same flow as d_dup_groups'
     per-round checkpoint; cost lands in compile_sec)."""
-    tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
+    tx = _transcripts_from_events(_t(spark, sf_dir, "events"), _TOOL_MAP)
     r = (packing.render_conversations(tx)
          .select(F.col("conv_id").alias("doc_id"), "text"))
     corpus = r.select(F.explode(F.array(
@@ -5798,7 +5787,7 @@ def _q_x_render_conv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # string + whitespace token count (the pack_sequences budget input).
     # This is the north rule's per-turn-text-equality invariant as an
     # operator: the oracle reproduces the exact rendered bytes.
-    tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
+    tx = _transcripts_from_events(_t(spark, sf_dir, "events"), _TOOL_MAP)
     return packing.render_conversations(tx)
 
 
@@ -5817,7 +5806,7 @@ def _q_d_conv_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # carries the same marker and must score more target-like).
     # Conversations are selected or rejected WHOLE — the same
     # group-coherence rule every sampler here follows.
-    tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
+    tx = _transcripts_from_events(_t(spark, sf_dir, "events"), _TOOL_MAP)
     r = packing.render_conversations(tx).select("conv_id", "text")
     mark = F.substring(F.md5(F.concat(F.col("conv_id"),
                                       F.lit("#dsirm"))), 1, 1)
@@ -5863,7 +5852,7 @@ def _q_x_sft_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (assistant completions only). Offsets are value-exact vs the
     # oracle's window cumsum, so the mask lines up with x_render_conv's
     # rendered text byte-for-byte.
-    tx = _transcripts_with_tools(_t(spark, sf_dir, "events"))
+    tx = _transcripts_from_events(_t(spark, sf_dir, "events"), _TOOL_MAP)
     return packing.sft_spans(tx)
 
 

@@ -10,8 +10,9 @@ Usage:
         validate --spec spec.json --input /data/transcripts \
         --output /out/run1 --run-id nightly --buckets 256
 
-Adding ``--resume`` with the same run-id skips buckets the ledger already
-records as done.
+Rerunning with the same ``--run-id`` skips buckets the ledger already
+records as done (under a different spec it is refused), and the exit
+code covers the whole run.
 """
 
 from __future__ import annotations
@@ -78,16 +79,10 @@ def cmd_validate(args: argparse.Namespace) -> int:
         route_rows=args.route_rows,
     )
     print(json.dumps(summary))
-    # exit code reflects the WHOLE run (ledger totals), so a resume of an
-    # already-failed run still exits 1 — matching the reference's
-    # "validation failed with N error(s)" contract
-    from pyspark.sql import functions as F
-
-    from .sources.ledger import ValidationLedger
-    ledger = ValidationLedger(spark, f"{args.output}/ledger")
-    agg = ledger.entries(summary["run_id"]).agg(
-        F.sum("violation_count").alias("v")).collect()[0]
-    total_violations = int(agg["v"] or 0)
+    # exit code reflects the WHOLE run (skipped plus processed buckets),
+    # so a resume of an already-failed run still exits 1 — matching the
+    # reference's "validation failed with N error(s)" contract
+    total_violations = summary["run_totals"]["violation_count"]
     if total_violations > 0:
         print(f"validation failed with {total_violations} error(s)",
               file=sys.stderr)

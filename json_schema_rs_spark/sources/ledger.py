@@ -24,7 +24,7 @@ import time
 import uuid
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 LEDGER_SCHEMA = (
@@ -32,6 +32,7 @@ LEDGER_SCHEMA = (
     "valid_rows bigint, violation_count bigint, wall_time_sec double, "
     "spec_fingerprint string, finished_at timestamp"
 )
+_COUNTS = ("rows", "valid_rows", "violation_count")
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -83,13 +84,14 @@ class ValidationLedger:
         except Exception:
             return None
 
-    def completed_buckets(self, run_id: str) -> set[int]:
-        df = self._read()
-        if df is None:
-            return set()
-        rows = (df.filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
-                  .select("bucket").distinct().collect())
-        return {r.bucket for r in rows}
+    def completed_buckets(self, run_id: str) -> dict[int, Row]:
+        """``{bucket: row}`` of the run's ``done`` rows, each row holding
+        ``rows``, ``valid_rows``, ``violation_count`` and
+        ``spec_fingerprint``; one collect."""
+        rows = (self.entries(run_id).filter(F.col("status") == "done")
+                    .select("bucket", *_COUNTS, "spec_fingerprint")
+                    .collect())
+        return {r.bucket: r for r in rows}
 
     def append(self, entries: Sequence[dict]) -> None:
         if not entries:
@@ -247,7 +249,10 @@ def run_checkpointed_validation(
     over its buckets and writes its violation rows ONCE, appended to
     ``{output_path}/violations`` (partitioned by bucket for pruning on
     re-reads), then appends one ledger row per bucket. Re-invoking with
-    the same ``run_id`` skips completed buckets.
+    the same ``run_id`` skips completed buckets; the ledger is read once,
+    at start-up, and a resume under a spec whose fingerprint differs
+    from the run's done rows raises ``ValueError`` before any output is
+    touched.
 
     ``table_checks=True`` also runs the cross-row checks (duplicate key,
     gap-free ordering, monotonic ts, and — when ``role_protocol`` /
@@ -282,7 +287,10 @@ def run_checkpointed_validation(
     touched. Two runs sharing an ``output_path`` never interleave.
 
     ``fail_after_chunks`` is a test hook simulating a mid-run crash.
-    Returns a summary dict with per-run totals and bucket lists.
+    Returns a summary dict with bucket lists, the counts of the buckets
+    this call processed (``rows``, ``valid_rows``, ``violation_count``)
+    and ``run_totals``: the same counts over the whole run, i.e. plus
+    the skipped buckets' ledger rows read at start-up.
     """
     from ..operators.pipeline import cross_row_violations
     from ..operators.runner import (_engine, _python_stage_spread,
@@ -292,11 +300,20 @@ def run_checkpointed_validation(
     ledger = ValidationLedger(spark, f"{output_path}/ledger")
     engine = _engine(spark.sparkContext, spec, key_cols=key_cols)
     plan = engine.plan_for(source)
-    # persist the compiled-plan manifest once per spec fingerprint; the
-    # ledger rows below link to it via spec_fingerprint
-    fp = PlanLineage(spark, f"{output_path}/plans").record(plan, spec, run_id)
-
+    fp = spec_fingerprint(spec)
     done = ledger.completed_buckets(run_id)
+    other = sorted({r.spec_fingerprint for r in done.values()} - {fp})
+    if other:
+        raise ValueError(
+            f"run {run_id!r} was started under spec fingerprint(s) "
+            f"{other}; resuming it under {fp} would mix two specs' "
+            f"verdicts in one run")
+    if not done:
+        # persist the compiled-plan manifest once per spec fingerprint;
+        # the ledger rows below link to it via spec_fingerprint. A resume
+        # needs no check: its first attempt recorded the manifest before
+        # its first chunk, and done rows exist only after a chunk
+        PlanLineage(spark, f"{output_path}/plans").record(plan, spec, run_id)
     pending = [b for b in range(n_buckets) if b not in done]
     # the bucket is a pure function of the conversation key: the same
     # expression selects a chunk and labels its written rows
@@ -321,7 +338,7 @@ def run_checkpointed_validation(
     chunks = [pending[i:i + buckets_per_chunk]
               for i in range(0, len(pending), buckets_per_chunk)]
     processed: list[int] = []
-    totals = {"rows": 0, "valid_rows": 0, "violation_count": 0}
+    totals = dict.fromkeys(_COUNTS, 0)
     for ci, chunk in enumerate(chunks):
         if fail_after_chunks is not None and ci >= fail_after_chunks:
             break
@@ -373,6 +390,8 @@ def run_checkpointed_validation(
         "processed_buckets": processed,
         "remaining_buckets": [b for b in pending if b not in processed],
         **totals,
+        "run_totals": {k: totals[k] + sum(r[k] for r in done.values())
+                       for k in _COUNTS},
     }
 
 
@@ -412,7 +431,7 @@ def revalidate_incremental(
     asserted against a from-scratch run in
     ``tests/test_ledger_cli_streaming.py``.
     """
-    from ..operators.runner import ValidationEngine
+    from ..operators.runner import ValidationEngine, _python_stage_spread
     from ..plans.diff import revalidation_plan, spec_diff
 
     verdict, _ = spec_diff(old_spec, new_spec, extensions=extensions)
@@ -440,44 +459,32 @@ def revalidate_incremental(
 
     # parquet partition-value inference reads `valid` back as the
     # STRING 'true'/'false' (documented on route_rows)
-    engine = ValidationEngine(new_spec, key_cols=key_cols,
-                              extensions=extensions)
-    if verdict == "unknown":
-        # full rescan: thread the OLD per-row verdict through the engine
-        # (validate preserves input columns) so newly_valid/newly_invalid
-        # count true per-row verdict FLIPS in the same single aggregate —
-        # a net valid-count delta would report 0/0 when 100 rows flip
-        # each way
-        inp = routed.select(
-            *data_cols, (F.col("valid") == "true").alias("_old_valid"))
-        flagged = engine.validate(inp).flagged
-        agg = flagged.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("valid").cast("long")).alias("nv"),
-            F.sum((F.col("valid") & ~F.col("_old_valid"))
-                  .cast("long")).alias("fv"),
-            F.sum((~F.col("valid") & F.col("_old_valid"))
-                  .cast("long")).alias("fi")).collect()[0]
-        out["rows_rescanned"] = int(agg["n"] or 0)
-        out["newly_valid"] = int(agg["fv"] or 0)
-        out["newly_invalid"] = int(agg["fi"] or 0)
-        out["valid_rows"] = int(agg["nv"] or 0)
-        return out
-
-    if verdict == "widening":
-        target = routed.filter(F.col("valid") == "false")
-    else:                                        # narrowing
-        target = routed.filter(F.col("valid") == "true")
-    flagged = engine.validate(target.select(*data_cols)).flagged
+    target = {"widening": routed.filter(F.col("valid") == "false"),
+              "narrowing": routed.filter(F.col("valid") == "true"),
+              }.get(verdict, routed)             # unknown: full rescan
+    # compiled for the data columns only, so the OLD per-row verdict can
+    # ride along without being a property of the row: newly_valid /
+    # newly_invalid count true per-row verdict FLIPS in the one
+    # aggregate — a net valid-count delta would report 0/0 when 100 rows
+    # flip each way
+    plan = ValidationEngine(new_spec, key_cols=key_cols,
+                            extensions=extensions).plan_for(
+                                target.select(*data_cols))
+    inp = target.select(
+        *data_cols, (F.col("valid") == "true").alias("_old_valid"))
+    keys = [k for k in key_cols if k in data_cols]
+    flagged = plan.apply(_python_stage_spread(inp, plan, keys))
+    valid = F.size("violations") == 0
     agg = flagged.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("valid").cast("long")).alias("nv")).collect()[0]
-    n_scanned, n_valid_now = int(agg["n"] or 0), int(agg["nv"] or 0)
-    out["rows_rescanned"] = n_scanned
-    if verdict == "widening":
-        out["newly_valid"] = n_valid_now        # reclaimed quarantine rows
-        out["valid_rows"] = n_old_valid + n_valid_now
-    else:
-        out["newly_invalid"] = n_scanned - n_valid_now
-        out["valid_rows"] = n_valid_now
+        F.sum(valid.cast("long")).alias("nv"),
+        F.sum((valid & ~F.col("_old_valid")).cast("long")).alias("fv"),
+        F.sum((~valid & F.col("_old_valid")).cast("long")).alias("fi"),
+    ).collect()[0]
+    out["rows_rescanned"] = int(agg["n"] or 0)
+    out["newly_valid"] = int(agg["fv"] or 0)
+    out["newly_invalid"] = int(agg["fi"] or 0)
+    # widening keeps every old-valid row valid by proof
+    out["valid_rows"] = int(agg["nv"] or 0) + (
+        n_old_valid if verdict == "widening" else 0)
     return out

@@ -14,28 +14,16 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions.exprs import explode_rows
-from ..operators.runner import ValidationEngine
-
-
-def validate_stream(
-    engine: ValidationEngine,
-    stream_df: DataFrame,
-) -> DataFrame:
-    """Attach the compiled validation plan to a streaming DataFrame;
-    returns the flagged stream (input + ``violations`` + ``valid``)."""
-    return engine.attach_violations(stream_df) \
-                 .withColumn("valid", F.size("violations") == 0)
+from ..operators.runner import ValidationEngine, _row_violations
 
 
 def violations_stream(engine: ValidationEngine, stream_df: DataFrame) -> DataFrame:
+    """The violation rows ``(keys..., instance_path, code, message)`` of
+    a streaming DataFrame, in the batch shape of
+    :meth:`ValidationEngine.validate`."""
     keys = [k for k in engine.key_cols if k in stream_df.columns]
-    return (explode_rows(
-                validate_stream(engine, stream_df).filter(~F.col("valid")),
-                keys, F.col("violations"), "v")
-            .select(*keys, "v.instance_path", "v.code", "v.message"))
+    return _row_violations(stream_df, engine.plan_for(stream_df), keys)
 
 
 def run_file_stream_once(

@@ -73,3 +73,70 @@ def test_ivf_recall_vs_exact(spark, sf_dir):
                    spark, sf_dir).collect()}
     t_recall = len(exact & trained) / len(exact)
     assert t_recall >= 0.6, f"trained IVF recall {t_recall:.2f} below floor"
+
+
+def _shingles(text):
+    ws = text.split(" ")
+    return {" ".join(ws[i:i + 3]) for i in range(len(ws) - 2)}
+
+
+def _jaccard(a, b):
+    sa, sb = _shingles(a), _shingles(b)
+    return len(sa & sb) / len(sa | sb)
+
+
+DUP_ENTRIES = ["d_dup_groups", "d_dedup_report", "x_soft_dedup",
+               "d_canonical_docs", "d_conv_canonical"]
+
+
+def test_near_dup_entries_pin_the_jaccard_threshold(spark, tmp_path):
+    """The dedup family joins pairs at 3-gram Jaccard >= 0.8 only: over
+    a corpus holding one pair above the threshold and one pair between
+    0.3 and 0.8, each entry still matches its oracle."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = ("the quick brown fox jumps over the lazy dog while a small "
+            "cat sleeps near the warm red fire in an old stone house")
+    near = base.rsplit(" ", 1)[0] + " barn"
+    other = ("spark reads parquet files then plans a shuffle before the "
+             "window sorts each partition and writes rows to disk")
+    half = " ".join(other.split(" ")[:12]
+                    + "with many small tasks that finish very fast".split())
+    alone = ("an unrelated note about tea cups, saucers and spoons laid "
+             "out on a long wooden table for guests")
+    texts = [base, near, other, half, alone]
+    assert _jaccard(base, near) >= 0.8
+    assert 0.3 <= _jaccard(other, half) < 0.8
+    assert 0.3 <= _jaccard("<|user|>\n" + other, "<|user|>\n" + half) < 0.8
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(1, len(texts) + 1), pa.int64()),
+        "text": texts,
+        "lang": ["en"] * len(texts),
+        "source": ["src0"] * len(texts),
+        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+    }), str(sf / "documents.parquet"))
+    # one single-turn conversation per text: the rendered conversations
+    # keep the texts' pairwise Jaccard
+    t0 = datetime.datetime(2024, 1, 1)
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(texts)), pa.int64()),
+        "ts": pa.array([t0 + datetime.timedelta(minutes=i)
+                        for i in range(len(texts))], pa.timestamp("us")),
+        "user_id": pa.array(range(len(texts)), pa.int64()),
+        "event_type": ["click"] * len(texts),
+        "value": pa.array([1.0] * len(texts), pa.float64()),
+        "props": texts,
+    }), str(sf / "events.parquet"))
+
+    con = duck_con(str(sf))
+    try:
+        got = list(run_gate(spark, con, entry_mod, str(sf), DUP_ENTRIES))
+    finally:
+        con.close()
+    assert [(n, s) for n, s, _ in got] == [(n, "PASS") for n in DUP_ENTRIES], got

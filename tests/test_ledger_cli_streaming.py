@@ -447,7 +447,7 @@ class TestPlanLineage:
                      "rows": 1, "valid_rows": 1, "violation_count": 0,
                      "wall_time_sec": 0.1, "spec_fingerprint": "f" * 16,
                      "finished_at": None}])
-        assert led.completed_buckets("r") == {0}
+        assert set(led.completed_buckets("r")) == {0}
 
     def test_iceberg_branch_end_to_end(self, spark, tmp_path):
         """Runs the REAL Iceberg ledger branch (catalog table create +
@@ -487,7 +487,7 @@ class TestPlanLineage:
                    "finished_at": None}
             led.append([row])
             led.append([{**row, "bucket": 1}])
-            assert led.completed_buckets("r") == {0, 1}
+            assert set(led.completed_buckets("r")) == {0, 1}
             # snapshot history: the first snapshot sees only bucket 0
             snaps = s.sql(
                 "SELECT snapshot_id FROM it.db.ledger.snapshots "
@@ -736,3 +736,27 @@ class TestCliPrep:
                      .agg(F.min("pos").alias("lo"), F.max("pos").alias("hi"),
                           F.count("*").alias("n")).collect()):
             assert r["lo"] == 0 and r["hi"] == r["n"] - 1
+
+
+def test_revalidation_of_a_strict_spec_sees_only_the_data_columns(
+        spark, tdf, tmp_path):
+    # additionalProperties: false flags any column the spec does not
+    # name, so the old verdict carried through the rescan must not be
+    # one of the columns the new spec sees
+    def strict(spec):
+        return {**spec, "additionalProperties": False,
+                "properties": {**spec["properties"], "conv_id": {},
+                               "turn_idx": {}, "tool": {}, "ts": {}}}
+
+    old = strict(SPEC)
+    new = strict(WIDER_SPEC)
+    new["properties"]["role"] = {"type": "string", "enum": ["user"]}
+    out = str(tmp_path / "strict")
+    run_checkpointed_validation(spark, tdf, old, out, run_id="st",
+                                n_buckets=4, route_rows=True)
+    s = revalidate_incremental(spark, out, "st", old, new)
+    assert s["verdict"] == "unknown"
+    want = ValidationEngine(new).validate(tdf).summary()["valid_rows"]
+    assert 0 < want < s["rows_total"]
+    assert s["valid_rows"] == want
+    assert s["newly_valid"] > 0 and s["newly_invalid"] > 0

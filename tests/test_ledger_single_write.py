@@ -2,6 +2,7 @@
 come from the expression that selected the chunk, and the ledger counts
 come from that write."""
 
+import json
 import os
 
 import pytest
@@ -11,12 +12,20 @@ from json_schema_rs_spark import ValidationEngine
 from json_schema_rs_spark.sources.ledger import (
     ValidationLedger,
     run_checkpointed_validation,
+    spec_fingerprint,
 )
 from json_schema_rs_spark.sources.synth import synth_transcripts_pandas
-from test_ledger_cli_streaming import PROTOCOL, SCHEMA, SPEC
+from test_ledger_cli_streaming import (
+    PROTOCOL,
+    SCHEMA,
+    SPEC,
+    WIDER_SPEC,
+    _cli_protocol_inputs,
+)
 
 TABLE_CHECKS = dict(table_checks=True, role_protocol=PROTOCOL,
                     tool_pairing=True)
+COUNTS = ("rows", "valid_rows", "violation_count")
 
 
 @pytest.fixture(scope="module")
@@ -124,3 +133,65 @@ def test_ledger_counts_match_written_rows(spark, tdf, tmp_path, options):
             .groupBy("bucket").count().collect()}
         for b, r in ledger.items():
             assert r["valid_rows"] == clean.get(b, 0)
+
+
+def test_cli_call_answers_from_its_own_counts(spark, tdf, tmp_path,
+                                              capsys):
+    # a fresh call: input schema inference, the lineage write, the
+    # chunk's shuffle map stage and write, the ledger append. A rerun of
+    # the finished run: schema inference and the one ledger read
+    from json_schema_rs_spark import cli
+    src, spec_f, proto_f = _cli_protocol_inputs(tdf, tmp_path)
+    out = str(tmp_path / "out")
+    argv = ["validate", "--spec", spec_f, "--input", src, "--output", out,
+            "--run-id", "jc", "--buckets", "4", "--protocol", proto_f]
+    rcs = []
+    fresh = _jobs(spark, "cli-fresh", lambda: rcs.append(cli.main(argv)))
+    capsys.readouterr()
+    rerun = _jobs(spark, "cli-rerun", lambda: rcs.append(cli.main(argv)))
+    captured = capsys.readouterr()
+    assert fresh <= 5
+    assert rerun <= 2
+    assert rcs == [1, 1]
+    total = ValidationLedger(spark, f"{out}/ledger").entries("jc").agg(
+        F.sum("violation_count")).collect()[0][0]
+    assert total > 0
+    assert f"validation failed with {total} error(s)" in captured.err
+    summary = json.loads(captured.out.strip().splitlines()[-1])
+    assert summary["processed_buckets"] == []
+    assert summary["run_totals"]["violation_count"] == total
+
+
+def test_resume_under_another_spec_is_refused(spark, tdf, tmp_path):
+    out = str(tmp_path / "twospecs")
+    kw = dict(run_id="ts", n_buckets=8, buckets_per_chunk=2)
+    run_checkpointed_validation(spark, tdf, SPEC, out, fail_after_chunks=1,
+                                **kw)
+
+    def written():
+        return sorted(tuple(r) for r in spark.read.parquet(
+            f"{out}/violations").collect())
+
+    before = written()
+    assert before
+    with pytest.raises(ValueError) as e:
+        run_checkpointed_validation(spark, tdf, WIDER_SPEC, out, **kw)
+    assert spec_fingerprint(SPEC) in str(e.value)
+    assert spec_fingerprint(WIDER_SPEC) in str(e.value)
+    assert written() == before
+
+
+def test_run_totals_cover_skipped_and_processed_buckets(spark, tdf,
+                                                        tmp_path):
+    out = str(tmp_path / "totals")
+    kw = dict(run_id="rt", n_buckets=8, buckets_per_chunk=3,
+              **TABLE_CHECKS)
+    first = run_checkpointed_validation(spark, tdf, SPEC, out,
+                                        fail_after_chunks=1, **kw)
+    second = run_checkpointed_validation(spark, tdf, SPEC, out, **kw)
+    ledger = ValidationLedger(spark, f"{out}/ledger").entries("rt").agg(
+        *[F.sum(k).alias(k) for k in COUNTS]).collect()[0].asDict()
+    assert first["run_totals"] == {k: first[k] for k in COUNTS}
+    assert second["run_totals"] == ledger
+    assert ledger == {k: first[k] + second[k] for k in COUNTS}
+    assert ledger["rows"] == tdf.count()
