@@ -18,7 +18,9 @@ Scale notes (north_rule: partitioning/shuffle/skew handled explicitly):
   pairing, per-row duplicate key) are records of one check table,
   :data:`_CHECKS`, run by :func:`_cross_row` over a single window by
   conversation: one skinny shuffle on conv_id. The à-la-carte functions
-  here and the fused pipeline's branch 2 pick records from it. AQE
+  here and the fused pipeline's branch 2 pick records from it; streams
+  (``streaming/stateful.py``) run the same records over a closed
+  conversation's idx-sorted buffers instead of a window. AQE
   handles moderate skew; a conversation's turns must fit one task, which
   holds by construction for transcripts (conversations are bounded).
 """
@@ -412,12 +414,31 @@ _WINDOW_VALUES = {
 }
 
 
+def _buffered(name: str, shift: int) -> Column:
+    """The turn ``shift`` places from this one in the sorted buffer
+    ``name``; NULL past either end, as ``lag``/``lead`` are."""
+    return F.get(F.col(name), F.col("_pos") + shift)
+
+
+# The same values off a closed conversation (streaming/stateful.py): one
+# row per turn, holding its position ``_pos`` in the conversation's
+# idx-sorted buffers ``_ts_us`` (UTC micros), ``_roles`` and ``_tools``.
+# No ``peers``: streams do not run DuplicateKey.
+_ARRAY_VALUES = {
+    "pos": lambda n, w: F.col("_pos"),
+    "prev_ts": lambda n, w: F.timestamp_micros(_buffered("_ts_us", -1)),
+    "prev_role": lambda n, w: _buffered("_roles", -1),
+    "prev_tool": lambda n, w: _buffered("_tools", -1),
+    "next_role": lambda n, w: _buffered("_roles", 1),
+}
+
+
 class _Check(NamedTuple):
     """One cross-row check over the namespace :func:`_cross_row` builds."""
     code: str
     path: Optional[str]   # column role the violation points at; None: row
     reads: tuple          # column roles read besides the key
-    uses: tuple           # _WINDOW_VALUES read
+    uses: tuple           # values read (_WINDOW_VALUES keys)
     cond: Callable[[SimpleNamespace], Column]
     # text after "<path>: "; {name} renders a namespace entry, {name!q}
     # renders it quoted, or none when NULL
@@ -484,12 +505,15 @@ def _viol(cond: Column, path: str, code: str, message: Column) -> Column:
 
 
 def _cross_row(df: DataFrame, codes: Sequence[str], names: dict,
-               protocol: Optional[tuple] = None) -> DataFrame:
+               protocol: Optional[tuple] = None,
+               values: dict = _WINDOW_VALUES) -> DataFrame:
     """The :data:`_CHECKS` records named in ``codes`` as violation rows
     ``(conv, idx, instance_path, code, message)``, from a skinny
     projection, ONE exchange on conv and one sort by idx. ``names`` maps
     column roles to column names; ``protocol`` is ``(allowed_transitions,
     allowed_first)``. Conditions filter before any message is built.
+    ``values`` is the table the checks' values come from: the window's,
+    or :data:`_ARRAY_VALUES` over closed conversations (no exchange).
     The expressions are built once per SparkContext and reused."""
     if protocol:
         transitions, first = protocol
@@ -498,26 +522,27 @@ def _cross_row(df: DataFrame, codes: Sequence[str], names: dict,
     conv, idx = names["conv"], names["idx"]
     cols, cond, arr = _context_memo(
         df.sparkSession.sparkContext,
-        ("cross", tuple(codes), tuple(sorted(names.items())), protocol),
-        lambda: _cross_row_exprs(codes, names, protocol))
+        ("cross", tuple(codes), tuple(sorted(names.items())), protocol,
+         values is _ARRAY_VALUES),
+        lambda: _cross_row_exprs(codes, names, protocol, values))
     return (explode_rows(df.select(*cols).filter(cond), [conv, idx], arr,
                          "v")
             .select(conv, idx, "v.instance_path", "v.code", "v.message"))
 
 
 def _cross_row_exprs(codes: Sequence[str], names: dict,
-                     protocol: Optional[tuple]) -> tuple:
+                     protocol: Optional[tuple], values: dict) -> tuple:
     """:func:`_cross_row`'s expressions: the skinny select list (key,
-    read columns, window values), the OR of the conditions and the
+    read columns, ``values``), the OR of the conditions and the
     concatenated violation array."""
     checks = [ch for ch in _CHECKS if ch.code in codes]
     conv, idx = names["conv"], names["idx"]
     reads = [names[r] for r in ("ts", "role", "tool")
              if any(r in ch.reads for ch in checks)]
-    uses = [u for u in _WINDOW_VALUES if any(u in ch.uses for ch in checks)]
+    uses = [u for u in values if any(u in ch.uses for ch in checks)]
     w = Window.partitionBy(conv).orderBy(idx)
     cols = [conv, idx, *reads, *(
-        _WINDOW_VALUES[u](names, w).alias("_" + u) for u in uses)]
+        values[u](names, w).alias("_" + u) for u in uses)]
     c = SimpleNamespace(**{r: F.col(n) for r, n in names.items() if n},
                         **{u: F.col("_" + u) for u in uses},
                         key=F.lit(f"{conv}, {idx}"))

@@ -45,6 +45,15 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of the Hadoop FileSystem: reading a
+    missing parquet path fails in the JVM, and a query listener logs the
+    failure as an error with a stack trace even when it is caught."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
+    return jpath.getFileSystem(conf).exists(jpath)
+
+
 class ValidationLedger:
     """Append-only ledger.
 
@@ -65,19 +74,13 @@ class ValidationLedger:
         self.path = path.rstrip("/")
         self.table = table if (table and iceberg_available(spark)) else None
 
-    def _exists(self) -> bool:
-        jvm = self.spark._jvm  # noqa: SLF001
-        jpath = jvm.org.apache.hadoop.fs.Path(self.path)
-        conf = self.spark._jsc.hadoopConfiguration()  # noqa: SLF001
-        return jpath.getFileSystem(conf).exists(jpath)
-
     def _read(self) -> Optional[DataFrame]:
         if self.table is not None:
             try:
                 return self.spark.read.table(self.table)
             except Exception:
                 return None
-        if not self._exists():
+        if not _path_exists(self.spark, self.path):
             return None
         try:
             return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.path)
@@ -180,6 +183,8 @@ class PlanLineage:
         self.path = path.rstrip("/")
 
     def _read(self) -> Optional[DataFrame]:
+        if not _path_exists(self.spark, self.path):
+            return None
         try:
             return self.spark.read.schema(PLAN_SCHEMA).parquet(self.path)
         except Exception:
@@ -252,7 +257,7 @@ def run_checkpointed_validation(
     the same ``run_id`` skips completed buckets; the ledger is read once,
     at start-up, and a resume under a spec whose fingerprint differs
     from the run's done rows raises ``ValueError`` before any output is
-    touched.
+    touched, as does ``n_buckets`` or ``buckets_per_chunk`` below 1.
 
     ``table_checks=True`` also runs the cross-row checks (duplicate key,
     gap-free ordering, monotonic ts, and — when ``role_protocol`` /
@@ -296,6 +301,10 @@ def run_checkpointed_validation(
     from ..operators.runner import (_engine, _python_stage_spread,
                                     _row_violations)
 
+    for name, value in (("n_buckets", n_buckets),
+                        ("buckets_per_chunk", buckets_per_chunk)):
+        if value < 1:
+            raise ValueError(f"{name} must be at least 1, got {value}")
     run_id = run_id or uuid.uuid4().hex[:12]
     ledger = ValidationLedger(spark, f"{output_path}/ledger")
     engine = _engine(spark.sparkContext, spec, key_cols=key_cols)

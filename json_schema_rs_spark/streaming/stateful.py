@@ -5,19 +5,22 @@ validation over a live transcript stream.
 The batch checks (the ``operators/table_checks.py`` check table, behind
 ``turn_gap_violations`` and friends) need the whole conversation; on a
 stream the conversation arrives incrementally and possibly out of order
-across micro-batches. This module gives them streaming semantics with
-``applyInPandasWithState`` (Arrow-batched per-group state — no per-row
-Python, per `input_hint`):
+across micro-batches. Here ``applyInPandasWithState`` only buffers and
+closes conversations; the checks are the check table's own records:
 
-- State per ``conv_id``: the (turn_idx, ts) pairs seen so far — bounded by
-  turns-per-conversation, not by stream length.
+- State per ``conv_id``: the turn indices, event timestamps (UTC micros,
+  computed in Spark before the state operator) and, for the protocol
+  checks, roles/tools seen so far — bounded by turns-per-conversation,
+  not by stream length.
 - A conversation CLOSES when the event-time watermark passes its last
   event + ``session_gap`` (``GroupStateTimeout.EventTimeTimeout``): the
   session-window convention for "no more turns are coming".
-- On close the checks run over the buffered pairs, the violation rows
-  are emitted and the state is dropped. They are an independent pandas
-  implementation of the batch check table, asserted byte-identical to it
-  per conversation (tests/test_stateful_streaming.py).
+- On close the buffers are emitted once, as one row sorted by turn index
+  (a stable sort: duplicate indices keep arrival order), and the state
+  is dropped. That row is exploded to one row per turn and the
+  ``table_checks._CHECKS`` records run on it through ``_cross_row``,
+  reading their values off the sorted buffers (``_ARRAY_VALUES``) instead
+  of a window.
 
 Late rows *within* the watermark are handled exactly (they join the
 buffer before close); rows later than watermark + gap are dropped by the
@@ -35,30 +38,19 @@ from typing import Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-def _output_schema(conv_col: str, idx_col: str) -> T.StructType:
-    """Violation schema named after the configured key columns — the
-    batch operators (`F.col(conv_col)` / `F.col(idx_col)`) keep the
-    caller's names, so byte-parity requires the stream to as well."""
-    return T.StructType([
-        T.StructField(conv_col, T.StringType()),
-        T.StructField(idx_col, T.IntegerType()),
-        T.StructField("instance_path", T.StringType()),
-        T.StructField("code", T.StringType()),
-        T.StructField("message", T.StringType()),
-    ])
+from ..operators.table_checks import _ARRAY_VALUES, _buffered, _cross_row
 
-
-# default-named schema, kept for callers/tests that import it directly
-OUTPUT_SCHEMA = _output_schema("conv_id", "turn_idx")
-
-# state: parallel arrays of turn indices, event timestamps (micros), and
-# (when the protocol checks are on) roles/tools. The arrays are parallel
-# by buffer position; roles/tools stay empty when unused. NOTE: adding
-# the role/tool arrays changed the state schema — streams restarting
-# from a pre-protocol checkpoint must start a fresh checkpoint dir.
+# state: parallel arrays of turn indices, event timestamps (UTC micros)
+# and, when the checks read them, roles/tools; an unread array stays
+# empty. A checkpoint written before the role/tool arrays existed needs a
+# fresh checkpoint dir. One written while the checks still ran inside the
+# state operator (same state schema, another output schema) is not
+# guaranteed to restart, and it buffered session-local wall-clock times,
+# not UTC: under a non-UTC session, start a fresh checkpoint dir.
 STATE_SCHEMA = T.StructType([
     T.StructField("idxs", T.ArrayType(T.IntegerType())),
     T.StructField("ts_us", T.ArrayType(T.LongType())),
@@ -67,126 +59,27 @@ STATE_SCHEMA = T.StructType([
 ])
 
 
-def _fmt_ts(us: int) -> str:
-    """Spark's CAST(timestamp AS STRING) text for a UTC micros value:
-    'yyyy-MM-dd HH:mm:ss' with the fractional part only when non-zero,
-    trailing zeros trimmed (matches the batch operator's message bytes)."""
-    ts = pd.Timestamp(us, unit="us")
-    base = ts.strftime("%Y-%m-%d %H:%M:%S")
-    frac = us % 1_000_000
-    if frac:
-        base += (".%06d" % frac).rstrip("0")
-    return base
-
-
-def _close_conversation(conv_id: str, idxs: list, ts_us: list,
-                        columns: list, idx_path: str, ts_path: str,
-                        roles: list = (), tools: list = (),
-                        protocol: dict = None) -> pd.DataFrame:
-    """The batch check table's TurnGap / NonMonotonicTs records (and, with
-    ``protocol``, its role-DFA / tool-pairing ones) re-implemented in
-    pandas over one finished conversation's buffered turns: order by
-    turn_idx, dense position must equal the index, timestamps
-    non-decreasing, role transitions in the allowed DFA, tool
-    calls/results paired. Paths/messages derive from the configured
-    column names, exactly as the batch records' do."""
-    order = sorted(range(len(idxs)), key=lambda i: idxs[i])
-    rows = []
-    prev_ts = None
-    p = protocol or {}
-    transitions = {(a, b) for a, b in p.get("allowed_transitions", ())}
-    first = set(p.get("allowed_first", ()))
-    check_roles = "allowed_transitions" in p
-    check_tools = p.get("tool_pairing", False)
-    role_path = "/" + p.get("role_col", "role")
-    tool_path = "/" + p.get("tool_col", "tool")
-    first_list = ", ".join(f'"{r}"' for r in p.get("allowed_first", ()))
-    for pos, i in enumerate(order):
-        idx, us = idxs[i], ts_us[i]
-        if idx != pos:
-            rows.append((conv_id, idx, idx_path, "TurnGap",
-                         f"{idx_path}: turn index {idx} at position {pos} "
-                         "breaks gap-free ordering"))
-        if prev_ts is not None and us < prev_ts:
-            rows.append((conv_id, idx, ts_path, "NonMonotonicTs",
-                         f"{ts_path}: timestamp {_fmt_ts(us)} is before "
-                         f"previous turn's {_fmt_ts(prev_ts)}"))
-        prev_ts = us
-        if check_roles or check_tools:
-            role = roles[i]
-            prev_role = roles[order[pos - 1]] if pos > 0 else None
-            next_role = roles[order[pos + 1]] if pos + 1 < len(order) else None
-            prev_tool = tools[order[pos - 1]] if pos > 0 else None
-        if check_roles and role is not None:
-            if prev_role is None and role not in first:
-                rows.append((conv_id, idx, role_path, "BadFirstRole",
-                             f"{role_path}: conversation must start with "
-                             f'one of ({first_list}), got "{role}"'))
-            elif prev_role is not None and (prev_role, role) not in transitions:
-                rows.append((conv_id, idx, role_path, "BadRoleTransition",
-                             f'{role_path}: transition "{prev_role}" -> '
-                             f'"{role}" not allowed'))
-        if check_tools:
-            if role == "tool" and (prev_role is None
-                                   or prev_role != "assistant"
-                                   or prev_tool is None):
-                shown = f'"{prev_role}"' if prev_role is not None else "none"
-                rows.append((conv_id, idx, role_path, "ToolResultWithoutCall",
-                             f'{role_path}: "tool" turn not preceded by a '
-                             '"assistant" turn calling a tool '
-                             f"(previous role: {shown})"))
-            if (role == "assistant" and tools[i] is not None
-                    and (next_role is None or next_role != "tool")):
-                rows.append((conv_id, idx, tool_path, "ToolCallWithoutResult",
-                             f'{tool_path}: tool call "{tools[i]}" not '
-                             'followed by a "tool" turn'))
-    return pd.DataFrame(rows, columns=columns)
-
-
-def _make_func(conv_col: str, idx_col: str, ts_col: str, gap_ms: int,
-               protocol: dict = None):
-    columns = [conv_col, idx_col, "instance_path", "code", "message"]
-    idx_path, ts_path = "/" + idx_col, "/" + ts_col
-    p = protocol or {}
-    # the tool column is read ONLY for tool pairing — a role-DFA-only
-    # stream need not carry one (parity with the batch operator, which
-    # never touches tools for the DFA)
-    buffer_tools = bool(p.get("tool_pairing"))
-    buffer_roles = ("allowed_transitions" in p) or buffer_tools
-    role_col = p.get("role_col", "role")
-    tool_col = p.get("tool_col", "tool")
+def _buffer(inputs: list, gap_ms: int, columns: list):
+    """The state operator's function. ``inputs`` names the input column
+    of each state array, None for one the checks do not read. Appends a
+    conversation's turns to its buffers; on timeout emits them once,
+    sorted by idx, as one row of ``columns`` and drops the state."""
 
     def func(key: Tuple[str], pdfs: Iterator[pd.DataFrame],
              state: GroupState) -> Iterator[pd.DataFrame]:
-        (conv_id,) = key
+        bufs = ([list(b) for b in state.get] if state.exists
+                else [[] for _ in inputs])
         if state.hasTimedOut:
-            idxs, ts_us, roles, tools = state.get
             state.remove()
-            yield _close_conversation(conv_id, list(idxs), list(ts_us),
-                                      columns, idx_path, ts_path,
-                                      list(roles), list(tools), p)
+            order = sorted(range(len(bufs[0])), key=bufs[0].__getitem__)
+            yield pd.DataFrame([[key[0], *([b[i] for i in order] if b else b
+                                           for b in bufs)]], columns=columns)
             return
-        if state.exists:
-            prev = state.get
-            idxs, ts_us = list(prev[0]), list(prev[1])
-            roles, tools = list(prev[2]), list(prev[3])
-        else:
-            idxs, ts_us, roles, tools = [], [], [], []
         for pdf in pdfs:
-            idxs.extend(int(v) for v in pdf[idx_col])
-            # pandas Timestamp.value is nanos; state keeps micros (Spark's
-            # native timestamp precision)
-            ts_us.extend(int(v.value // 1000)
-                         for v in pd.to_datetime(pdf[ts_col]))
-            if buffer_roles:
-                roles.extend(None if pd.isna(v) else str(v)
-                             for v in pdf[role_col])
-                if buffer_tools:
-                    tools.extend(None if pd.isna(v) else str(v)
-                                 for v in pdf[tool_col])
-                else:
-                    tools.extend([None] * len(pdf))
-        state.update((idxs, ts_us, roles, tools))
+            for buf, col in zip(bufs, inputs):
+                if col:
+                    buf += pdf[col].tolist()
+        state.update(tuple(bufs))
         # close when the watermark passes this conversation's last event
         # by session_gap (event-time session window semantics). Clamped
         # just past the current watermark: a conversation whose gap has
@@ -194,9 +87,8 @@ def _make_func(conv_col: str, idx_col: str, ts_col: str, gap_ms: int,
         # while newer data pushed the watermark forward) must close at
         # the next trigger, not fail the INVALID_TIMEOUT_TIMESTAMP check.
         state.setTimeoutTimestamp(
-            max(max(ts_us) // 1000 + gap_ms,
+            max(max(bufs[1]) // 1000 + gap_ms,
                 state.getCurrentWatermarkMs() + 1))
-        yield pd.DataFrame(columns=columns)
     return func
 
 
@@ -217,21 +109,22 @@ def stateful_transcript_checks(
     plus (when configured) the conversation-protocol checks:
     ``role_protocol=(allowed_transitions, allowed_first)`` adds the
     role-DFA check and ``tool_pairing=True`` the tool call/result
-    pairing — streaming forms of the batch operators in
-    ``operators/table_checks.py``, byte-identical output per closed
-    conversation (the cross-checked contract).
+    pairing — the batch records of ``operators/table_checks.py``, run on
+    each closed conversation, so the rows are byte-identical per closed
+    conversation.
 
     Emits each closed conversation's violation rows once, after the
     watermark passes its last turn + ``session_gap_ms``.
     """
-    protocol = {"role_col": role_col, "tool_col": tool_col,
-                "tool_pairing": tool_pairing}
+    reads_role = role_protocol is not None or tool_pairing
+    codes = ["TurnGap", "NonMonotonicTs"]
     if role_protocol is not None:
-        protocol["allowed_transitions"] = role_protocol[0]
-        protocol["allowed_first"] = role_protocol[1]
+        codes += ["BadFirstRole", "BadRoleTransition"]
+    if tool_pairing:
+        codes += ["ToolResultWithoutCall", "ToolCallWithoutResult"]
     # fail at plan time, not as a KeyError inside the state worker
     cols = set(stream_df.columns)
-    if (role_protocol is not None or tool_pairing) and role_col not in cols:
+    if reads_role and role_col not in cols:
         raise ValueError(f"role column {role_col!r} not in stream columns "
                          f"{sorted(cols)} (required by the protocol checks)")
     if tool_pairing and tool_col not in cols:
@@ -240,16 +133,36 @@ def stateful_transcript_checks(
     # watermarks require TIMESTAMP; normalize TIMESTAMP_NTZ inputs (the
     # cast reads NTZ in the session timezone — pin it, e.g. to UTC)
     if dict(stream_df.dtypes).get(ts_col) == "timestamp_ntz":
-        from pyspark.sql import functions as F
         stream_df = stream_df.withColumn(
             ts_col, F.col(ts_col).cast("timestamp"))
-    return (stream_df
-            .withWatermark(ts_col, watermark_delay)
-            .groupBy(conv_col)
-            .applyInPandasWithState(
-                _make_func(conv_col, idx_col, ts_col, session_gap_ms,
-                           protocol),
-                outputStructType=_output_schema(conv_col, idx_col),
-                stateStructType=STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout))
+    # the tool column is read ONLY for tool pairing — a role-DFA-only
+    # stream need not carry one (the batch DFA never touches tools)
+    inputs = [idx_col, "_ts_us", role_col if reads_role else None,
+              tool_col if tool_pairing else None]
+    closed_schema = T.StructType([
+        T.StructField(conv_col, T.StringType()),
+        *(T.StructField("_" + f.name, f.dataType) for f in STATE_SCHEMA)])
+    closed = (stream_df
+              .withWatermark(ts_col, watermark_delay)
+              # the event-time column stays: the timeout needs its
+              # watermark. Python reads only the micros
+              .select(conv_col, idx_col, ts_col,
+                      F.unix_micros(ts_col).alias("_ts_us"),
+                      *filter(None, inputs[2:]))
+              .groupBy(conv_col)
+              .applyInPandasWithState(
+                  _buffer(inputs, session_gap_ms, closed_schema.names),
+                  outputStructType=closed_schema,
+                  stateStructType=STATE_SCHEMA,
+                  outputMode="append",
+                  timeoutConf=GroupStateTimeout.EventTimeTimeout))
+    turns = (closed
+             .select(conv_col, F.posexplode("_idxs").alias("_pos", idx_col),
+                     "_ts_us", "_roles", "_tools")
+             .withColumns({ts_col: F.timestamp_micros(_buffered("_ts_us", 0)),
+                           role_col: _buffered("_roles", 0),
+                           tool_col: _buffered("_tools", 0)}))
+    return _cross_row(turns, codes,
+                      dict(conv=conv_col, idx=idx_col, ts=ts_col,
+                           role=role_col, tool=tool_col),
+                      role_protocol, _ARRAY_VALUES)

@@ -195,3 +195,43 @@ def test_run_totals_cover_skipped_and_processed_buckets(spark, tdf,
     assert second["run_totals"] == ledger
     assert ledger == {k: first[k] + second[k] for k in COUNTS}
     assert ledger["rows"] == tdf.count()
+
+
+@pytest.mark.parametrize("n_buckets,buckets_per_chunk",
+                         [(0, 4), (-2, 4), (4, 0)])
+def test_bucket_counts_below_one_are_refused(spark, tdf, tmp_path,
+                                             n_buckets, buckets_per_chunk):
+    out = str(tmp_path / "nobuckets")
+    with pytest.raises(ValueError) as e:
+        run_checkpointed_validation(spark, tdf, SPEC, out,
+                                    n_buckets=n_buckets,
+                                    buckets_per_chunk=buckets_per_chunk)
+    assert str(min(n_buckets, buckets_per_chunk)) in str(e.value)
+    assert not os.path.exists(out)
+
+
+def test_cli_refuses_zero_buckets(spark, tdf, tmp_path):
+    from json_schema_rs_spark import cli
+    src, spec_f, _ = _cli_protocol_inputs(tdf, tmp_path)
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="n_buckets"):
+        cli.main(["validate", "--spec", spec_f, "--input", src,
+                  "--output", out, "--buckets", "0"])
+    assert not os.path.exists(out)
+
+
+def test_first_run_does_not_read_missing_plans(spark, tdf, tmp_path,
+                                               monkeypatch):
+    from pyspark.sql.readwriter import DataFrameReader
+    asked = []
+    real = DataFrameReader.parquet
+
+    def parquet(self, *paths, **options):
+        asked.extend(paths)
+        return real(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    out = str(tmp_path / "fresh")
+    run_checkpointed_validation(spark, tdf, SPEC, out, n_buckets=4)
+    assert f"{out}/plans" not in asked
+    assert os.path.isdir(f"{out}/plans")

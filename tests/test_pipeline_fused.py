@@ -144,13 +144,14 @@ def test_fused_protocol_still_single_exchange(spark):
 
 
 def test_cross_row_matches_independent_reference(spark):
-    """The fused cross-row branch against the stream's pandas
-    implementation of the same checks (streaming.stateful), which shares
-    no code with the check table: full rows must agree byte for byte."""
+    """The fused cross-row branch against an independent pandas
+    implementation of the same checks (tests/cross_row_oracle.py), which
+    shares no code with the check table: full rows must agree byte for
+    byte."""
     import datetime as dt
 
     from json_schema_rs_spark.operators.pipeline import cross_row_violations
-    from json_schema_rs_spark.streaming.stateful import _close_conversation
+    from cross_row_oracle import _close_conversation
 
     t0 = dt.datetime(2026, 3, 1, 10, 0, tzinfo=dt.timezone.utc)
 

@@ -154,6 +154,36 @@ def test_open_conversations_stay_silent(spark, tmp_path):
     assert spark.sql("SELECT * FROM stateful_open").count() == 0
 
 
+def test_non_utc_session_closes_on_the_utc_watermark(spark, tmp_path):
+    """The watermark is UTC. Under a session time zone west of UTC the
+    timeout must still compare UTC instants (session-local wall-clock
+    times would close open conversations hours early), and messages
+    render their timestamps in the session zone, as the batch's do."""
+    def run(rows, name, gap_ms):
+        d = _write_chunks(spark, tmp_path / name, [rows])
+        out = stateful_transcript_checks(
+            spark.readStream.schema(SCHEMA).parquet(d),
+            watermark_delay="10 minutes", session_gap_ms=gap_ms)
+        q = (out.writeStream.outputMode("append").format("memory")
+             .queryName(name)
+             .option("checkpointLocation", str(tmp_path / name / "ckpt"))
+             .start())
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return sorted(tuple(r)
+                      for r in spark.sql(f"SELECT * FROM {name}").collect())
+
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        assert run(ROWS, "stateful_la_open", 3_600_000) == []
+        assert (run(ROWS + [SENTINEL], "stateful_la_closed", 5_000)
+                == _batch_expected(spark))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
 PROTOCOL = ([("system", "user"), ("user", "assistant"),
              ("assistant", "user"), ("assistant", "tool"),
              ("tool", "assistant"), ("tool", "tool")],
