@@ -10,6 +10,9 @@ for, with the minimum possible data movement:
   records the à-la-carte operators there (``turn_gap_violations`` and
   friends) run one or two at a time.
 
+:func:`transcript_pipeline` (the benchmarked call) and each ``cli validate``
+chunk build this plan with one builder, :func:`_fused_violations`.
+
 Compared to unioning the à-la-carte operators, this replaces 5 table
 scans + 3 full-key shuffles with 2 pruned scans + 1 skinny shuffle. At
 10^12 turns the shuffle carries ~20 bytes/row instead of the whole row —
@@ -40,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..plans.spec import SchemaNode
 from .runner import _engine, _row_violations
-from .table_checks import _cross_row, _viol
+from .table_checks import _cross_row, _ref_integrity, _viol
 
 
 def transcript_pipeline(
@@ -68,15 +71,30 @@ def transcript_pipeline(
     ``role``/``tool`` riding in the skinny projection."""
     plan = _engine(df.sparkSession.sparkContext, spec,
                    key_cols=(conv_col, idx_col)).plan_for(df)
-    any_cond, row_arr = _row_exprs(plan, vocabularies or {})
-    row_v = _row_violations(df, plan, [conv_col, idx_col],
-                            cond=any_cond, arr=row_arr)
+    return _fused_violations(
+        df, plan, [conv_col, idx_col], vocabularies=vocabularies,
+        cross_row=dict(conv_col=conv_col, idx_col=idx_col, ts_col=ts_col,
+                       role_protocol=role_protocol,
+                       tool_pairing=tool_pairing, role_col=role_col,
+                       tool_col=tool_col))
 
-    table_v = cross_row_violations(
-        df, conv_col=conv_col, idx_col=idx_col, ts_col=ts_col,
-        role_protocol=role_protocol, tool_pairing=tool_pairing,
-        role_col=role_col, tool_col=tool_col)
-    return row_v.unionByName(table_v)
+
+def _fused_violations(df: DataFrame, plan, keys: Sequence[str], *,
+                      vocabularies: Optional[dict] = None,
+                      observe: Optional[tuple] = None,
+                      cross_row: Optional[dict] = None) -> DataFrame:
+    """The fused plan of :func:`transcript_pipeline` and of each ``cli
+    validate`` chunk: :func:`.runner._row_violations` plus one
+    ``RefIntegrity`` check per ``vocabularies`` column, ``observe``
+    collected on its scan, unioned with :func:`cross_row_violations`
+    under the ``cross_row`` options when given. No local-parallelism
+    guard (see :func:`.runner._python_stage_spread` for why)."""
+    any_cond, row_arr = _row_exprs(plan, vocabularies or {})
+    row_v = _row_violations(df, plan, keys, cond=any_cond, arr=row_arr,
+                            observe=observe)
+    if cross_row is None:
+        return row_v
+    return row_v.unionByName(cross_row_violations(df, **cross_row))
 
 
 def _row_exprs(plan, vocabularies: dict[str, Sequence[str]]) -> tuple:
@@ -84,15 +102,9 @@ def _row_exprs(plan, vocabularies: dict[str, Sequence[str]]) -> tuple:
     and its violation array (the plan's, then one per vocabulary)."""
     any_cond, arrays = plan.any_violation(), [plan.violations_array()]
     for col, values in vocabularies.items():
-        path = "/" + col
-        cond = F.col(col).isNotNull() & ~F.col(col).isin(list(values))
+        cond, path, message = _ref_integrity(col, values, col)
         any_cond = any_cond | F.coalesce(cond, F.lit(False))
-        arrays.append(_viol(
-            cond,
-            path, "RefIntegrity",
-            F.concat(F.lit(f'{path}: value "'), F.col(col),
-                     F.lit(f'" not in vocabulary "{col}"')),
-        ))
+        arrays.append(_viol(cond, path, "RefIntegrity", message))
     return any_cond, F.concat(*arrays) if len(arrays) > 1 else arrays[0]
 
 
@@ -107,9 +119,9 @@ def cross_row_violations(
     role_col: str = "role",
     tool_col: str = "tool",
 ) -> DataFrame:
-    """Branch 2 of the fused pipeline, reusable on its own (e.g. the
-    resumable ledger runner applies it per conv_id-hashed bucket chunk,
-    where every conversation is whole by construction): the duplicate-key
+    """Branch 2 of the fused pipeline, reusable on its own (it is exact
+    on any slice that holds whole conversations, such as a ledger chunk
+    of conv_id-hashed buckets): the duplicate-key
     and gap-free records, plus the monotonic-ts and protocol records the
     options select, in one skinny window pass."""
     codes = ["DuplicateKey", "TurnGap"]

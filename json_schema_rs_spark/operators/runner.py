@@ -110,49 +110,41 @@ class ValidationEngine:
             self._plan_cache[key] = compile_table_spec(self.root, df.schema)
         return self._plan_cache[key]
 
-    def violations_array(self, df: DataFrame) -> Column:
-        """The violation array as a bare Column — only valid for specs
-        without combinators (whose validities compile to shared helper
-        columns); use :meth:`attach_violations` for the general case."""
-        plan = self.plan_for(df)
-        if plan.shared_cols:
-            raise ValueError(
-                "spec uses combinators whose shared validities compile to "
-                "helper columns; use attach_violations(df) instead")
-        return plan.violations_array()
-
     def attach_violations(self, df: DataFrame,
                           out_col: str = "violations") -> DataFrame:
         """Input + the per-row violation array (shared validity helper
         columns are attached and dropped internally)."""
         return self.plan_for(df).apply(df, out_col)
 
-    def validate(self, df: DataFrame, *, keep_columns: Optional[Sequence[str]] = None) -> ValidationReport:
-        """Run the compiled plan. ``keep_columns`` restricts the flagged
-        output's payload columns (key columns are always kept)."""
+    def validate(self, df: DataFrame) -> ValidationReport:
+        """Run the compiled plan over ``df``, a batch or a streaming
+        DataFrame (a stream's report is two streaming frames to sink)."""
         plan = self.plan_for(df)
         keys = [k for k in self.key_cols if k in df.columns]
         df = _python_stage_spread(df, plan, keys)
         flagged = self.attach_violations(df).withColumn(
             "valid", F.size("violations") == 0
         )
-        violations = _row_violations(df, plan, keys)
-        if keep_columns is not None:
-            keep = list(dict.fromkeys([*keys, *keep_columns, "violations", "valid"]))
-            flagged = flagged.select(*keep)
-        return ValidationReport(flagged=flagged, violations=violations)
+        return ValidationReport(flagged=flagged,
+                                violations=_row_violations(df, plan, keys))
 
 
 def _python_stage_spread(df: DataFrame, plan: CompiledPlan,
                          keys: Sequence[str]) -> DataFrame:
     """``df``, spread over the local cores when ``plan`` carries an Arrow
-    pandas-UDF slow path (content keywords / rare ECMA-fallback pattern),
-    whose cost is the Python map side running at SCAN parallelism. A
-    small table in one parquet row group would serialize that stage on a
-    single core, so dedup._spread's local-parallelism guard is inserted
-    (a no-op on production many-file tables; pure-codegen plans are
-    returned as given, staying exchange-free)."""
-    if not plan.has_python_stage:
+    pandas-UDF slow path, whose cost is the Python map side running at
+    SCAN parallelism: a small table in one parquet row group would run it
+    on one core, so dedup._spread's local-parallelism guard is inserted.
+    A no-op on many-file tables, on pure-codegen plans (which stay
+    exchange-free) and on streams (their partitions are the micro-batch's).
+
+    Only :meth:`ValidationEngine.validate` and ``revalidate_incremental``
+    apply it: under extension keywords their plans can hold content
+    checks, where the guard pays. The fused builder
+    (:func:`.pipeline._fused_violations`) compiles no extension keyword,
+    and its one possible Python stage, an ECMA-fallback pattern, runs
+    faster unspread than behind the repartition."""
+    if not plan.has_python_stage or df.isStreaming:
         return df
     if keys:
         from .dedup import _spread
@@ -234,7 +226,9 @@ def multi_spec_validate(
     the full table) re-scans the corpus N times.
 
     Every spec compiles ONCE on the driver. The plan is shuffle-free: one
-    scan->filter->codegen branch per version, unioned. Each branch's
+    scan->filter->codegen branch per version, unioned; a branch's
+    violation rows are :func:`_row_violations` under its version's plan
+    (filter on the check conditions, then render). Each branch's
     ``spec_col = v`` filter is pushed into its scan, so when ``spec_col``
     is a partition/cluster column of the table (the at-scale layout —
     version-partitioned ingest), each branch prunes to ITS files and
@@ -253,29 +247,25 @@ def multi_spec_validate(
                      extensions=extensions)
         for sid, spec in sorted(specs.items())}
     sids = list(engines)
-    unknown_arr = F.array(F.struct(
+    unknown_v = [
         F.lit("").alias("instance_path"),
         F.lit("UnknownSpecVersion").alias("code"),
         F.concat(
             F.lit('root: spec version "'),
             F.coalesce(F.col(spec_col).cast("string"), F.lit("null")),
             F.lit('" is not registered'),
-        ).alias("message")))
+        ).alias("message")]
 
-    branches = [
-        eng.attach_violations(df.filter(F.col(spec_col) == F.lit(sid)))
-        for sid, eng in engines.items()]
-    unknown = df.filter(
-        F.col(spec_col).isNull() | ~F.col(spec_col).isin(sids)
-    ).withColumn("violations", unknown_arr)
-    flagged = reduce(lambda a, b: a.unionByName(b), branches + [unknown])
-
-    flagged = flagged.withColumn("valid", F.size("violations") == 0)
     keys = [k for k in key_cols if k in df.columns]
-    violations = (
-        explode_rows(
-            flagged.filter(F.size("violations") > 0),
-            [*keys, spec_col], F.col("violations"), "v")
-        .select(*keys, spec_col,
-                "v.instance_path", "v.code", "v.message"))
+    slices = {sid: df.filter(F.col(spec_col) == F.lit(sid)) for sid in sids}
+    unknown = df.filter(F.col(spec_col).isNull() | ~F.col(spec_col).isin(sids))
+    flagged = reduce(DataFrame.unionByName, [
+        *(eng.attach_violations(slices[sid]) for sid, eng in engines.items()),
+        unknown.withColumn("violations", F.array(F.struct(*unknown_v)))])
+    flagged = flagged.withColumn("valid", F.size("violations") == 0)
+    violations = reduce(DataFrame.unionByName, [
+        *(_row_violations(slices[sid], eng.plan_for(slices[sid]),
+                          [*keys, spec_col])
+          for sid, eng in engines.items()),
+        unknown.select(*keys, spec_col, *unknown_v)])
     return ValidationReport(flagged=flagged, violations=violations)

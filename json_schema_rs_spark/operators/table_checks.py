@@ -277,10 +277,11 @@ def referential_violations(
     if strategy not in ("broadcast", "shuffle"):
         raise ValueError(f"strategy must be 'broadcast' or 'shuffle', "
                          f"got {strategy!r}")
-    keys = list(keys)
-    name = vocab_name or column
-    base = df.filter(F.col(column).isNotNull())
-    if isinstance(vocab, DataFrame):
+    cond, path, message = _ref_integrity(column, vocab, vocab_name or column)
+    if cond is not None:
+        bad = df.filter(cond)
+    else:
+        base = df.filter(F.col(column).isNotNull())
         vcol = vocab_column or vocab.columns[0]
         right = vocab.select(F.col(vcol).alias(column)).distinct()
         if strategy == "shuffle":
@@ -288,19 +289,24 @@ def referential_violations(
                             on=column, how="left_anti")
         else:
             bad = base.join(F.broadcast(right), on=column, how="left_anti")
-    else:
-        bad = base.filter(~F.col(column).isin(list(vocab)))
+    return bad.select(*keys, F.lit(path).alias("instance_path"),
+                      F.lit("RefIntegrity").alias("code"),
+                      message.alias("message"))
+
+
+def _ref_integrity(column: str, vocab: Union[DataFrame, Sequence[str]],
+                   name: str) -> tuple:
+    """``(cond, path, message)`` of a ``RefIntegrity`` violation of
+    ``column`` against the vocabulary ``name``. ``cond``, a non-NULL value
+    outside the list ``vocab``, is None for a DataFrame ``vocab``, which
+    an anti-join checks instead."""
     path = "/" + column
-    return bad.select(
-        *keys,
-        F.lit(path).alias("instance_path"),
-        F.lit("RefIntegrity").alias("code"),
-        F.concat(
-            F.lit(f"{path}: value "),
-            F.concat(F.lit('"'), F.col(column), F.lit('"')),
-            F.lit(f' not in vocabulary "{name}"'),
-        ).alias("message"),
-    )
+    message = F.concat(F.lit(f'{path}: value "'), F.col(column),
+                       F.lit(f'" not in vocabulary "{name}"'))
+    if isinstance(vocab, DataFrame):
+        return None, path, message
+    cond = F.col(column).isNotNull() & ~F.col(column).isin(list(vocab))
+    return cond, path, message
 
 
 def referential_coverage(

@@ -172,7 +172,6 @@ def jsonl_violation_streams(
     micro-batches unchanged — byte-equal to the batch operator on the
     same files, asserted in tests."""
     from ..operators.runner import ValidationEngine
-    from ..streaming.validate_stream import violations_stream
 
     root = spec if isinstance(spec, SchemaNode) else parse_spec(
         spec, strict=strict, extensions=extensions)
@@ -181,4 +180,4 @@ def jsonl_violation_streams(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     ok, bad = _split_lines(reader.text(path), _parse_schema(schema))
     engine = ValidationEngine(root, key_cols=key_cols)
-    return violations_stream(engine, ok), _fallback_violations(bad, root)
+    return engine.validate(ok).violations, _fallback_violations(bad, root)

@@ -251,7 +251,8 @@ def run_checkpointed_validation(
 
     Buckets hash the conversation key ``key_cols[0]``. Each chunk runs
     the fused plan of :func:`..operators.pipeline.transcript_pipeline`
-    over its buckets and writes its violation rows ONCE, appended to
+    (built by that module's one builder) over its buckets and writes its
+    violation rows ONCE, appended to
     ``{output_path}/violations`` (partitioned by bucket for pruning on
     re-reads), then appends one ledger row per bucket. Re-invoking with
     the same ``run_id`` skips completed buckets; the ledger is read once,
@@ -297,9 +298,8 @@ def run_checkpointed_validation(
     and ``run_totals``: the same counts over the whole run, i.e. plus
     the skipped buckets' ledger rows read at start-up.
     """
-    from ..operators.pipeline import cross_row_violations
-    from ..operators.runner import (_engine, _python_stage_spread,
-                                    _row_violations)
+    from ..operators.pipeline import _fused_violations
+    from ..operators.runner import _engine
 
     for name, value in (("n_buckets", n_buckets),
                         ("buckets_per_chunk", buckets_per_chunk)):
@@ -344,6 +344,9 @@ def run_checkpointed_validation(
     if route_rows:
         _clear_dirs(spark, [f"{routed_path}/bucket={b}" for b in pending])
 
+    cross_row = dict(conv_col=key_cols[0], idx_col=key_cols[1],
+                     ts_col=ts_col, role_protocol=role_protocol,
+                     tool_pairing=tool_pairing) if table_checks else None
     chunks = [pending[i:i + buckets_per_chunk]
               for i in range(0, len(pending), buckets_per_chunk)]
     processed: list[int] = []
@@ -358,13 +361,9 @@ def run_checkpointed_validation(
             F.count_if(bucket_expr == b).alias(f"rows_{b}"),
             F.count_if((bucket_expr == b) & plan.any_violation())
              .alias(f"bad_{b}"))]
-        viol = _row_violations(_python_stage_spread(part, plan, key_cols),
-                               plan, key_cols,
-                               observe=(scan_obs, *scan_metrics))
-        if table_checks:
-            viol = viol.unionByName(cross_row_violations(
-                part, conv_col=key_cols[0], idx_col=key_cols[1], ts_col=ts_col,
-                role_protocol=role_protocol, tool_pairing=tool_pairing))
+        viol = _fused_violations(part, plan, key_cols,
+                                 observe=(scan_obs, *scan_metrics),
+                                 cross_row=cross_row)
         (viol.withColumn("bucket", bucket_expr)
              .observe(out_obs, *[F.count_if(F.col("bucket") == b)
                                  .alias(f"vc_{b}") for b in chunk])

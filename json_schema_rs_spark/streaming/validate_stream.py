@@ -1,29 +1,21 @@
 """Structured-Streaming validation: the same compiled single-pass plan
 applied to a stream of transcript turns.
 
-The row-local check plan is stateless (zero shuffle), so it attaches to a
-streaming DataFrame unchanged — one ``select`` per micro-batch; watermarks
-are only needed by downstream stateful consumers. Late/duplicate turns are
-a *table-level* concern handled by the batch checks over the sink table
+The row-local check plan is stateless (zero shuffle), so
+``ValidationEngine.validate`` attaches it to a streaming DataFrame
+unchanged, one ``select`` per micro-batch. Late/duplicate turns are a
+*table-level* concern handled by the batch checks over the sink table
 (streaming is out of the reference's scope, SURVEY.md §2.7 — this module
 exists because a transcript pipeline at scale ingests continuously).
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.runner import ValidationEngine, _row_violations
-
-
-def violations_stream(engine: ValidationEngine, stream_df: DataFrame) -> DataFrame:
-    """The violation rows ``(keys..., instance_path, code, message)`` of
-    a streaming DataFrame, in the batch shape of
-    :meth:`ValidationEngine.validate`."""
-    keys = [k for k in engine.key_cols if k in stream_df.columns]
-    return _row_violations(stream_df, engine.plan_for(stream_df), keys)
+from ..operators.runner import ValidationEngine
 
 
 def run_file_stream_once(
@@ -42,7 +34,7 @@ def run_file_stream_once(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(input_path)
-    out = violations_stream(engine, stream)
+    out = engine.validate(stream).violations
     q = (out.writeStream.outputMode("append")
          .format("memory").queryName(query_name).start())
     try:

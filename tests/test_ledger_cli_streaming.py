@@ -393,6 +393,29 @@ class TestStreaming:
         want = sorted(map(tuple, batch.collect()))
         assert got == want and len(got) > 0
 
+    def test_python_stage_stream_runs_through_validate(self, spark, tdf,
+                                                       tmp_path):
+        # validate() spreads a small batch ahead of a Python stage; a
+        # stream passes that guard untouched and yields the batch rows
+        inp = str(tmp_path / "stream_in")
+        tdf.repartition(4).write.parquet(inp)
+        spec = {**SPEC, "properties": {
+            **SPEC["properties"],
+            "text": {"type": "string", "pattern": "(?<!zzz) bravo"}}}
+        engine = ValidationEngine(spec)
+        stream = spark.readStream.schema(SCHEMA).parquet(inp)
+        assert engine.plan_for(stream).has_python_stage
+        q = (engine.validate(stream).violations.writeStream
+             .format("memory").queryName("lookbehind").start())
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        got = sorted(map(tuple, spark.table("lookbehind").collect()))
+        batch = engine.validate(spark.read.parquet(inp)).violations
+        assert got == sorted(map(tuple, batch.collect()))
+        assert "PatternMismatch" in {r[3] for r in got}
+
 
 class TestPlanLineage:
     """Compiled-plan manifest persisted next to the ledger, linked by

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from json_schema_rs_spark import ValidationEngine
+from json_schema_rs_spark.operators.pipeline import transcript_pipeline
 from json_schema_rs_spark.sources.ledger import (
     ValidationLedger,
     run_checkpointed_validation,
@@ -235,3 +236,54 @@ def test_first_run_does_not_read_missing_plans(spark, tdf, tmp_path,
     run_checkpointed_validation(spark, tdf, SPEC, out, n_buckets=4)
     assert f"{out}/plans" not in asked
     assert os.path.isdir(f"{out}/plans")
+
+
+def _pipeline_rows(df, spec):
+    return _violation_rows(transcript_pipeline(
+        df, spec, role_protocol=PROTOCOL, tool_pairing=True))
+
+
+def test_chunk_writes_the_rows_of_transcript_pipeline(spark, tdf, tmp_path):
+    # `cli validate` runs the ledger chunk; the benchmark runs
+    # transcript_pipeline. Both must write the same multiset of rows
+    out = str(tmp_path / "parity")
+    run_checkpointed_validation(spark, tdf, SPEC, out, run_id="p",
+                                n_buckets=8, buckets_per_chunk=3,
+                                **TABLE_CHECKS)
+    got = _violation_rows(spark.read.parquet(f"{out}/violations"))
+    assert got == _pipeline_rows(tdf, SPEC)
+    assert {r[3] for r in got} >= {"NotInEnum", "BadRoleTransition"}
+
+
+def test_python_stage_chunk_plans_only_the_cross_row_exchange(
+        spark, tdf, tmp_path, monkeypatch):
+    # an ECMA-fallback pattern is the one Python stage a ledger spec can
+    # compile; on a one-partition source the chunk must not repartition
+    # ahead of it, so its write plans only the cross-row conv_id shuffle
+    from pyspark.sql.readwriter import DataFrameWriter
+    spec = {**SPEC, "properties": {
+        **SPEC["properties"],
+        "text": {"type": "string", "pattern": "(?<!zzz) bravo"}}}
+    tdf.coalesce(1).write.parquet(str(tmp_path / "src"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+    assert src.rdd.getNumPartitions() == 1
+    assert ValidationEngine(spec).plan_for(src).has_python_stage
+    plans = []
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if "/violations/" in path:
+            plans.append(
+                self._df._jdf.queryExecution().executedPlan().toString())
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    out = str(tmp_path / "out")
+    run_checkpointed_validation(spark, src, spec, out, run_id="g",
+                                n_buckets=4, **TABLE_CHECKS)
+    assert len(plans) == 1
+    assert plans[0].count("Exchange") == 1, plans[0]
+    assert "Exchange hashpartitioning(conv_id" in plans[0], plans[0]
+    got = _violation_rows(spark.read.parquet(f"{out}/violations"))
+    assert got == _pipeline_rows(src, spec)
+    assert "PatternMismatch" in {r[3] for r in got}

@@ -244,6 +244,29 @@ class TestMultiSpec:
             self._df(spark), {"v1": SPEC_V1, "v2": SPEC_V2})
         assert _n_exchanges(rep.flagged) == 0
 
+    def test_violations_are_the_flagged_arrays_exploded(self, spark):
+        # the violation rows of each version's own plan (filter, then
+        # render) equal its flagged arrays exploded, also under shared
+        # validity helper columns (oneOf) and a Python-stage pattern
+        one_of = {"type": "object", "properties": {"text": {"oneOf": [
+            {"type": "string", "maxLength": 1},
+            {"type": "string", "pattern": "^[a-z]+$"}]}}}
+        lookbehind = {"type": "object", "properties": {
+            "text": {"type": "string", "pattern": "(?<=h)i"}}}
+        df = self._df(spark)
+        assert ValidationEngine(one_of).plan_for(df).shared_cols
+        assert ValidationEngine(lookbehind).plan_for(df).has_python_stage
+        rep = multi_spec_validate(df, {"v1": one_of, "v2": lookbehind})
+        cols = ["conv_id", "turn_idx", "spec_id"]
+        want = (rep.flagged.filter(F.size("violations") > 0)
+                .select(*cols, F.explode("violations").alias("v"))
+                .select(*cols, "v.instance_path", "v.code", "v.message"))
+        got = sorted(map(tuple, rep.violations.collect()))
+        assert got == sorted(map(tuple, want.collect()))
+        assert {r[4] for r in got} == {
+            "MultipleSubschemasMatched", "PatternMismatch",
+            "UnknownSpecVersion"}
+
     def test_empty_specs_rejected(self, spark):
         with pytest.raises(ValueError, match="at least one spec"):
             multi_spec_validate(self._df(spark), {})
